@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Queries are materialized through the `noop` sink —
   * a `count()` would let Catalyst prune the projected expressions away and
@@ -18,43 +16,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing stays at the parallelism-first DEFAULT — measured,
-      // not assumed (round 15): size-first coalescing
-      // (coalescePartitions.parallelismFirst=false) was benchmarked as
-      // the principled replacement for the raced conf=2 the r14 suite
-      // accidentally ran under, and came out WORSE suite-wide (377 s vs
-      // 335 s at 338 queries): it folds small CPU-BOUND intermediates to
-      // one partition, serializing exactly the stages that want all 32
-      // cores (q311 3.1→4.0, q282 3.0→5.1, q276 1.9→4.1). Tiny-shuffle
-      // task overhead is the smaller cost on this suite; see BASELINE.md
-      // round 15.
-    // Optional state-store provider override (production-configuration
-    // datapoint: RocksDBStateStoreProvider — Round14Spec proves parity,
-    // this prices it). Local iteration only; the driver never sets it.
-    sys.env.get("SPARK_GRAFT_STATESTORE").foreach(c =>
-      builder.config("spark.sql.streaming.stateStore.providerClass", c))
-    // Shuffle-width override for LOCAL bisects only (e.g. reproducing the
-    // r14 conf-race regime where the suite silently ran 2-partition
-    // shuffles); the driver never sets it, so round records keep the
-    // honest width.
-    sys.env.get("SPARK_GRAFT_SHUFFLE").foreach(n =>
-      builder.config("spark.sql.shuffle.partitions", n))
-    val spark = builder
-      // Split small parquet files aggressively so single-file local scans
-      // still fan out across cores (a no-op at real scale where files exceed
-      // maxPartitionBytes anyway).
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench", GraftSession.cpus(32))
     val runQuery: String => Unit = name =>
       try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>

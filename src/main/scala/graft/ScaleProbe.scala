@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: scale-stress datapoints for BASELINE.md.
@@ -80,6 +79,15 @@ import org.apache.spark.sql.functions._
   *        runMain graft.ScaleProbe diff [sfDir] [rep]    — diff mode
   */
 object ScaleProbe {
+  private def session() = GraftSession("graft-scaleprobe", GraftSession.cpus(32))
+
+  private def timed[A](name: String)(f: => A): A = {
+    val t0 = System.nanoTime()
+    val a = f
+    println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    a
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("rank")) { rankProbe(args.drop(1)); return }
     if (args.headOption.contains("span")) { spanProbe(args.drop(1)); return }
@@ -110,14 +118,7 @@ object ScaleProbe {
     if (args.headOption.contains("annquery")) { annQueryProbe(args.drop(1)); return }
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
 
     val docs = graft.sources.Tables.table(spark, sfDir, "documents")
     val big = docs.crossJoin(spark.range(rep).select(col("id").as("_r")))
@@ -127,13 +128,6 @@ object ScaleProbe {
       .repartition(64).cache()
     val nDocs = big.count()
     println(s"[probe] corpus: $nDocs docs (rep=$rep)")
-
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      a
-    }
 
     val preCached = spark.sparkContext.getPersistentRDDs.keySet
     val (rawPairs, release) = graft.operators.Dedup.minhashNearDupsManaged(
@@ -161,21 +155,7 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(40)
     require(rep >= 2, "span probe needs rep >= 2 so every window is duplicated")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      a
-    }
+    val spark = session()
 
     val L = 30
     val docs = graft.sources.Tables.table(spark, sfDir, "documents")
@@ -212,21 +192,7 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(8)
     require(rep >= 2, "overlap probe needs rep >= 2 sources")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      a
-    }
+    val spark = session()
 
     val n = 5
     val docs = graft.sources.Tables.table(spark, sfDir, "documents")
@@ -275,21 +241,7 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(32)
     require(rep >= 4, "semdedup probe wants rep >= 4 so most rows are near-dups")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      a
-    }
+    val spark = session()
 
     val target = 128L
     val emb = graft.sources.Tables.table(spark, sfDir, "embeddings")
@@ -338,21 +290,7 @@ object ScaleProbe {
   private def pqProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      a
-    }
+    val spark = session()
 
     val kCode = 256
     val cents = (0 until 4).map { m =>
@@ -423,20 +361,7 @@ object ScaleProbe {
   private def ivfProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(26)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      a
-    }
+    val spark = session()
     val dim = 64
     def synthCents(k: Int): Seq[Array[Double]] =
       (0 until k).map(j => Array.tabulate(dim)(i => math.sin(j * dim + i)))
@@ -525,18 +450,7 @@ object ScaleProbe {
     * mid-walk at the same budget. */
   private def ccChainProbe(args: Array[String]): Unit = {
     val links = args.headOption.map(_.toInt).getOrElse(100000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      a
-    }
+    val spark = session()
     val pairs = spark.range(links)
       .select(col("id").as("src"), (col("id") + 1).as("dst"))
     val edges = pairs.union(pairs.select(col("dst").as("src"), col("src").as("dst")))
@@ -565,12 +479,7 @@ object ScaleProbe {
   private def fitWallProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val emb = graft.sources.Tables.table(spark, sfDir, "embeddings")
     def corpus(r: Int) = emb.crossJoin(spark.range(r).select(col("id").as("_r")))
       .select((col("vec_id") * r + col("_r")).as("vec_id"),
@@ -596,21 +505,7 @@ object ScaleProbe {
   private def rankProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(80)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      a
-    }
+    val spark = session()
 
     import graft.operators.{GlobalRank, Percentiles}
     val orders = graft.sources.Tables.table(spark, sfDir, "orders")
@@ -725,20 +620,7 @@ object ScaleProbe {
   private def dupCollapseProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      a
-    }
+    val spark = session()
     val base = graft.sources.Tables.table(spark, sfDir, "documents")
       .where(col("n_chars") <= 512)
       .select(col("doc_id"), col("text")).cache()
@@ -867,13 +749,7 @@ object ScaleProbe {
     * injected canary counting exactly 1 per doc. */
   private def acProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val docs = graft.sources.Tables.table(spark, sfDir, "documents")
       .select(col("doc_id"), col("text")).cache()
     println(s"[probe] corpus: ${docs.count()} docs")
@@ -921,20 +797,7 @@ object ScaleProbe {
     * grain. */
   private def dbscanProbe(args: Array[String]): Unit = {
     val rep = args.headOption.filter(_.forall(_.isDigit)).map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      a
-    }
+    val spark = session()
     import org.apache.spark.sql.functions._
     val sp2 = spark
     import sp2.implicits._
@@ -1001,14 +864,7 @@ object ScaleProbe {
   private def dbscanPlanesProbe(args: Array[String]): Unit = {
     val n = args.headOption.filter(_.forall(_.isDigit)).map(_.toInt)
       .getOrElse(20000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     import graft.functions.VectorExprs
     // hash-mixed coordinates: sign-diverse under random hyperplanes, so
     // buckets load uniformly and the plane count is the real knob (a
@@ -1063,14 +919,7 @@ object ScaleProbe {
   private def linkageProbe(args: Array[String]): Unit = {
     val n = args.headOption.filter(_.forall(_.isDigit)).map(_.toInt)
       .getOrElse(9000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // minted catalog: names are deterministic 10-char strings over a
     // 4-letter-per-position alphabet — prefix blocks fill uniformly, so
     // the prefix length is the real knob (not the name distribution)
@@ -1145,14 +994,7 @@ object ScaleProbe {
       .getOrElse("/root/testdata/sf0.1")
     val rep = args.find(_.forall(_.isDigit)).map(_.toInt).getOrElse(100)
     require(rep >= 10 && rep % 10 == 0, "dedupchain wants rep >= 10, a multiple of 10")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     def timed[A](name: String)(f: => A): (A, Double) = {
       val t0 = System.nanoTime()
       val a = f
@@ -1210,14 +1052,7 @@ object ScaleProbe {
     val c = args.headOption.filter(_.forall(_.isDigit)).map(_.toInt)
       .getOrElse(100000)
     val l = args.lift(1).map(_.toInt).getOrElse(12)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     def timed(name: String)(f: => Unit): Double = {
       val t0 = System.nanoTime()
       f
@@ -1254,14 +1089,7 @@ object ScaleProbe {
     val base = args.headOption.filter(_.forall(_.isDigit)).map(_.toInt)
       .getOrElse(20000)
     val rep = args.lift(1).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     def timed[A](name: String)(f: => A): Double = {
       val t0 = System.nanoTime()
       f
@@ -1311,14 +1139,7 @@ object ScaleProbe {
   private def backlogProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val widen = args.lift(1).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val close = graft.sources.Tables.table(spark, sfDir, "lineitem")
       .groupBy(col("l_orderkey")).agg(max(col("l_shipdate").cast("date")).as("_c"))
     val spans0 = graft.sources.Tables.table(spark, sfDir, "orders")
@@ -1326,12 +1147,6 @@ object ScaleProbe {
       .join(close, col("o_orderkey") === col("l_orderkey"))
       .select(col("o"), greatest(col("o"), col("_c")).as("c"))
       .localCheckpoint(true)
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      a
-    }
     for (f <- Seq(1, widen)) {
       val spans = spans0.select(col("o"),
         date_add(col("o"), (datediff(col("c"), col("o")) * f).cast("int")).as("c"))
@@ -1367,14 +1182,7 @@ object ScaleProbe {
   private def bloomProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     import org.apache.spark.sql.DataFrame
     val docs = graft.sources.Tables.table(spark, sfDir, "documents")
     def shingleH(df: DataFrame): DataFrame = df
@@ -1437,14 +1245,7 @@ object ScaleProbe {
   private def knnProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     import graft.functions.VectorExprs
     val emb = graft.sources.Tables.table(spark, sfDir, "embeddings")
     val big = emb.crossJoin(spark.range(rep).select(col("id").as("_r")))
@@ -1509,14 +1310,7 @@ object ScaleProbe {
   private def diffProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val docs = graft.sources.Tables.table(spark, sfDir, "documents")
     val big = docs.crossJoin(spark.range(rep).select(col("id").as("_r")))
       .select((col("doc_id") * rep + col("_r")).as("doc_id"), col("text"))
@@ -1562,20 +1356,7 @@ object ScaleProbe {
   private def pageRankProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      a
-    }
+    val spark = session()
     def ranksOf(d: org.apache.spark.sql.DataFrame): Map[String, Double] = {
       val toks = d.select(split(lower(
         graft.functions.TextExprs.cleanText(col("text"))), " ").as("ts"))
@@ -1608,20 +1389,7 @@ object ScaleProbe {
   private def cdcProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      a
-    }
+    val spark = session()
     val docs = graft.sources.Tables.table(spark, sfDir, "documents")
     def occ(d: org.apache.spark.sql.DataFrame): Map[String, Long] =
       graft.operators.CdcChunk.chunks(d, col("doc_id"), col("text"))
@@ -1650,20 +1418,7 @@ object ScaleProbe {
   private def gramProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rep = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      a
-    }
+    val spark = session()
     def load(d: org.apache.spark.sql.DataFrame): Array[(Long, Double, Double)] =
       graft.operators.Pca.topComponent(d, col("embedding"), dim = 64, iters = 3)
         .orderBy("dim_idx").collect()
@@ -1699,14 +1454,7 @@ object ScaleProbe {
     * Usage: runMain graft.ScaleProbe lexindex [sfDir] */
   private def lexIndexProbe(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     import spark.implicits._
     val terms = Seq("spark", "vector", "stream")
     val base = graft.sources.Tables.table(spark, sfDir, "documents")
@@ -1782,14 +1530,7 @@ object ScaleProbe {
       .getOrElse("/root/testdata/sf0.1")
     val rep = args.find(_.forall(_.isDigit)).map(_.toInt).getOrElse(100)
     require(rep >= 10 && rep % 10 == 0, "annquery wants rep >= 10, a multiple of 10")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val base = graft.sources.Tables.table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding")).repartition(32).cache()
     val nBase = base.count()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up for BENCH-ONLY use: replicate the driver's sf0.1
@@ -48,15 +48,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val (src, out, factor) = (args(0), args(1), args(2).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-scaleup", GraftSession.cpus(32))
 
     // one pass over the key-owning tables for the offset bases
     val bases: Map[String, Long] = keyOwner.values.toSet.map {

@@ -36,13 +36,8 @@ object SurveyMain {
     val cachePath = opts.getOrElse("cache", ".analysis_cache.parquet")
     val xlsx = opts.get("xlsx")
     val vaderLex = opts.get("vader-lexicon")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-survey")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-survey",
+      Runtime.getRuntime.availableProcessors, sys.env.get("SPARK_MASTER"))
     run(spark, input, industry, output, cachePath, xlsx, vaderLex)
     spark.stop()
   }

@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
+import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream}
 
 /** Real pure-JVM audio codec behind the [[MediaCodec]] seam: WAV/AIFF/AU
   * via `javax.sound.sampled` — no native dependency, ships in every JDK.

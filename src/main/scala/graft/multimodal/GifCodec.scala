@@ -1,6 +1,5 @@
 package graft.multimodal
 
-import java.io.ByteArrayInputStream
 import javax.imageio.ImageIO
 
 /** Multi-frame media made REAL in pure JVM: animated GIF is the one

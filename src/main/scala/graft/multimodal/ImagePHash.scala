@@ -1,7 +1,5 @@
 package graft.multimodal
 
-import java.io.ByteArrayInputStream
-import javax.imageio.ImageIO
 
 /** Perceptual average-hash (aHash) over the REAL ImageIO decode path —
   * the image-dedup primitive the multimodal family was missing: decode →

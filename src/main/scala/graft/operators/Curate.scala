@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{Lexicons, TextExprs}
+import graft.functions.TextExprs
 
 /** The end-to-end corpus-curation pipeline — what this engine exists for at
   * 100 TB: compose the text-analysis and dedup operators into one dataflow

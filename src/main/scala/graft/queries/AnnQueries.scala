@@ -7,10 +7,8 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{Lexicons, TextExprs, VectorExprs}
-import graft.operators.{Dedup, GlobalRank, JoinOps, Profiler, Retrieval, Similarity, SurveyPipeline, TextAnalysis, TopKAgg}
-import graft.multimodal.Multimodal
-import graft.sources.Tables
+import graft.functions.VectorExprs
+import graft.operators.{Dedup, Similarity, TopKAgg}
 import graft.queries.QueryHelpers._
 
 /** Embedding similarity: brute-force / IVF / PQ ANN search, k-means,

@@ -4,13 +4,12 @@ import scala.collection.immutable.ListMap
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
 import scala.concurrent.ExecutionContext.Implicits.global
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{Lexicons, TextExprs, VectorExprs}
-import graft.operators.{Dedup, GlobalRank, JoinOps, Profiler, Retrieval, Similarity, SurveyPipeline, TextAnalysis, TopKAgg}
+import graft.functions.TextExprs
+import graft.operators.{Dedup, GlobalRank, JoinOps, Profiler, Similarity}
 import graft.multimodal.Multimodal
-import graft.sources.Tables
 import graft.queries.QueryHelpers._
 
 /** Relational core: TPC-H-shaped scans/joins/aggregates/windows,

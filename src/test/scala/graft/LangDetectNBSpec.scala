@@ -22,6 +22,7 @@ class LangDetectNBSpec extends SparkSpec {
     "nl" -> "De snelle bruine vos springt over de luie hond terwijl de kinderen vanuit de tuin toekijken.")
 
   test("NB detects all seven Latin-script languages on real text") {
+    ReferenceAssets.require(ReferenceAssets.langdetectProfiles)
     samples.foreach { case (lang, text) =>
       val (pred, n) = LangDetectNB.predict(text)
       assert(pred === lang, s"$lang: got $pred")
@@ -30,6 +31,7 @@ class LangDetectNBSpec extends SparkSpec {
   }
 
   test("measured uplift over the stopword scan (it/pt/nl are out of its vocabulary)") {
+    ReferenceAssets.require(ReferenceAssets.langdetectProfiles)
     import spark.implicits._
     val df = samples.toDF("lang", "text")
     val stop = TextExprs.withLangId(df, col("text"), "pred")
@@ -44,12 +46,14 @@ class LangDetectNBSpec extends SparkSpec {
   }
 
   test("deterministic: same text, same prediction and gram count") {
+    ReferenceAssets.require(ReferenceAssets.langdetectProfiles)
     val a = LangDetectNB.predict(samples(3)._2)
     val b = LangDetectNB.predict(samples(3)._2)
     assert(a === b)
   }
 
   test("no-signal and empty inputs degrade to 'unknown'") {
+    ReferenceAssets.require(ReferenceAssets.langdetectProfiles)
     assert(LangDetectNB.predict("")._1 === "unknown")
     assert(LangDetectNB.predict("12345 !!! ###")._1 === "unknown")
     assert(LangDetectNB.predict(null)._1 === "unknown")
@@ -65,6 +69,7 @@ class LangDetectNBSpec extends SparkSpec {
   }
 
   test("q303 dataflow runs on the fixture; predictions cover the doc set") {
+    ReferenceAssets.require(ReferenceAssets.langdetectProfiles)
     val r = SparkEntry.queries("q303_langdetect_nb")(spark, sf())
     val docs = graft.sources.Tables.table(spark, sf(), "documents").count()
     assert(r.count() === docs)
@@ -72,6 +77,7 @@ class LangDetectNBSpec extends SparkSpec {
   }
 
   test("the materialized model is dense: every gram has all language rows") {
+    ReferenceAssets.require(ReferenceAssets.langdetectProfiles)
     LangDetectNB.ensureModelWritten
     val m = spark.read.parquet(LangDetectNB.modelPath)
     val langs = LangDetectNB.Langs.map(_._1).toSet

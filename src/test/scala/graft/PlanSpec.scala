@@ -9,6 +9,16 @@ class PlanSpec extends SparkSpec {
   private def executed(q: String): String =
     SparkEntry.queries(q)(spark, sf()).queryExecution.executedPlan.toString
 
+  /** Scans, exchanges and joins of the executed plan, read from its nodes. */
+  private def census(q: String): PlanInspect.Census =
+    PlanInspect(SparkEntry.queries(q)(spark, sf()))
+
+  /** The executed plan's text and its census, from one planning. */
+  private def inspected(q: String): (String, PlanInspect.Census) = {
+    val plan = SparkEntry.queries(q)(spark, sf()).queryExecution.executedPlan
+    (plan.toString, PlanInspect(plan))
+  }
+
   private def formatted(q: String): String = {
     val df = SparkEntry.queries(q)(spark, sf())
     df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
@@ -265,7 +275,7 @@ class PlanSpec extends SparkSpec {
   test("scan-count tripwires: the 10 most expensive queries read their fact table a pinned number of times") {
     // generalizes q121's input-bytes assertion: a re-scan regression on an
     // expensive query should fail HERE, not surface as bench drift. Counts
-    // are FileScan occurrences in the final executed plan; queries whose
+    // are the executed plan's file scans of the table; queries whose
     // dataflow ends behind a GlobalRank RDD boundary (q91, q121) pin 0 —
     // their corpus scans run in earlier jobs and q121's are separately
     // pinned by Round10Spec's input-bytes tripwire.
@@ -323,7 +333,7 @@ class PlanSpec extends SparkSpec {
       ("q164_effective_tokens", "documents", 1))  // clusters collected at CC;
                                                   // one manifest scan
     val diffs = pinned.flatMap { case (q, table, want) =>
-      val got = s"$table\\.parquet".r.findAllIn(executed(q)).length
+      val got = census(q).scansOf(table)
       if (got != want) Some(s"$q: $table scans $got != pinned $want") else None
     }
     assert(diffs.isEmpty, s"scan-count regressions:\n${diffs.mkString("\n")}")
@@ -477,6 +487,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q122: the cache probe joins broadcast the fixture-sized cache") {
+    ReferenceAssets.require(ReferenceAssets.memoCache)
     val df = SparkEntry.queries("q122_cached_api_classify")(spark, sf())
     df.collect()
     val fin = df.queryExecution.executedPlan.toString
@@ -492,7 +503,7 @@ class PlanSpec extends SparkSpec {
     df.collect()
     val fin = df.queryExecution.executedPlan.toString
     assert(fin.contains("isFinalPlan=true"))
-    assert("documents\\.parquet".r.findAllIn(fin).isEmpty,
+    assert(PlanInspect(df).scansOf("documents") == 0,
       s"iterations must read the checkpointed edge blocks, never re-scan:\n${fin.take(800)}")
     assert(fin.contains("Scan ExistingRDD"),
       "edge rounds must source from the checkpointed RDD")
@@ -548,7 +559,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q223: wedge and closing joins are equi-joins, never nested loops") {
-    val p = executed("q223_triangle_census")
+    val (p, c) = inspected("q223_triangle_census")
     assert(!p.contains("CartesianProduct"))
     // the only nested-loop joins allowed are the Cross assemblies of the
     // three SINGLE-ROW summary aggregates; every edge-carrying join
@@ -563,7 +574,7 @@ class PlanSpec extends SparkSpec {
     // gone (pairs expand from per-order arrays); the two edge-carrying
     // joins left are the wedge and the closing join
     assert(equi >= 2, s"wedge/closing joins must be equi-joins, got $equi")
-    assert(!p.contains("lineitem.parquet"),
+    assert(c.scansOf("lineitem") == 0,
       "census passes read the pinned edge list, never the stream")
   }
 
@@ -647,8 +658,8 @@ class PlanSpec extends SparkSpec {
     // one localCheckpoint; a lineitem re-scan regression fails here
     Seq("q259_min_cost_supplier", "q260_important_parts",
         "q261_top_supplier").foreach { q =>
-      val p = executed(q)
-      assert(!p.contains("lineitem.parquet"),
+      val (p, c) = inspected(q)
+      assert(c.scansOf("lineitem") == 0,
         s"$q: lineitem must only be scanned at checkpoint materialization")
       assert(p.contains("Scan ExistingRDD"), s"$q: pinned grain table missing")
       assert(!p.contains("CartesianProduct"), s"$q: no cartesian")
@@ -681,8 +692,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q265: all four KN model tables read the pinned bigram-type blocks") {
-    val p = executed("q265_kneser_ney")
-    assert(!p.contains("documents.parquet"),
+    val (p, c) = inspected("q265_kneser_ney")
+    assert(c.scansOf("documents") == 0,
       "the corpus must only be scanned at the type-table checkpoint")
     assert(p.contains("Scan ExistingRDD"))
   }
@@ -697,17 +708,15 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q270-q273: pinned grains, bounded windows, TakeOrdered cuts") {
-    val p270 = executed("q270_t_closeness")
     // the only window is the per-QI cum (bounded ≤|sens| partitions);
     // the global CDF rides prevCumByKey
-    assert(!p270.contains("orders.parquet"),
+    assert(census("q270_t_closeness").scansOf("orders") == 0,
       "the order stream must only be scanned at the QI×sens checkpoint")
-    val p271 = executed("q271_clustering_coeff")
-    assert(!p271.contains("lineitem.parquet"),
+    val (p271, c271) = inspected("q271_clustering_coeff")
+    assert(c271.scansOf("lineitem") == 0,
       "all four consumers must read the pinned edge list")
     assert(!p271.contains("CartesianProduct"))
-    val p272 = executed("q272_brier_decomposition")
-    assert(!p272.contains("documents.parquet"),
+    assert(census("q272_brier_decomposition").scansOf("documents") == 0,
       "moments and re-aggs must read the unique-forecast checkpoint")
     val p273 = executed("q273_rrf_fusion")
     assert(!p273.contains("Window "), "ranks must be triangular, not windowed")
@@ -716,77 +725,67 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q274-q276: audit scans bounded; rank window bounded; edge list pinned") {
-    val p275 = executed("q275_median_ci")
-    assert(!p275.contains("events.parquet"),
+    assert(census("q275_median_ci").scansOf("events") == 0,
       "cuts and picks must read the pinned rank table")
-    val p276 = executed("q276_edge_embeddedness")
-    assert(!p276.contains("lineitem.parquet"),
+    val (p276, c276) = inspected("q276_edge_embeddedness")
+    assert(c276.scansOf("lineitem") == 0,
       "wedge join + distribution must read the pinned edge list")
     assert(!p276.contains("CartesianProduct"))
   }
 
   test("q277-q279: pinned grains; the only corpus window is the sessionize pass") {
-    val p277 = executed("q277_seasonal_decompose")
-    assert(!p277.contains("events.parquet"),
+    val (p277, c277) = inspected("q277_seasonal_decompose")
+    assert(c277.scansOf("events") == 0,
       "trend join + DOW agg must read the pinned day table")
     assert(!p277.contains("Window "), "the centered window is a self-join")
-    val p278 = executed("q278_fightin_words")
-    assert(!p278.contains("documents.parquet"),
+    assert(census("q278_fightin_words").scansOf("documents") == 0,
       "all model tables must re-agg the pinned (source, token) table")
-    val p279 = executed("q279_attribution")
-    assert(!p279.contains("events.parquet"),
+    assert(census("q279_attribution").scansOf("events") == 0,
       "both touch passes must read the pinned sessionized rows")
   }
 
   test("q280-q282: one-pass moments; bounded windows; BFS reads pinned rings") {
-    val p280 = executed("q280_discount_elasticity")
+    val (p280, c280) = inspected("q280_discount_elasticity")
     assert(p280.contains("BroadcastHashJoin"), "part dim must broadcast")
-    assert("lineitem\\.parquet".r.findAllIn(p280).length <= 2,
+    assert(c280.scansOf("lineitem") <= 2,
       "all six moments come from ONE lineitem scan")
-    val p281 = executed("q281_binary_segmentation")
-    assert(!p281.contains("events.parquet"),
+    assert(census("q281_binary_segmentation").scansOf("events") == 0,
       "both levels re-rank the pinned day table")
-    val p282 = executed("q282_bfs_hops")
-    assert(!p282.contains("lineitem.parquet"),
+    assert(census("q282_bfs_hops").scansOf("lineitem") == 0,
       "rings and census read pinned frontiers, never the stream")
   }
 
   test("q283-q285: pinned grains; the concurrency level rides the range exchange") {
-    val p283 = executed("q283_peak_concurrency")
-    assert(!p283.contains("events.parquet"),
+    val (p283, c283) = inspected("q283_peak_concurrency")
+    assert(c283.scansOf("events") == 0,
       "deltas + start census read the pinned session table")
     assert(p283.contains("Scan ExistingRDD"),
       "the running concurrency must ride GlobalRank's RDD boundary")
-    val p284 = executed("q284_eb_shrinkage")
-    assert(!p284.contains("lineitem.parquet"),
+    assert(census("q284_eb_shrinkage").scansOf("lineitem") == 0,
       "prior moments re-agg the pinned brand table")
-    val p285 = executed("q285_oov_drift")
-    assert(!p285.contains("documents.parquet"),
+    val (p285, c285) = inspected("q285_oov_drift")
+    assert(c285.scansOf("documents") == 0,
       "vocab + both epoch rates read the pinned token stream")
     assert(p285.contains("BroadcastHashJoin"), "the 512-token vocab broadcasts")
   }
 
   test("q286-q288: wedge/moment/margin passes read pinned grains; no cartesian") {
-    val p286 = executed("q286_link_prediction")
-    assert(!p286.contains("lineitem.parquet"),
+    val (p286, c286) = inspected("q286_link_prediction")
+    assert(c286.scansOf("lineitem") == 0,
       "wedges, degrees, and the anti-join read the pinned edge list")
     assert(!p286.contains("CartesianProduct"),
       "candidates are wedge endpoints, never all-pairs")
     assert(p286.contains("TakeOrderedAndProject"))
-    val p287 = executed("q287_simpson_audit")
-    assert(!p287.contains("lineitem.parquet"),
+    assert(census("q287_simpson_audit").scansOf("lineitem") == 0,
       "the global fit re-aggregates the pinned (brand, segment) moments")
-    val p288 = executed("q288_markov_order_test")
-    assert(!p288.contains("events.parquet"),
+    assert(census("q288_markov_order_test").scansOf("events") == 0,
       "all three margins re-aggregate the pinned trigram table")
   }
 
   test("q289/q290: everything downstream re-aggregates the pinned cell tables") {
-    val p289 = executed("q289_direct_adjustment")
-    assert(!p289.contains("lineitem.parquet"),
+    assert(census("q289_direct_adjustment").scansOf("lineitem") == 0,
       "naive + strata + weights re-agg the pinned (stratum, arm) cells")
-    val p290 = executed("q290_mix_independence")
-    assert(!p290.contains("documents.parquet"),
+    assert(census("q290_mix_independence").scansOf("documents") == 0,
       "margins + cells read the pinned contingency table")
   }
 

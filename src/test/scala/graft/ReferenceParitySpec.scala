@@ -21,9 +21,10 @@ import graft.operators.SurveyPipeline
   */
 class ReferenceParitySpec extends SparkSpec {
 
-  private val csv = "/root/reference/example_survey_large.csv"
-
-  private lazy val df = SurveyPipeline.readSurveyCsv(spark, csv)
+  private lazy val df = {
+    ReferenceAssets.require(ReferenceAssets.SurveyCsv)
+    SurveyPipeline.readSurveyCsv(spark, ReferenceAssets.SurveyCsv)
+  }
   private lazy val qcols = SurveyPipeline.questionColumns(df)
 
   test("reference CSV parses: 500 rows, 5 question columns") {

@@ -325,8 +325,6 @@ class Round11Spec extends SparkSpec {
   }
 
   test("GramAgg one-pass covariance ≡ driver brute force; PCA loading is a unit vector") {
-    val sp = spark
-    import sp.implicits._
     val e = graft.sources.Tables.table(spark, sf(), "embeddings").limit(200)
     val vecs = e.select(col("embedding")).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)

@@ -1290,7 +1290,6 @@ class Round12Spec extends SparkSpec {
   }
 
   test("q222: fingerprint is order-independent and flips on a 1-cent change") {
-    import org.apache.spark.sql.functions._
     val got = SparkEntry.queries("q222_table_fingerprint")(spark, sf()).collect()
       .map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
     assert(got.keySet == Set("orders", "customer", "supplier"))
@@ -1315,7 +1314,6 @@ class Round12Spec extends SparkSpec {
   }
 
   test("q223: triangle count recomputes from a driver edge scan") {
-    import org.apache.spark.sql.functions.col
     val r = SparkEntry.queries("q223_triangle_census")(spark, sf()).collect().head
     val (nodes, nEdges, wedges, tris, cc) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))
@@ -1975,7 +1973,6 @@ class Round12Spec extends SparkSpec {
   }
 
   test("q247: per-type seasonality indexes average to 1 and counts tile the stream") {
-    import org.apache.spark.sql.functions.col
     val rows = SparkEntry.queries("q247_dow_seasonality")(spark, sf()).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3),
         r.getDouble(4)))
@@ -2146,7 +2143,6 @@ class Round12Spec extends SparkSpec {
   }
 
   test("q252: per-year shares sum to 1; one year fully recomputed driver-side") {
-    import org.apache.spark.sql.functions.col
     val rows = SparkEntry.queries("q252_market_share")(spark, sf()).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getDouble(3)))
     rows.groupBy(_._1).foreach { case (y, rs) =>
@@ -2254,7 +2250,7 @@ class Round12Spec extends SparkSpec {
   }
 
   test("q256: LTV curve monotone per cohort; largest cohort recomputed driver-side") {
-    import org.apache.spark.sql.functions.{col, unix_timestamp}
+    import org.apache.spark.sql.functions.col
     val rows = SparkEntry.queries("q256_cohort_ltv")(spark, sf()).collect()
       .map(r => (r.getDate(0).toLocalDate, r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))
@@ -2568,7 +2564,6 @@ class Round12Spec extends SparkSpec {
     val rows = SparkEntry.queries("q266_l_diversity")(spark, sf()).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)) ->
         (r.getLong(3), r.getLong(4), r.getLong(5), r.getBoolean(6))).toMap
-    import org.apache.spark.sql.functions.col
     val nationOf = graft.sources.Tables.table(spark, sf(), "nation")
       .select("n_nationkey", "n_name").collect()
       .map(r => r.getAs[Number](0).longValue -> r.getString(1)).toMap
@@ -2629,7 +2624,6 @@ class Round12Spec extends SparkSpec {
     val rows = SparkEntry.queries("q270_t_closeness")(spark, sf()).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)) ->
         (r.getLong(3), r.getDouble(4), r.getBoolean(5))).toMap
-    import org.apache.spark.sql.functions.col
     val nationOf = graft.sources.Tables.table(spark, sf(), "nation")
       .select("n_nationkey", "n_name").collect()
       .map(r => r.getAs[Number](0).longValue -> r.getString(1)).toMap

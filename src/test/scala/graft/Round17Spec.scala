@@ -213,15 +213,12 @@ class Round17Spec extends SparkSpec {
     val dir = fresh("manyplan")
     LexIndex.build(docs, col("doc_id"), col("text"), dir)
     val q = (0L to 63L).map(i => (i, Seq("spark", "stream"))).toDF("query_id", "terms")
-    val plan = LexIndex.queryMany(spark, dir, q, k = 10)
-      .queryExecution.executedPlan.toString
-    val postingsScans = plan.linesIterator
-      .filter(l => l.contains("Scan parquet") || l.contains("FileScan"))
-      .count(_.contains("postings"))
-    assert(postingsScans === 1,
-      s"expected exactly one postings scan, got $postingsScans:\n" + plan.take(2000))
-    assert(!plan.contains("documents.parquet"),
-      "queryMany must never touch the corpus:\n" + plan.take(1500))
+    val plan = LexIndex.queryMany(spark, dir, q, k = 10).queryExecution.executedPlan
+    val scans = PlanInspect(plan)
+    assert(scans.scansOf("postings") === 1,
+      s"expected exactly one postings scan, got ${scans.scansPerTable}:\n" + plan.toString.take(2000))
+    assert(scans.scansOf("documents") === 0,
+      "queryMany must never touch the corpus:\n" + plan.toString.take(1500))
   }
 
   // ---------------- unigram capture keying ----------------
@@ -246,11 +243,9 @@ class Round17Spec extends SparkSpec {
   for (q <- Seq("q348_hybrid_artifacts", "q352_hybrid_query_table")) {
     test(s"$q answer plan reads ONLY the two artifacts — no corpus scans") {
       val df = graft.SparkEntry.queries(q)(spark, sf())
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("documents.parquet"),
-        "hybrid answer path scanned the documents table:\n" + plan.take(1500))
-      assert(!plan.contains("embeddings.parquet"),
-        "hybrid answer path scanned the embeddings table:\n" + plan.take(1500))
+      val scans = PlanInspect(df).scansPerTable
+      assert(!scans.contains("documents") && !scans.contains("embeddings"),
+        s"hybrid answer path scanned a source table: $scans")
       assert(df.count() > 0)
     }
   }

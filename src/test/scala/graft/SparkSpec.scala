@@ -11,19 +11,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // the production session shape: engine extensions active, so plan
-      // specs assert what Verify/Bench actually execute
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the production session shape, so plan specs assert what Verify and
+  // Bench actually execute
+  lazy val session: SparkSession = GraftSession("graft-test", 4,
+    conf = Map("spark.sql.warehouse.dir" -> "target/spark-warehouse"))
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.multimodal.Multimodal
 import graft.operators.{RemoteBatchClassifier}

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{TextExprs, Vader}
+import graft.functions.Vader
 import graft.operators.{SurveyPipeline, VaderDemoClassifier}
 
 /** The VADER-compound port, verified against the reference's own shipped
@@ -12,21 +12,16 @@ import graft.operators.{SurveyPipeline, VaderDemoClassifier}
 class VaderSpec extends SparkSpec {
   import spark.implicits._
 
-  private val lexPath =
-    "/root/reference/.venv/lib/python3.9/site-packages/vaderSentiment/vader_lexicon.txt"
-  private lazy val lex = Vader.loadLexicon(lexPath)
+  private lazy val lex = Vader.loadLexicon(ReferenceAssets.VaderLexicon)
 
-  /** Every test reads runtime fixtures from the read-only reference mount
-    * (lexicon, memo cache, survey csv) — skip cleanly, don't fail, on a
-    * checkout without it. */
+  /** Every test reads reference artifacts (lexicon, memo cache, survey
+    * csv) — skip cleanly, don't fail, on a checkout without them. */
   private def assumeRef(): Unit =
-    assume(new java.io.File(lexPath).isFile &&
-      new java.io.File("/root/reference/.analysis_cache.json").isFile,
-      "reference mount /root/reference absent — fixture-dependent test skipped")
+    ReferenceAssets.assume(ReferenceAssets.VaderLexicon, ReferenceAssets.memoCache)
 
   private lazy val cacheEntries: Seq[(String, String, String, String, String)] = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(new java.io.File("/root/reference/.analysis_cache.json"))
+    val root = mapper.readTree(new java.io.File(ReferenceAssets.memoCache))
     val it = root.fields()
     val buf = Seq.newBuilder[(String, String, String, String, String)]
     while (it.hasNext) {
@@ -103,7 +98,7 @@ class VaderSpec extends SparkSpec {
     // end-to-end: the reference corpus through analyzeWide with the VADER
     // classifier — every classified (question, answer) must agree with the
     // shipped cache (filler rows short-circuit and are not in the cache)
-    val df = SurveyPipeline.readSurveyCsv(spark, "/root/reference/example_survey_large.csv")
+    val df = SurveyPipeline.readSurveyCsv(spark, ReferenceAssets.SurveyCsv)
     val wide = SurveyPipeline.analyzeWide(df, "Apparel",
       clf = new VaderDemoClassifier(lex), faithfulIds = true, pandasNa = true)
     val cache = cacheEntries.map { case (_, q, a, s, _) => (q, a) -> s }.toMap

@@ -2,7 +2,6 @@ package graft
 
 import java.util.zip.ZipFile
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.functions._
 import graft.operators.SurveyPipeline
 import graft.sources.Xlsx
 
@@ -68,14 +67,12 @@ object XlsxRead {
 class XlsxSpec extends SparkSpec {
   import spark.implicits._
 
-  private val golden = "/root/reference/Example analysis output.xlsx"
-  private val csv = "/root/reference/example_survey_large.csv"
+  private val golden = ReferenceAssets.GoldenWorkbook
+  private val csv = ReferenceAssets.SurveyCsv
 
-  /** The golden workbook, survey csv and VADER lexicon live on the
-    * read-only reference mount — skip cleanly, don't fail, without it. */
-  private def assumeRef(): Unit =
-    assume(new java.io.File(golden).isFile && new java.io.File(csv).isFile,
-      "reference mount /root/reference absent — fixture-dependent test skipped")
+  /** The golden workbook and survey csv are reference artifacts — skip
+    * cleanly, don't fail, without them. */
+  private def assumeRef(): Unit = ReferenceAssets.assume(golden, csv)
 
   private def writtenReport: String = {
     val out = "target/tmp/report.xlsx"
@@ -154,8 +151,7 @@ class XlsxSpec extends SparkSpec {
     // the shipped workbook was produced by the reference's VADER demo
     // branch; with the ported scorer the sentiment COUNTS must now agree
     // cell-for-cell, not just structurally
-    val lex = graft.functions.Vader.loadLexicon(
-      "/root/reference/.venv/lib/python3.9/site-packages/vaderSentiment/vader_lexicon.txt")
+    val lex = graft.functions.Vader.loadLexicon(ReferenceAssets.VaderLexicon)
     val out = "target/tmp/report_vader.xlsx"
     val wide = SurveyPipeline.analyzeWide(
       SurveyPipeline.readSurveyCsv(spark, csv), "Apparel",
