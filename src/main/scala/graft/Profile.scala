@@ -14,7 +14,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
   *
   *   runMain graft.Profile <sfDir> [--reps N] [--jobs] [--batches] [--scans] <query-prefix>...
   *
-  *  - `--jobs`: every job of that run, with its duration and description;
+  *  - `--jobs`: every job of that run, with the SQL execution id it ran
+  *    under (`-` for none), its duration and description;
   *  - `--batches`: every streaming micro-batch of that run, with its
   *    `durationMs` phases (addBatch, walCommit, commitOffsets, ...);
   *  - `--scans`: [[PlanInspect]]'s census of the query's final plan.
@@ -75,7 +76,7 @@ object Profile {
   private final class Recorder extends SparkListener {
     private val Marker = "graft-profile-settle"
     private var run = Run(0, 0, 0, 0, 0, Vector.empty, Vector.empty)
-    private val started = scala.collection.mutable.Map.empty[Int, (Long, String)]
+    private val started = scala.collection.mutable.Map.empty[Int, (Long, String, String)]
     private var markerJob = -1
     private var snapshot = run
     private val markerDone = new Semaphore(0)
@@ -106,14 +107,19 @@ object Profile {
         run = run.copy(jobs = run.jobs + 1)
         val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
           .filter(_.nonEmpty).orElse(j.stageInfos.lastOption.map(_.name)).getOrElse("?")
-        started(j.jobId) = (j.time, desc.replaceAll("\\s+", " ").trim)
+        // the SQL execution id names the plan a job belongs to; broadcast
+        // jobs all share one async call site as their description
+        val exec = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .getOrElse("-")
+        started(j.jobId) = (j.time, exec, desc.replaceAll("\\s+", " ").trim)
       }
     }
 
     override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
       if (j.jobId == markerJob) markerDone.release()
-      started.remove(j.jobId).foreach { case (t0, desc) =>
-        run = run.copy(jobLog = run.jobLog :+ f"${j.jobId}%5d ${j.time - t0}%7d ms  $desc")
+      started.remove(j.jobId).foreach { case (t0, exec, desc) =>
+        run = run.copy(jobLog = run.jobLog :+
+          f"sql=$exec%-4s ${j.jobId}%5d ${j.time - t0}%7d ms  $desc")
       }
     }
 

@@ -27,12 +27,12 @@ object AudioIoCodec extends MediaCodec {
   /** Every `AudioSystem` entry point funnels through a SYNCHRONIZED
     * provider registry (`JDK13Services.getProviders`) — on a 32-thread
     * executor the lock convoy makes the registry, not PCM work, the
-    * bill: ScaleProbe's audio mode measured 32 threads running 0.5×
-    * SLOWER than one, and the sf1 suite showed q319/q320/q333 at ~20×
-    * for 10× docs. The SPI types (`javax.sound.sampled.spi`) are public
-    * API: resolve the platform providers ONCE here and dispatch
-    * directly — provider instances are stateless parsers, safe to share
-    * across threads. */
+    * bill: 32 decode threads measured 0.5× SLOWER than one (BASELINE.md
+    * round 14, "Audio-codec scalability bug"), and the sf1 suite showed
+    * q319/q320/q333 at ~20× for 10× docs. The SPI types
+    * (`javax.sound.sampled.spi`) are public API: resolve the platform
+    * providers ONCE here and dispatch directly — provider instances are
+    * stateless parsers, safe to share across threads. */
   @transient private lazy val fileReaders: Seq[javax.sound.sampled.spi.AudioFileReader] = {
     val it = java.util.ServiceLoader
       .load(classOf[javax.sound.sampled.spi.AudioFileReader]).iterator()

@@ -6,7 +6,7 @@ import javax.imageio.ImageIO
 /** In-memory ImageIO plumbing. `ImageIO.read(InputStream)` / `write(…,
   * OutputStream)` / `createImageXStream` all spill through a FILE-backed
   * cache stream by default — a temp-file round trip per payload.
-  * ScaleProbe's image mode measured the tax on 16×16 PNG
+  * BASELINE.md round 14 ("The IMAGE twin") records the tax on 16×16 PNG
   * generate+decode: 2.7× single-thread, and 32-thread speedup capped at
   * ×2.4 by temp-file churn vs ×6.8 with memory streams. These helpers
   * pin `MemoryCacheImageXStream` explicitly — byte-array payloads never

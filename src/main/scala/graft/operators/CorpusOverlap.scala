@@ -13,10 +13,11 @@ import graft.functions.TextExprs
   * corpus-sized stream. It is shuffled ONCE (the distinct) and self-joined
   * on the hash; because `source` is a small enum, per-hash join output is
   * bounded by C(|sources|, 2) — the join cannot go quadratic in the corpus,
-  * even in the adversarial every-shingle-in-every-source case (ScaleProbe's
-  * overlap mode measures exactly that). Catalyst reuses the one distinct
-  * exchange for both join sides (ReusedExchange, PlanSpec-locked on the
-  * final adaptive plan); per-source set sizes ride a |sources|-row join.
+  * even in the adversarial every-shingle-in-every-source case
+  * (CorpusOverlapSpec checks its closed form on a replicated corpus).
+  * Catalyst reuses the one distinct exchange for both join sides
+  * (ReusedExchange, PlanSpec-locked on the final adaptive plan);
+  * per-source set sizes ride a |sources|-row join.
   *
   * Shingles are the native 64-bit `shingleHashes` fold (one codegen pass,
   * no per-shingle string ever built or shuffled). The DuckDB twin computes

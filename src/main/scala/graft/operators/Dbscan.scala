@@ -49,9 +49,9 @@ import org.apache.spark.sql.functions._
   * relations; the CC input is the core–core subgraph, which density
   * thresholds keep far smaller than the candidate graph. Nothing is
   * quadratic in the corpus — the one quadratic risk (a mega-bucket of
-  * DISTINCT vectors) is the q34/q176 plane-count knob, already
-  * ScaleProbe-audited there; ScaleProbe's dbscan mode pins the collapse
-  * (pure-replica blobs: zero distinct-grain pairs at any rep).
+  * DISTINCT vectors) is the q34/q176 plane-count knob (SimilaritySpec
+  * checks that stepping it re-cuts the candidate volume); DbscanSpec pins
+  * the collapse (pure-replica blobs: zero distinct-grain pairs at any rep).
   */
 object Dbscan {
 

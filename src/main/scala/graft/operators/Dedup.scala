@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextExprs, VectorExprs}
+import graft.plans.MinHashExprs
 
 /** Deduplication operators for large-scale corpus curation — the
   * training-data-pipeline extensions of the engine (SURVEY.md §2.3).
@@ -64,76 +65,49 @@ object Dedup {
   def minhashNearDups(
       df: DataFrame, id: Column, text: Column,
       shingleLen: Int = 3, numBands: Int = 8, rowsPerBand: Int = 4,
-      threshold: Double = 0.7): DataFrame =
-    minhashNearDupsImpl(df, id, text, shingleLen, numBands, rowsPerBand,
-      threshold, managed = false)._1
-
-  /** Pin a frame that multiple consumers re-read. `managed = true` uses
-    * cache() + an explicit unpersist closure (the probe-asserted release
-    * contract); `managed = false` uses eager localCheckpoint — blocks
-    * release on GC via ContextCleaner, so fire-and-forget query paths
-    * leave no CacheManager entry behind. */
-  private def pinned(df: DataFrame, managed: Boolean): (DataFrame, () => Unit) =
-    if (managed) {
-      val c = df.cache()
-      (c, () => { c.unpersist(blocking = false); () })
-    } else (df.localCheckpoint(), () => ())
-
-  /** [[minhashNearDups]] plus an explicit cache-release epilogue: the second
-    * element unpersists the signature cache the operator created. Call it
-    * AFTER the returned frame has materialized (written/collected/counted) —
-    * a long-lived session (notebook, streaming driver, multi-query job)
-    * should not leave sketch caches to the ContextCleaner's GC schedule.
-    * ScaleProbe's dedup mode asserts `getPersistentRDDs` drains to its
-    * pre-operator state after release. */
-  def minhashNearDupsManaged(
-      df: DataFrame, id: Column, text: Column,
-      shingleLen: Int = 3, numBands: Int = 8, rowsPerBand: Int = 4,
-      threshold: Double = 0.7): (DataFrame, () => Unit) =
-    minhashNearDupsImpl(df, id, text, shingleLen, numBands, rowsPerBand,
-      threshold, managed = true)
-
-  private def minhashNearDupsImpl(
-      df: DataFrame, id: Column, text: Column,
-      shingleLen: Int, numBands: Int, rowsPerBand: Int,
-      threshold: Double, managed: Boolean): (DataFrame, () => Unit) = {
-    import graft.plans.MinHashExprs
-    val numPerm = numBands * rowsPerBand
-    // Pinned: the signature projection feeds both sides of the candidate
-    // self-join AND the verify join-back — without it Spark would
-    // recompute the shingle+minhash pipeline for every consumer.
-    val (docs, release) = pinned(
-      df.select(id.as("id"), TextExprs.cleanText(text).as("cln"))
-        .select(col("id"), MinHashExprs.shingleHashes(col("cln"), shingleLen).as("shh"))
-        .where(size(col("shh")) > 0)
-        .withColumn("sig", MinHashExprs.minhashSignature(col("shh"), numPerm)),
-      managed)
-    val bandHashes = (0 until numBands).map(b =>
-      hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
-    // Candidate generation carries ONLY (band, band_hash, id): the shingle
-    // hash sets must not ride through the exploded self-join shuffle.
-    val banded = docs.select(col("id"), posexplode(array(bandHashes: _*)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
+      threshold: Double = 0.7): DataFrame = {
+    val docs = minhashSignatures(df, id, text, shingleLen, numBands * rowsPerBand)
+    val banded = lshBands(docs, numBands, rowsPerBand)
     val candidates = banded.as("l")
       .join(banded.as("r"), Seq("band", "band_hash"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .where(col("id_a") < col("id_b"))
       .distinct() // same pair collides in multiple bands — dedupe BEFORE verify
-    // Exact-Jaccard verify: join the (cached) sorted hash sets back per side.
-    val verified = candidates
+    // Exact-Jaccard verify: join the pinned sorted hash sets back per side.
+    candidates
       .join(docs.select(col("id").as("id_a"), col("shh").as("shh_a")), "id_a")
       .join(docs.select(col("id").as("id_b"), col("shh").as("shh_b")), "id_b")
       .select(col("id_a"), col("id_b"),
         MinHashExprs.jaccardSorted(col("shh_a"), col("shh_b")).as("jaccard"))
       .where(col("jaccard") >= threshold)
-    (verified, release)
+  }
+
+  /** The (id, shh, sig) projection both MinHash LSH operators join back
+    * to, pinned so the shingle+minhash pipeline runs once. Eager
+    * localCheckpoint, not cache(): blocks release on GC, and a query path
+    * leaves no CacheManager entry behind (DedupSpec checks the plan). */
+  private def minhashSignatures(df: DataFrame, id: Column, text: Column,
+      shingleLen: Int, numPerm: Int): DataFrame =
+    df.select(id.as("id"), TextExprs.cleanText(text).as("cln"))
+      .select(col("id"), MinHashExprs.shingleHashes(col("cln"), shingleLen).as("shh"))
+      .where(size(col("shh")) > 0)
+      .withColumn("sig", MinHashExprs.minhashSignature(col("shh"), numPerm))
+      .localCheckpoint()
+
+  /** One (id, band, band_hash) row per LSH band of `sig`: the shingle hash
+    * sets must not ride through the exploded candidate-join shuffle. */
+  private def lshBands(sigs: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame = {
+    val bandHashes = (0 until numBands).map(b =>
+      hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
+    sigs.select(col("id"), posexplode(array(bandHashes: _*)))
+      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
   }
 
   /** Incremental near-dup dedup: NEW-batch docs that near-duplicate any
     * EXISTING-corpus doc — the daily-ingest operation (dedupe a fresh
     * crawl against the already-curated store) where running the self-join
     * form over corpus ∪ batch would redundantly re-pair the corpus with
-    * itself. Same LSH shape as [[minhashNearDups]] — cached signature
+    * itself. Same LSH shape as [[minhashNearDups]] — pinned signature
     * projections, ids-only candidates, dedupe before the exact verify —
     * but the banded join is strictly batch×corpus; at real scale the
     * batch side is orders of magnitude smaller than the corpus, AQE
@@ -154,49 +128,19 @@ object Dedup {
   def minhashNearDupsAgainst(
       corpus: DataFrame, batch: DataFrame, id: Column, text: Column,
       shingleLen: Int = 3, numBands: Int = 8, rowsPerBand: Int = 4,
-      threshold: Double = 0.7): DataFrame =
-    minhashNearDupsAgainstImpl(corpus, batch, id, text, shingleLen,
-      numBands, rowsPerBand, threshold, managed = false)._1
-
-  /** [[minhashNearDupsAgainst]] with the explicit cache-release epilogue
-    * (see [[minhashNearDupsManaged]]); releases BOTH signature caches. */
-  def minhashNearDupsAgainstManaged(
-      corpus: DataFrame, batch: DataFrame, id: Column, text: Column,
-      shingleLen: Int = 3, numBands: Int = 8, rowsPerBand: Int = 4,
-      threshold: Double = 0.7): (DataFrame, () => Unit) =
-    minhashNearDupsAgainstImpl(corpus, batch, id, text, shingleLen,
-      numBands, rowsPerBand, threshold, managed = true)
-
-  private def minhashNearDupsAgainstImpl(
-      corpus: DataFrame, batch: DataFrame, id: Column, text: Column,
-      shingleLen: Int, numBands: Int, rowsPerBand: Int,
-      threshold: Double, managed: Boolean): (DataFrame, () => Unit) = {
-    import graft.plans.MinHashExprs
-    val numPerm = numBands * rowsPerBand
-    def prep(df: DataFrame): (DataFrame, () => Unit) = pinned(df
-      .select(id.as("id"), TextExprs.cleanText(text).as("cln"))
-      .select(col("id"), MinHashExprs.shingleHashes(col("cln"), shingleLen).as("shh"))
-      .where(size(col("shh")) > 0)
-      .withColumn("sig", MinHashExprs.minhashSignature(col("shh"), numPerm)),
-      managed)
-    def banded(d: DataFrame): DataFrame = {
-      val bandHashes = (0 until numBands).map(b =>
-        hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
-      d.select(col("id"), posexplode(array(bandHashes: _*)))
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
-    }
-    val (c, releaseC) = prep(corpus)
-    val (b, releaseB) = prep(batch)
-    val candidates = banded(b).as("l").join(banded(c).as("r"), Seq("band", "band_hash"))
+      threshold: Double = 0.7): DataFrame = {
+    val c = minhashSignatures(corpus, id, text, shingleLen, numBands * rowsPerBand)
+    val b = minhashSignatures(batch, id, text, shingleLen, numBands * rowsPerBand)
+    val candidates = lshBands(b, numBands, rowsPerBand).as("l")
+      .join(lshBands(c, numBands, rowsPerBand).as("r"), Seq("band", "band_hash"))
       .select(col("l.id").as("batch_id"), col("r.id").as("corpus_id"))
       .distinct()
-    val verified = candidates
+    candidates
       .join(b.select(col("id").as("batch_id"), col("shh").as("shh_a")), "batch_id")
       .join(c.select(col("id").as("corpus_id"), col("shh").as("shh_b")), "corpus_id")
       .select(col("batch_id"), col("corpus_id"),
         MinHashExprs.jaccardSorted(col("shh_a"), col("shh_b")).as("jaccard"))
       .where(col("jaccard") >= threshold)
-    (verified, () => { releaseB(); releaseC(); () })
   }
 
   /** SimHash (64-bit) via the native codegen'd expression
@@ -217,7 +161,7 @@ object Dedup {
       shingleLen: Int = 3): DataFrame = {
     val sigs = df.select(id.as("id"),
         graft.plans.SimHash.simhashShingled(TextExprs.cleanText(text), shingleLen).as("sig"))
-      .localCheckpoint() // GC-released pin (see `pinned`)
+      .localCheckpoint() // GC-released pin (see [[minhashSignatures]])
     val bandSlices = (0 until 4).map(b =>
       shiftrightunsigned(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL)))
     val banded = sigs.select(col("id"), posexplode(array(bandSlices: _*)))
@@ -268,7 +212,7 @@ object Dedup {
       .where(size(split(col("cln"), " ")) >= shingleLen)
       .select(col("id"), md5(col("cln")).as("tid"),
         graft.plans.SimHash.simhashMd5Shingled(col("cln"), shingleLen).as("sig"))
-      .localCheckpoint() // GC-released pin (see `pinned`)
+      .localCheckpoint() // GC-released pin (see [[minhashSignatures]])
     val g = m.select("tid", "sig").distinct()
     val bandSlices = (0 until 8).map(b =>
       shiftrightunsigned(col("sig"), b * 8).bitwiseAND(lit(0xFFL)))
@@ -302,7 +246,6 @@ object Dedup {
     * reproducible across engines (array_distinct order is not). */
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
       shingleLen: Int = 3, threshold: Double = 0.5): DataFrame = {
-    import graft.plans.MinHashExprs
     // Staged projections: cln and toks become ATTRIBUTES before any lambda
     // touches them (each is referenced >1x downstream, so CollapseProject
     // keeps the boundary and nothing is re-evaluated per array element).
@@ -319,7 +262,7 @@ object Dedup {
       .where(size(col("shh")) > 0)
       .select(col("id"), col("tid"), col("shh"),
         array_min(shinglesOfToks(col("toks"), shingleLen)).as("blk"))
-      .localCheckpoint() // GC-released pin (see `pinned`)
+      .localCheckpoint() // GC-released pin (see [[minhashSignatures]])
     val g = m.select("blk", "tid", "shh").distinct()
     val keys = g.select(col("blk"), col("tid"))
     val candidates = keys.as("l").join(keys.as("r"), Seq("blk"))
@@ -440,8 +383,8 @@ object Dedup {
     * path lengths instead of walking them, so convergence is O(log² n)
     * rounds on ANY topology where min-label pays one round per hop of
     * graph diameter (a 10⁶-link near-dup chain: ~20 alternations vs 10⁶
-    * propagation rounds). ScaleProbe's ccchain mode pins the round count
-    * on a pure path graph.
+    * propagation rounds). Round11Spec pins the round count on a pure path
+    * graph.
     *
     * Fixpoint detection: a cheap (count, Σsrc, Σdst) signature — decimal
     * sums, so id magnitude cannot overflow — gates an EXACT set-equality
@@ -630,7 +573,7 @@ object Dedup {
     // collapse bounds on a dup-heavy corpus. Costs one extra source scan,
     // keeps full-corpus text out of the pinned blocks.
     val m = base.select("doc_id", "tid", "h")
-      .localCheckpoint() // GC-released pin (see `pinned`)
+      .localCheckpoint() // GC-released pin (see [[minhashSignatures]])
     val g = base.select("h", "tid", "t").distinct()
       .localCheckpoint() // distinct-text grain, two verify-side consumers
     val sim = lit(1.0) - levenshtein(col("ta"), col("tb")).cast("double") /

@@ -540,14 +540,7 @@ object LexIndex {
     readStats(spark, dir, m.stats)
   }
 
-  /** The live dictionary (token, dfreq) — resolved via the manifest, so
-    * callers never hard-code a generation path (probes, diagnostics). */
-  def liveDict(spark: SparkSession, dir: String): DataFrame = {
-    val m = live(fsOf(spark, dir), dir)
-    spark.read.parquet(s"$dir/${m.dict}")
-  }
-
-  /** The live manifest's postings file list (tests/probes). */
+  /** The live manifest's postings file list (tests). */
   private[graft] def livePostingFiles(spark: SparkSession, dir: String): Seq[String] =
     live(fsOf(spark, dir), dir).postings
 

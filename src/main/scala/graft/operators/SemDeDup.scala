@@ -11,9 +11,9 @@ import graft.functions.VectorExprs
   * within-cell self-join is O(Σ_c |c|²), so holding k fixed while n grows
   * 100× turns it into a quadratic blowup inside a few giant cells, while
   * k = n / targetCellSize keeps the expected per-cell pair count at
-  * ~n·targetCellSize/2 — linear in n. ScaleProbe's semdedup mode measures
-  * exactly this: per-cell pair counts stay bounded as the corpus is
-  * replicated because k rises proportionally.
+  * ~n·targetCellSize/2 — linear in n. SemDeDupSpec checks exactly this:
+  * per-cell pair counts stay bounded as the corpus is replicated because
+  * k rises proportionally.
   *
   * ONE Lloyd fit serves both the assignment and the dedup (KMeansOp.fit
   * returns the fitted centroids plus the cached projection it fit on, so
@@ -22,7 +22,7 @@ import graft.functions.VectorExprs
   * HONEST BOUNDARY: the assignment carries the centroid matrix as a
   * [[graft.plans.CentMatrix]] — plan-embedded below the size threshold,
   * a BROADCAST VARIABLE above it (one copy per executor, fixed-size plan
-  * payload at any k; ScaleProbe ivf mode measures 688 B at k=10⁴ cells),
+  * payload at any k; BASELINE.md round 10 records 688 B at k=10⁴ cells),
   * and the Lloyd fit runs on a bounded md5-draw sample (KMeansOp
   * scaladoc), so neither the fit nor the plan grows with the corpus. The
   * remaining ceiling is the k×dim matrix fitting in EXECUTOR memory —

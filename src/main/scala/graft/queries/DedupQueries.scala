@@ -81,8 +81,8 @@ private[graft] object DedupQueries extends QueryBook {
       // Exact duplicated-substring detection (Lee et al. 2022) — see
       // operators/SpanDedup.scala for the full design rationale (two
       // recompute passes, pushed-down semi-join, no persisted footprint;
-      // PlanSpec-locked). ScaleProbe's span mode stress-verifies the
-      // dataflow on a replicated corpus where EVERY window is duplicated.
+      // PlanSpec-locked). SpanDedupSpec verifies the dataflow on a
+      // replicated corpus where EVERY window is duplicated.
       graft.operators.SpanDedup
         .perDocDupShare(t(s, dir, "documents"), col("doc_id"), col("text"), 30)
         .withColumnRenamed("id", "doc_id")
@@ -230,8 +230,8 @@ private[graft] object DedupQueries extends QueryBook {
       // TWO-STAGE decontamination: a 2^18-bit / 4-hash Bloom filter
       // over the benchmark's 5-gram shingles prefilters the train side,
       // then exact membership verifies only the candidates. Sizing
-      // follows the ~20-bits/element rule the repo's ScaleProbe bloom
-      // mode measured (2^14 saturated at 95% fill on the sf0.1 shingle
+      // follows the ~20-bits/element rule measured in BASELINE.md round 10
+      // ("Bloom probe": 2^14 saturated at 95% fill on the sf0.1 shingle
       // set and prefiltered NOTHING; 2^18 keeps fill in the selective
       // regime). At 100 TB the benchmark set is small and the bloom
       // rides along as a BROADCAST (here: its set-bit table, bounded by

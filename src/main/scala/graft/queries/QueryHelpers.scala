@@ -20,8 +20,8 @@ private[graft] object QueryHelpers {
     * linkage): the name-prefix block key grows one character per decade of
     * distinct names, re-cutting the within-block pair space instead of
     * letting it grow ~quadratically. The q88 oracle replays the SAME step
-    * function as a SQL CASE from the same count; ScaleProbe mode `linkage`
-    * demonstrates the contract on a minted 10× name universe. */
+    * function as a SQL CASE from the same count; LinkagePfxLenSpec checks
+    * the contract on a minted 10× name universe. */
   private[graft] def linkagePfxLen(nDistinctNames: Long): Int =
     if (nDistinctNames <= 10000L) 3 else if (nDistinctNames <= 100000L) 4 else 5
 

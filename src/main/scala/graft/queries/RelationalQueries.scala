@@ -556,7 +556,7 @@ private[graft] object RelationalQueries extends QueryBook {
 
     "q108_source_overlap" -> ((s, dir) => {
       // operators.CorpusOverlap — see its scaladoc for the bounded
-      // self-join scale argument; ScaleProbe's overlap mode stresses the
+      // self-join scale argument; CorpusOverlapSpec checks the
       // adversarial every-shingle-in-every-source case.
       graft.operators.CorpusOverlap.sourceOverlap(
         t(s, dir, "documents"), col("source"), col("text"), n = 5)
@@ -1087,7 +1087,7 @@ private[graft] object RelationalQueries extends QueryBook {
       // max of size over the price order (withRunningMax), shift to
       // EXCLUSIVE via a rank self-join — then one broadcast hop back to
       // parts. No n² dominance join anywhere (operators.Skyline; the
-      // ScaleProbe skyline mode measures sweep-vs-naive scaling).
+      // README.md records the sweep-vs-naive scaling).
       val parts = t(s, dir, "part")
         .select(col("p_partkey"), col("p_size"),
           round(col("p_retailprice") * 100).cast("long").as("cents"))
@@ -1614,8 +1614,8 @@ private[graft] object RelationalQueries extends QueryBook {
       // 10× the within-block distinct-pair space is re-cut instead of
       // growing ~100×. The oracle computes the SAME CASE from the same
       // count, so the two engines cannot drift at any SF (at the fixture
-      // SFs the rule yields 3 — hashes unchanged). ScaleProbe mode
-      // `linkage` demonstrates the contract on a 10× minted-name corpus.
+      // SFs the rule yields 3 — hashes unchanged). LinkagePfxLenSpec
+      // checks the contract on a 10× minted-name corpus.
       //
       // OUTPUT-STREAMING EXPANSION (round 16): on a duplicate-heavy corpus
       // the pair-for-pair OUTPUT is copies² by contract — the floor is
