@@ -3,8 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.TextExprs
-import graft.operators.{AnswerClassifier, CacheJoinClassifier, DemoAnswerClassifier, SurveyPipeline}
+import graft.operators.{AnswerClassifier, CacheJoinClassifier, Classify, DemoAnswerClassifier, SurveyPipeline}
 
 /** The reference CLI, Spark-shaped (survey_analysis.py:452-496): same flags,
   * same dataflow, same cache semantics — a reference user points this at the
@@ -78,13 +77,8 @@ object SurveyMain {
   /** All distinct classification keys of the frame, classified — with a
     * CacheJoinClassifier this is hits-from-cache ∪ fresh results. */
   def updatedCache(df: DataFrame, industry: String, qcols: Seq[String],
-      clf: AnswerClassifier): DataFrame = {
-    val keyFrames = qcols.map(q => df.select(
-      lit(industry).as("industry"), lit(q).as("question"),
-      TextExprs.cleanText(col(q)).as("answer")))
-    val keys = keyFrames.reduce(_ unionByName _).distinct()
-    clf.classify(keys)
-  }
+      clf: AnswerClassifier): DataFrame =
+    clf.classify(Classify.keys(df, industry, qcols.map(q => q -> col(q))))
 
   def loadCache(spark: SparkSession, path: String): DataFrame = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *  - normalizeSentiment :90-93
   *  - demoCategory       :63-70,112-116  ordered first-hit keyword table
   *  - demoSentiment      :131-136        fallback-lexicon branch (VADER absent on JVM)
-  *  - classifyDemo       :138-141,284-285 incl. the filler short-circuit
+  *  - withClassification :138-141,284-285 incl. the filler short-circuit
   */
 object TextExprs {
 
@@ -72,19 +72,14 @@ object TextExprs {
   private def hitsAny(low: Column, words: Seq[String]): Column =
     graft.plans.ContainsAny.containsAny(low, words)
 
-  /** Ordered keyword-table category — survey_analysis.py:112-116.
-    * First category whose keyword list hits wins; else "General". */
-  def demoCategory(c: Column): Column = {
-    val low = lower(coalesce(c, lit("")))
+  /** The category rule over already-lowered text. */
+  private def categoryOfLow(low: Column): Column =
     Lexicons.DemoKeywords.foldRight(lit("General")) { case ((cat, kws), rest) =>
       when(hitsAny(low, kws), cat).otherwise(rest)
     }
-  }
 
-  /** Fallback-lexicon sentiment — survey_analysis.py:131-136.
-    * Mixed if both polarities hit, else Positive / Negative / Neutral. */
-  def demoSentiment(c: Column): Column = {
-    val low = lower(coalesce(c, lit("")))
+  /** The sentiment rule over already-lowered text. */
+  private def sentimentOfLow(low: Column): Column = {
     val hasPos = hitsAny(low, Lexicons.PositiveWords)
     val hasNeg = hitsAny(low, Lexicons.NegativeWords)
     when(hasPos && hasNeg, "Mixed")
@@ -92,6 +87,14 @@ object TextExprs {
       .when(hasNeg, "Negative")
       .otherwise("Neutral")
   }
+
+  /** Ordered keyword-table category — survey_analysis.py:112-116.
+    * First category whose keyword list hits wins; else "General". */
+  def demoCategory(c: Column): Column = categoryOfLow(lower(coalesce(c, lit(""))))
+
+  /** Fallback-lexicon sentiment — survey_analysis.py:131-136.
+    * Mixed if both polarities hit, else Positive / Negative / Neutral. */
+  def demoSentiment(c: Column): Column = sentimentOfLow(lower(coalesce(c, lit(""))))
 
   /** VADER-branch demo sentiment — survey_analysis.py:118-127, the branch
     * the reference takes when vaderSentiment is installed (it scored the
@@ -108,43 +111,24 @@ object TextExprs {
       .otherwise("Neutral")
   }
 
-  /** Full demo classifier with the filler short-circuit
-    * (survey_analysis.py:284-285 routing + :138-141 compose):
-    * returns struct(sentiment, category). The CASE WHEN guard keeps the
-    * expensive branch off filler rows — Catalyst preserves the short-circuit.
-    *
-    * NOTE: this single-Column form re-embeds the cleanText regex tree in
-    * every branch (conditionals block Catalyst subexpression elimination) —
-    * the generated method outgrows the JIT and runs interpreted, ~50× slower.
-    * Fine for tests/small frames; on the hot path use the staged
-    * [[classifyFromCleaned]] behind projection boundaries instead. */
-  def classifyDemo(c: Column): Column = {
-    val cleaned = cleanText(c)
-    when(isFiller(cleaned), struct(lit("Neutral").as("sentiment"), lit("No Feedback").as("category")))
-      .otherwise(struct(demoSentiment(cleaned).as("sentiment"), demoCategory(cleaned).as("category")))
-  }
-
   /** Staged classifier over pre-computed `cln = cleanText(text)` and
     * `low = lower(cln)` attribute columns. Each regex input is an attribute,
     * so the whole struct is a small expression tree that evaluates cln/low
     * exactly once per row inside whole-stage codegen. */
-  def classifyFromCleaned(cln: Column, low: Column): Column = {
-    val hasPos = hitsAny(low, Lexicons.PositiveWords)
-    val hasNeg = hitsAny(low, Lexicons.NegativeWords)
-    val sentiment = when(hasPos && hasNeg, "Mixed")
-      .when(hasPos, "Positive").when(hasNeg, "Negative").otherwise("Neutral")
-    val category = Lexicons.DemoKeywords.foldRight(lit("General")) { case ((cat, kws), rest) =>
-      when(hitsAny(low, kws), cat).otherwise(rest)
-    }
+  def classifyFromCleaned(cln: Column, low: Column): Column =
     // cln is already trimmed, so filler test reduces to low ∈ FILLER_VALUES
     when(low.isin(Lexicons.FillerValues: _*),
         struct(lit("Neutral").as("sentiment"), lit("No Feedback").as("category")))
-      .otherwise(struct(sentiment.as("sentiment"), category.as("category")))
-  }
+      .otherwise(struct(sentimentOfLow(low).as("sentiment"), categoryOfLow(low).as("category")))
 
-  /** DataFrame-level staged classify: adds `outCol` = struct(sentiment,
-    * category) of `text`. The two intermediate projections are the whole
-    * point — see [[classifyFromCleaned]]. */
+  /** The demo classifier with the filler short-circuit
+    * (survey_analysis.py:284-285 routing + :138-141 compose): adds `outCol`
+    * = struct(sentiment, category) of `text`. The CASE WHEN guard keeps the
+    * keyword scans off filler rows. The two intermediate projections are the
+    * whole point: composed as one Column, the cleanText tree is re-embedded
+    * in every branch (conditionals block Catalyst subexpression
+    * elimination), and the generated method outgrows the JIT and runs
+    * interpreted, ~50× slower. */
   def withClassification(df: org.apache.spark.sql.DataFrame, text: Column,
       outCol: String): org.apache.spark.sql.DataFrame =
     df.withColumn(s"_${outCol}_cln", cleanText(text))

@@ -17,7 +17,9 @@ import graft.functions.TextExprs
   */
 trait AnswerClassifier extends Serializable {
   /** keys: DataFrame(industry, question, answer) — distinct classification
-    * keys. Returns the same columns plus (sentiment, category). */
+    * keys. Returns the same columns plus (sentiment, category), one row per
+    * key it was given and no others ([[Classify.applyTo]] joins back on the
+    * answer alone). */
   def classify(keys: DataFrame): DataFrame
 }
 
@@ -25,8 +27,7 @@ trait AnswerClassifier extends Serializable {
   * codegen, no shuffle, no state. */
 object DemoAnswerClassifier extends AnswerClassifier {
   override def classify(keys: DataFrame): DataFrame =
-    keys
-      .withColumn("_cls", TextExprs.classifyDemo(col("answer")))
+    TextExprs.withClassification(keys, col("answer"), "_cls")
       .select(col("industry"), col("question"), col("answer"),
         col("_cls.sentiment").as("sentiment"), col("_cls.category").as("category"))
 }
@@ -47,18 +48,24 @@ final class VaderDemoClassifier(lex: graft.functions.Vader.Lexicon)
 }
 
 /** The memo-cache rewrite (survey_analysis.py:257-273 → dataflow):
-  * distinct keys → hits (inner join vs cache) ∥ misses (left-anti → inner
-  * classifier) → union. The cache table is expected small relative to the
-  * data (distinct answers), so Spark will broadcast it when under the
-  * threshold; at larger cache sizes this degrades gracefully to a shuffled
-  * hash join on the same keys.
+  * distinct keys → hits (cache rows semi-joined with the keys) ∥ misses
+  * (left-anti → inner classifier) → union. The cache table is expected small
+  * relative to the data (distinct answers), so Spark will broadcast it when
+  * under the threshold; at larger cache sizes this degrades gracefully to a
+  * shuffled hash join on the same keys.
+  *
+  * Hits are a semi join of the cache, not an inner join of the keys: the
+  * rows are the same (the keys are distinct), but the planner's size
+  * estimate stays the cache's instead of the product of both sides, so a
+  * small result joins back by broadcast as planned rather than by whichever
+  * join AQE picks as the stages happen to finish.
   */
 final class CacheJoinClassifier(cache: DataFrame, onMiss: AnswerClassifier)
     extends AnswerClassifier {
   private val keyCols = Seq("industry", "question", "answer")
   override def classify(keys: DataFrame): DataFrame = {
     val k = keys.select(keyCols.map(col): _*).distinct()
-    val hits = k.join(cache, keyCols, "inner")
+    val hits = cache.join(k, keyCols, "left_semi")
       .select((keyCols ++ Seq("sentiment", "category")).map(col): _*)
     val misses = k.join(cache.select(keyCols.map(col): _*), keyCols, "left_anti")
     hits.unionByName(onMiss.classify(misses))
@@ -186,38 +193,40 @@ final case class OpenAiChatTransport(
 }
 
 object Classify {
-  private val keyCols = Seq("industry", "question", "answer")
+  /** The one key builder: the distinct (industry, question, answer)
+    * classification keys of `df`, one set per (question label, answer
+    * column) pair, where `answer` is [[TextExprs.cleanText]] of the column.
+    * This is the cache table's key format. */
+  def keys(df: DataFrame, industry: String, questions: Seq[(String, Column)]): DataFrame =
+    questions.map { case (question, answer) =>
+      df.select(lit(industry).as("industry"), lit(question).as("question"),
+        TextExprs.cleanText(answer).as("answer"))
+    }.reduce(_ unionByName _).distinct()
 
-  /** Apply a classifier to a fact frame: build the distinct key set, classify
-    * it, and join the (sentiment, category) results back. The result join is
-    * on the full key — deterministic per key, so Spark task retries are safe.
+  /** Apply a classifier to a fact frame, all answer columns in one call: for
+    * each (question label, answer column, output column) it classifies the
+    * column's distinct keys and left-joins the results back on the cleaned
+    * answer as `outCol` = struct(sentiment, category). Every column's keys
+    * come from `df` itself, never from the previous join, so the plan grows
+    * linearly in the number of columns. Within one column industry and
+    * question are fixed, so the cleaned answer is the whole key; the result
+    * is deterministic per key, so Spark task retries are safe.
     */
   def applyTo(
       df: DataFrame,
-      answer: Column,
-      question: Column,
-      industry: Column,
+      industry: String,
+      answers: Seq[(String, Column, String)],
       clf: AnswerClassifier,
-      sentimentCol: String = "sentiment",
-      categoryCol: String = "category",
   ): DataFrame = {
-    val withKeys = df
-      .withColumn("_g_industry", industry)
-      .withColumn("_g_question", question)
-      .withColumn("_g_answer", TextExprs.cleanText(answer))
-    val keys = withKeys.select(
-      col("_g_industry").as("industry"),
-      col("_g_question").as("question"),
-      col("_g_answer").as("answer")).distinct()
-    val results = clf.classify(keys).withColumnsRenamed(
-      Map("industry" -> "_g_industry", "question" -> "_g_question", "answer" -> "_g_answer"))
+    val keyCols = answers.indices.map(i => s"_g_answer$i")
     // No forced broadcast: the distinct-key result is usually tiny (the
     // reference's 9x dedup) and AQE will broadcast it at runtime; at 100 TB
     // with a huge key space it degrades to a shuffled hash join instead of
     // OOMing the driver.
-    withKeys
-      .join(results, Seq("_g_industry", "_g_question", "_g_answer"), "left")
-      .withColumnsRenamed(Map("sentiment" -> sentimentCol, "category" -> categoryCol))
-      .drop("_g_industry", "_g_question", "_g_answer")
+    answers.zip(keyCols).foldLeft(df) { case (d, ((question, answer, outCol), key)) =>
+      val results = clf.classify(keys(df, industry, Seq(question -> answer)))
+        .select(col("answer").as(key), struct(col("sentiment"), col("category")).as(outCol))
+      d.withColumn(key, TextExprs.cleanText(answer)).join(results, Seq(key), "left")
+    }.drop(keyCols: _*)
   }
 }

@@ -55,20 +55,6 @@ object SurveyPipeline {
       qcols.zipWithIndex.map { case (q, i) => q -> Option(row.getString(i)) }.toMap
     }
 
-  /** O16 — presentation column widths: clamp(0.9 * maxLen, 12, 60) over the
-    * header plus the first `probe` values (survey_analysis.py:360-365). */
-  def columnWidths(df: DataFrame, cols: Seq[String], probe: Int = 1000): Map[String, Int] =
-    if (cols.isEmpty) Map.empty
-    else {
-      val aggs = cols.map(c =>
-        max(length(coalesce(col(c).cast(StringType), lit("")))).as(c))
-      val row = df.limit(probe).agg(aggs.head, aggs.tail: _*).collect()(0)
-      cols.zipWithIndex.map { case (c, i) =>
-        val maxLen = math.max(if (row.isNullAt(i)) 0 else row.getInt(i), c.length)
-        c -> math.min(60, math.max(12, (0.9 * maxLen).toInt))
-      }.toMap
-    }
-
   /** O8 — comma-split multi-value product list; empty → ["Unspecified"]
     * (survey_analysis.py:276-277). Products truncated to 100 chars (:292). */
   def productsArray(c: Column): Column = {
@@ -149,22 +135,16 @@ object SurveyPipeline {
     val exploded = withId.withColumn("Product", explode(productsArray(col(productsCol))))
 
     // Demo classifier inlines as expressions; other classifiers go through
-    // the distinct-key join per question.
+    // the distinct-key join, all questions in one call.
     val analyzed = clf match {
       case DemoAnswerClassifier =>
         // staged classify per question: keeps each regex scan evaluated once
-        // (the single-Column classifyDemo tree would outgrow the JIT × #questions)
         bases.foldLeft(exploded) { case (d, (base, q)) =>
           TextExprs.withClassification(d, col(q), s"${base}__cls")
         }
       case other =>
-        bases.foldLeft(exploded) { case (d, (base, q)) =>
-          Classify.applyTo(d, col(q), lit(q), lit(industry), other,
-              sentimentCol = s"${base}__s", categoryCol = s"${base}__c")
-            .withColumn(s"${base}__cls",
-              struct(col(s"${base}__s").as("sentiment"), col(s"${base}__c").as("category")))
-            .drop(s"${base}__s", s"${base}__c")
-        }
+        Classify.applyTo(exploded, industry,
+          bases.map { case (base, q) => (q, col(q), s"${base}__cls") }, other)
     }
 
     val tripletCols = bases.flatMap { case (base, q) =>
@@ -321,19 +301,11 @@ object SurveyPipeline {
   /** The reference's presentation width rule (survey_analysis.py:360-365):
     * clamp(0.9 · max(len(header), max value length over the first `probe`
     * rows), minW, maxW), computed on already-collected report rows. */
-  private def widthsOf(header: Seq[String], rows: Seq[Seq[Any]],
+  private[graft] def widthsOf(header: Seq[String], rows: Seq[Seq[Any]],
       minW: Int, maxW: Int, probe: Int = 1000): Seq[Double] =
     header.indices.map { i =>
       val vals = rows.iterator.take(probe).map(r => String.valueOf(r(i)).length)
       val maxLen = (Iterator(header(i).length) ++ vals).max
       math.min(maxW, math.max(minW, (0.9 * maxLen).toInt)).toDouble
     }
-
-  /** Full flagship flow: CSV → wide → summary. */
-  def run(spark: SparkSession, csvPath: String, industry: String,
-      clf: AnswerClassifier = DemoAnswerClassifier): (DataFrame, DataFrame) = {
-    val df = readSurveyCsv(spark, csvPath)
-    val wide = analyzeWide(df, industry, clf)
-    (wide, buildSummary(wide))
-  }
 }

@@ -1,16 +1,11 @@
 package graft.queries
 
 import scala.collection.immutable.ListMap
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration.Duration
-import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{Lexicons, TextExprs, VectorExprs}
-import graft.operators.{Dedup, GlobalRank, JoinOps, Profiler, Retrieval, Similarity, SurveyPipeline, TextAnalysis, TopKAgg}
-import graft.multimodal.Multimodal
-import graft.sources.Tables
+import graft.functions.{Lexicons, TextExprs}
+import graft.operators.{Dedup, GlobalRank, TextAnalysis}
 import graft.queries.QueryHelpers._
 
 /** Text analysis for training-data curation: language ID, quality,

@@ -323,8 +323,8 @@ object EventStreams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         graft.operators.Classify
-          .applyTo(batch, col("answer"), lit("Q"), lit(industry), clf)
-          .groupBy(col("product"), col("sentiment"))
+          .applyTo(batch, industry, Seq(("Q", col("answer"), "cls")), clf)
+          .groupBy(col("product"), col("cls.sentiment").as("sentiment"))
           .agg(count(org.apache.spark.sql.functions.lit(1)).as("n"))
           .withColumn("batch_id", lit(id))
           .write.mode("append").parquet(outDir)

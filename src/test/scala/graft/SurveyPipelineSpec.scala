@@ -1,7 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{CacheJoinClassifier, DemoAnswerClassifier, SurveyPipeline}
+import graft.operators.{CacheJoinClassifier, Classify, DemoAnswerClassifier, SurveyPipeline}
 
 /** The reference dataflow on an adversarial synthetic survey frame
   * (FIXTURES.md A1 characteristics: multi-product, filler variants, emoji,
@@ -15,6 +17,33 @@ class SurveyPipelineSpec extends SparkSpec {
     ("c@x.com", "Cy", "", "great quality but late", "—"),
     ("d@x.com", "Di", "Beta Sneakers,  , Alpha Jacket", "I love it", ""),
   ).toDF("Email", "Name", "Products", "Q1 Opinion", "Q2  Delivery")
+
+  /** A survey CSV in A1's shape with 6 question columns over 5 bases: null
+    * and filler cells, emoji, a quoted multi-product cell, an empty Products
+    * cell, and "Q4 Support" / "Q4  Support" sanitizing to the same base. */
+  private val equivCsv = Seq(
+    "Email,Name,Products,Q1 Opinion,Q2 Delivery,Q3 Price,Q4 Support,Q4  Support,Q5 Design",
+    "a@x.com,Ana,\"Alpha Jacket, Beta Sneakers\",I love it,too expensive,n/a,great support 🙂,slow refund,me encanta el diseño",
+    "b@x.com,Bo,Alpha Jacket,n/a,llegó tarde el envío 🙂,,N/A,,\"quality, but late\"",
+    "c@x.com,Cy,,great quality but late,—,cheap and good,-,none,",
+    "d@x.com,Di,\"Beta Sneakers,  , Alpha Jacket\",I love it,,\"price is high, poor\",😕,\"terrible \"\"support\"\"\",I love it",
+    "e@x.com,Ed,Gamma Hat,,,,,,",
+  ).mkString("\n")
+
+  private def tmpDir(): String = {
+    Files.createDirectories(Paths.get("target/tmp"))
+    Files.createTempDirectory(Paths.get("target/tmp"), "survey").toAbsolutePath.toString
+  }
+
+  private def csvFile(dir: String, name: String, text: String): String = {
+    val f = Paths.get(dir, name)
+    Files.writeString(f, text)
+    f.toString
+  }
+
+  /** Rows as sorted strings: an order-insensitive comparison of every column. */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map(String.valueOf).mkString("\u0001")).toSeq.sorted
 
   test("productsArray: trim, drop empties, Unspecified fallback") {
     val arr = surveyDf.select(SurveyPipeline.productsArray(col("Products")).as("p"))
@@ -126,14 +155,14 @@ class SurveyPipelineSpec extends SparkSpec {
     assert(s("QB").isEmpty)
   }
 
-  test("columnWidths: clamp(0.9*maxLen, 12, 60) over header + probe rows") {
-    val df = Seq(
-      ("tiny", "x" * 100),
-      ("ab", "y" * 200),
-    ).toDF("narrow", "wide")
-    val w = SurveyPipeline.columnWidths(df, Seq("narrow", "wide"))
-    assert(w("narrow") == 12) // 0.9*6 → clamp up to 12
-    assert(w("wide") == 60)   // 0.9*200 → clamp down to 60
+  test("widthsOf: clamp(0.9*maxLen, 12, 60) over header + probe rows") {
+    val rows = Seq(
+      Seq("tiny", "x" * 100),
+      Seq("ab", "y" * 200),
+    )
+    val w = SurveyPipeline.widthsOf(Seq("narrow", "wide"), rows, 12, 60)
+    assert(w(0) == 12) // 0.9*6 → clamp up to 12
+    assert(w(1) == 60) // 0.9*200 → clamp down to 60
   }
 
   test("writeReport: wide partitioned by Product, summary alongside, read-back intact") {
@@ -153,5 +182,69 @@ class SurveyPipelineSpec extends SparkSpec {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], surveyDf.schema)
     val wide = SurveyPipeline.analyzeWide(empty, "retail", faithfulIds = true)
     assert(wide.count() == 0)
+  }
+
+  test("analyzeWide: inline demo ≡ cache join, cold and warm; updatedCache holds the wide keys") {
+    val dir = tmpDir()
+    val csv = csvFile(dir, "survey.csv", equivCsv)
+    val df = SurveyPipeline.readSurveyCsv(spark, csv)
+    val qcols = SurveyPipeline.questionColumns(df)
+    val winners = SurveyPipeline.questionBases(qcols)
+    val shadowed = qcols.diff(winners.map(_._2))
+    assert(winners.length == 5 && shadowed == Seq("Q4 Support")) // precondition
+
+    val cachePath = s"$dir/cache.parquet"
+    SurveyMain.run(spark, csv, "retail", s"$dir/out", cachePath)
+    val cold = new CacheJoinClassifier(
+      SurveyMain.loadCache(spark, s"$dir/absent.parquet"), DemoAnswerClassifier)
+    val warm = new CacheJoinClassifier(spark.read.parquet(cachePath), DemoAnswerClassifier)
+
+    val inline = SurveyPipeline.analyzeWide(df, "retail", DemoAnswerClassifier)
+    assert(inline.count() == 2 + 1 + 1 + 2 + 1)
+    for (clf <- Seq(cold, warm)) {
+      val wide = SurveyPipeline.analyzeWide(df, "retail", clf)
+      assert(wide.columns.toSeq == inline.columns.toSeq)
+      assert(rowsOf(wide) == rowsOf(inline))
+    }
+
+    // the keys the wide frame was classified from, read off its triplets
+    val wideKeys = winners.map { case (base, q) =>
+      inline.select(lit("retail"), lit(q), col(s"${base}_Answer"),
+        col(s"${base}_Sentiment"), col(s"${base}_Category"))
+    }.reduce(_ union _).distinct()
+    for (clf <- Seq(cold, warm)) {
+      val cache = SurveyMain.updatedCache(df, "retail", qcols, clf)
+      assert(rowsOf(cache.where(!col("question").isin(shadowed: _*))) == rowsOf(wideKeys))
+      // the shadowed header's answers are classified and cached too, as the
+      // reference's per-column loop does
+      assert(rowsOf(cache.where(col("question").isin(shadowed: _*))
+        .select("industry", "question", "answer")) ==
+        rowsOf(Classify.keys(df, "retail", shadowed.map(q => q -> col(q)))))
+    }
+    // the cache SurveyMain.run wrote is the same mapping
+    assert(rowsOf(spark.read.parquet(cachePath)) ==
+      rowsOf(SurveyMain.updatedCache(df, "retail", qcols, cold)))
+  }
+
+  test("cache-join analyzeWide scans the CSV at most 2q + 1 times, a constant more per question") {
+    val dir = tmpDir()
+    def scans(q: Int): Int = {
+      val header = Seq("Email", "Name", "Products") ++ (1 to q).map(i => s"Q$i")
+      val rows = (1 to 20).map(r => Seq(s"r$r@x.com", "N", "P1") ++ (1 to q).map(i => s"answer $r $i"))
+      val csv = csvFile(dir, s"scans_q$q.csv", (header +: rows).map(_.mkString(",")).mkString("\n"))
+      val df = SurveyPipeline.readSurveyCsv(spark, csv)
+      // a warm cache, as on a second run: with an empty one the optimizer
+      // drops the hits branch and would hide a plan that compounds
+      val cold = new CacheJoinClassifier(
+        SurveyMain.loadCache(spark, s"$dir/absent.parquet"), DemoAnswerClassifier)
+      val cachePath = s"$dir/cache_q$q.parquet"
+      SurveyMain.updatedCache(df, "retail", SurveyPipeline.questionColumns(df), cold)
+        .write.parquet(cachePath)
+      val clf = new CacheJoinClassifier(spark.read.parquet(cachePath), DemoAnswerClassifier)
+      PlanInspect(SurveyPipeline.analyzeWide(df, "retail", clf)).scansOf(s"scans_q$q.csv")
+    }
+    val Seq(s3, s4, s5) = Seq(3, 4, 5).map(scans)
+    assert(s5 <= 2 * 5 + 1)
+    assert(s5 - s4 == s4 - s3)
   }
 }

@@ -58,13 +58,13 @@ class TextExprsSpec extends SparkSpec {
     assert(one("carísimo", TextExprs.demoSentiment) == "Negative")
   }
 
-  test("classifyDemo: filler short-circuits to (Neutral, No Feedback)") {
-    val r = Seq("n/a").toDF("s").select(TextExprs.classifyDemo(col("s")).as("c"))
+  test("withClassification: filler short-circuits to (Neutral, No Feedback)") {
+    def classify(s: String) = TextExprs.withClassification(Seq(s).toDF("s"), col("s"), "c")
       .select("c.sentiment", "c.category").collect()(0)
+    val r = classify("n/a")
     assert(r.getString(0) == "Neutral" && r.getString(1) == "No Feedback")
     // em-dash is NOT filler (FIXTURES.md A1) — classifies as Neutral/General
-    val r2 = Seq("—").toDF("s").select(TextExprs.classifyDemo(col("s")).as("c"))
-      .select("c.sentiment", "c.category").collect()(0)
+    val r2 = classify("—")
     assert(r2.getString(0) == "Neutral" && r2.getString(1) == "General")
   }
 
