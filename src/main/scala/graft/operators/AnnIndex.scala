@@ -65,32 +65,49 @@ object AnnIndex {
       spark.createDataFrame(spark.sparkContext.parallelize(centRows.toSeq, 1), centSchema)
         .write.mode("overwrite").parquet(s"$dir/centroids"))
 
-    // cell-partitioned layout: each coarse cell is its own directory, so
-    // the query path's probe join can DYNAMICALLY PRUNE to the probed
-    // cells — at a production k the probe reads nProbe/k of the artifact
-    // from storage instead of scanning every code file.
-    //
-    // Encode in ONE row-local pass (round 17, guide §2.4): cell and every
-    // code_m are argmins of the SAME row's vector against driver-held
-    // centroid matrices — [[append]] always encoded this way; build
-    // previously joined five per-fit projections on vec_id (four corpus
-    // joins whose only product was column concatenation). Bit-identical:
-    // slice(toDouble(vec)) ≡ toDouble(slice(vec)) element-wise and the
-    // argmin arithmetic is the same native expression.
+    writeCodes(base.select(col("id").as("vec_id"), col("v")), coarse, fits, p,
+      dir, "overwrite")
+    Await.result(centW, Duration.Inf)
+  }
+
+  /** Encode `base` (vec_id, v) with the given quantizers and write it to
+    * the cell-partitioned `dir/codes` under `mode`. Cell-partitioned
+    * layout: each coarse cell is its own directory, so the query path's
+    * probe join can DYNAMICALLY PRUNE to the probed cells — at a
+    * production k the probe reads nProbe/k of the artifact from storage
+    * instead of scanning every code file.
+    *
+    * ONE row-local pass (round 17, guide §2.4): cell and every code_m are
+    * argmins of the SAME row's vector against driver-held centroid
+    * matrices (build once joined five per-fit projections on vec_id — four
+    * corpus joins whose only product was column concatenation).
+    * Bit-identical across build and append: slice(toDouble(vec)) ≡
+    * toDouble(slice(vec)) element-wise and the argmin arithmetic is the
+    * same native expression. */
+  private def writeCodes(base: DataFrame, coarse: Seq[Array[Double]],
+      subs: Seq[Seq[Array[Double]]], p: Params, dir: String, mode: String): Unit = {
+    val spark = base.sparkSession
     val (cellCol, _) = KMeansOp.argmin(col("v"),
       graft.plans.AnnNative.matrix(spark, coarse))
     val encoded = (0 until p.nSub).foldLeft(
-        base.select(col("id").as("vec_id"), col("v"))
-          .withColumn("cell", cellCol.cast("int"))) { (d, m) =>
+        base.withColumn("cell", cellCol.cast("int"))) { (d, m) =>
       val (cl, _) = KMeansOp.argmin(
         slice(col("v"), m * p.subDim + 1, p.subDim),
-        graft.plans.AnnNative.matrix(spark, fits(m)))
+        graft.plans.AnnNative.matrix(spark, subs(m)))
       d.withColumn(s"code$m", cl.cast("int"))
     }
     encoded
       .select(col("vec_id") +: (0 until p.nSub).map(m => col(s"code$m")) :+ col("cell"): _*)
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$dir/codes")
-    Await.result(centW, Duration.Inf)
+      .write.partitionBy("cell").mode(mode).parquet(s"$dir/codes")
+  }
+
+  /** The stored quantizers of the index at `dir`, by kind ("coarse",
+    * "sub<m>"), each in cid order (bounded collect: quantizer matrices are
+    * driver-state by design). */
+  private def centroids(spark: SparkSession, dir: String): String => Seq[Array[Double]] = {
+    val stored = spark.read.parquet(s"$dir/centroids")
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getSeq[Double](2).toArray))
+    kind => stored.filter(_._1 == kind).sortBy(_._2).map(_._3).toSeq
   }
 
   /** Append a NEW batch to an existing index using the STANDING
@@ -102,23 +119,9 @@ object AnnIndex {
     * corpus history; queries immediately see old + new rows. */
   def append(spark: SparkSession, dir: String, batch: DataFrame, id: Column,
       vec: Column, p: Params = Params()): Unit = {
-    val stored = spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    def centsOf(kind: String): Seq[Array[Double]] =
-      stored.filter(_._1 == kind).sortBy(_._2).map(_._3).toSeq
-    val base = batch.select(id.as("vec_id"), VectorExprs.toDouble(vec).as("v"))
-    val (cellCol, _) = KMeansOp.argmin(col("v"),
-      graft.plans.AnnNative.matrix(spark, centsOf("coarse")))
-    val encoded = (0 until p.nSub).foldLeft(
-        base.withColumn("cell", cellCol.cast("int"))) { (d, m) =>
-      val (cl, _) = KMeansOp.argmin(
-        slice(col("v"), m * p.subDim + 1, p.subDim),
-        graft.plans.AnnNative.matrix(spark, centsOf(s"sub$m")))
-      d.withColumn(s"code$m", cl.cast("int"))
-    }
-    encoded
-      .select(col("vec_id") +: (0 until p.nSub).map(m => col(s"code$m")) :+ col("cell"): _*)
-      .write.partitionBy("cell").mode("append").parquet(s"$dir/codes")
+    val cents = centroids(spark, dir)
+    writeCodes(batch.select(id.as("vec_id"), VectorExprs.toDouble(vec).as("v")),
+      cents("coarse"), (0 until p.nSub).map(m => cents(s"sub$m")), p, dir, "append")
   }
 
   /** Compact the cell-partitioned codes artifact: every cell whose parquet
@@ -165,11 +168,9 @@ object AnnIndex {
   def query(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
       nProbe: Int, p: Params = Params()): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val stored = spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getSeq[Double](2).toArray))
+    val cents = centroids(spark, dir)
     def matOf(kind: String): graft.plans.CentMatrix =
-      graft.plans.AnnNative.matrix(spark,
-        stored.filter(_._1 == kind).sortBy(_._2).map(_._3).toSeq)
+      graft.plans.AnnNative.matrix(spark, cents(kind))
     val coarse = matOf("coarse")
     val subs = (0 until p.nSub).map(m => matOf(s"sub$m"))
     require(coarse.numRows == p.kCoarse,

@@ -698,13 +698,11 @@ private[graft] object DedupQueries extends QueryBook {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         .where(size(split(TextExprs.cleanText(col("text")), " ")) >= 3)
-      val slices = (0 until 4).map(b =>
-        docs.where(pmod(col("doc_id"), lit(4)) === b))
+      val slices = modSlices(docs, "doc_id", 4)
       // both flatMapGroupsWithState stages are NoTimeout: output rows exist
       // only for input rows, so the trailing no-data batch appends zero
       // rows — skipped (r18)
-      QueryHelpers.streamReplaySlices(s, "q310", slices,
-          noDataBatch = false) { (stream, ckpt, out) =>
+      streamReplay(s, "q310", slices, noDataBatch = false) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.nearDupDocStream(stream, maxHamming = 3,
             shingleLen = 3, maxSigsPerBucket = 64, exactSig = true)
           .writeStream

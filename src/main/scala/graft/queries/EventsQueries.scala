@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.TextExprs
-import graft.sources.Tables
 import graft.queries.QueryHelpers._
 
 /** Event-stream analytics: sessions, funnels, retention, cohorts,
@@ -14,67 +13,6 @@ import graft.queries.QueryHelpers._
   * Query/oracle pairs split out of the SparkEntry book (round 13);
   * aggregated by [[graft.SparkEntry]]. Conventions in QueryHelpers. */
 private[graft] object EventsQueries extends QueryBook {
-
-  /** Shared replay rig for the streaming-under-oracle queries (q302/q305/
-    * q306/q307): reshard the events projection into 4 parquet files, stream
-    * them back ONE FILE PER MICRO-BATCH (real cross-batch state), run the
-    * caller's writeStream to `out`, and read the materialization back.
-    * Prior run dirs are reaped first — executions never overlap (Bench's
-    * warm-up pool runs each query once, timed passes are sequential,
-    * Verify is a separate JVM). The streaming execution runs under
-    * [[QueryHelpers.withStreamShuffle]]: at sf0.1 the dominant cost of a
-    * 4-batch replay is not the data but 4 × default-width state-store and
-    * shuffle tasks per stateful operator side, so the rig scopes
-    * `spark.sql.shuffle.partitions` down for the drain (values are
-    * partition-count invariant; a real deployment sizes the same knob to
-    * its key cardinality, not to a 4-file replay). */
-  /** `noDataBatch = false`: see [[QueryHelpers.streamReplaySlices]] — only
-    * for queries whose trailing no-data micro-batch provably appends zero
-    * rows (emission happens entirely while processing data batches). */
-  private def streamReplay(s: SparkSession, dir: String, tag: String,
-      timeOrdered: Boolean = false, noDataBatch: Boolean = true)(
-      project: DataFrame => DataFrame)(
-      run: (DataFrame, String, String) => org.apache.spark.sql.streaming.StreamingQuery)
-      : DataFrame = {
-    val root = new java.io.File(s"target/stream/$tag")
-    Option(root.listFiles()).foreach(_.foreach { d =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(d)
-    })
-    val base = s"target/stream/$tag/${java.util.UUID.randomUUID()}"
-    val src = s"$base/src"; val out = s"$base/out"
-    val projected = project(t(s, dir, "events"))
-    // timeOrdered: shard into contiguous TIME slices and replay them
-    // oldest-first (ascending mtimes break FileStreamSource's tie), so the
-    // event stream is in event-time order and a 0-delay watermark never
-    // late-drops — the arrival discipline a watermarked APPEND aggregation
-    // assumes. Hash-sharding (the default) interleaves the full time range
-    // into every batch, which is fine for complete-mode/unwatermarked ops
-    // (q302/q306) but makes everything after batch 1 late.
-    (if (timeOrdered) projected.repartitionByRange(4, col("ts"))
-     else projected.repartition(4, col("event_type")))
-      .write.mode("overwrite").parquet(src)
-    if (timeOrdered) {
-      val parts = new java.io.File(src).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1700000000000L + i * 60000L)
-      }
-    }
-    QueryHelpers.withStreamShuffle(s) { scoped =>
-      if (!noDataBatch)
-        scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val stream = scoped.readStream
-        .schema(scoped.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      val q = run(stream, s"$base/ckpt", out)
-      try { q.processAllAvailable() } finally q.stop()
-    }
-    s.read.parquet(out)
-  }
 
   val queries: ListMap[String, (SparkSession, String) => DataFrame] = ListMap(
     "q35_sessionize" -> ((s, dir) => {
@@ -837,7 +775,7 @@ private[graft] object EventsQueries extends QueryBook {
     "q349_stream_static_enrich" -> ((s, dir) => {
       // STREAM-STATIC enrichment under the oracle (VERDICT r16 #3 — the
       // one streaming shape that had only a spec): events replayed as a
-      // 4-batch file stream are joined IN the streaming plan to a static
+      // 3-batch file stream are joined IN the streaming plan to a static
       // customer dimension (EventStreams.enrichWithDim — broadcast under
       // the threshold, stateless, no watermark: the static side is
       // bounded so the stream never buffers), the enriched rows append
@@ -848,10 +786,10 @@ private[graft] object EventsQueries extends QueryBook {
       // ships to executors once, events never shuffle.
       val dim = t(s, dir, "customer")
         .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      streamReplay(s, dir, "q349") {
-        _.select(col("event_id"), col("user_id"), col("event_type"),
+      val ev = t(s, dir, "events")
+        .select(col("event_id"), col("user_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"), col("ts"))
-      } { (stream, ckpt, out) =>
+      streamReplay(s, "q349", modSlices(ev, "event_id", 3)) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.enrichWithDim(stream, dim, "user_id")
           .select(col("event_id"), col("event_type"), col("cents"),
             col("c_mktsegment"))
@@ -868,9 +806,11 @@ private[graft] object EventsQueries extends QueryBook {
 
     "q302_stream_window" -> ((s, dir) => {
       // Structured Streaming END-TO-END under the batch oracle: the events
-      // table is re-sharded into 4 parquet files and replayed as a FILE
-      // STREAM one file per micro-batch (a real multi-batch incremental
-      // aggregation, not a single-trigger replay); tumbling 1-hour windows
+      // table is sliced by event_id % 3 into 3 parquet files and replayed as
+      // a FILE STREAM one file per micro-batch (a real multi-batch
+      // incremental aggregation, not a single-trigger replay); every slice
+      // spans the whole time range, and complete mode keeps late rows, so
+      // the result does not depend on the slicing; tumbling 1-hour windows
       // aggregate across batches in the state store; complete-mode
       // foreachBatch overwrites the result parquet each trigger, so the
       // FINAL materialization equals the one-shot batch GROUP BY — the
@@ -880,10 +820,10 @@ private[graft] object EventsQueries extends QueryBook {
       // micro-batches cannot flip a bit.
       // complete mode: the trailing no-data batch overwrites the SAME full
       // aggregation — provably zero-output-delta, so it is skipped (r18)
-      streamReplay(s, dir, "q302", noDataBatch = false) {
-        _.select(col("ts"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-      } { (stream, ckpt, out) =>
+      val slices = modSlices(t(s, dir, "events"), "event_id", 3)
+        .map(_.select(col("ts"), col("event_type"),
+          round(col("value") * 100).cast("long").as("cents")))
+      streamReplay(s, "q302", slices, noDataBatch = false) { (stream, ckpt, out) =>
         stream
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -916,10 +856,12 @@ private[graft] object EventsQueries extends QueryBook {
       // same eviction predicate: last_ts + gap <= global max ts. Cents
       // discipline keeps
       // per-session sums exact across micro-batch state merges.
-      streamReplay(s, dir, "q305", timeOrdered = true) {
-        _.select(col("ts"), col("event_type"), col("user_id"),
-          round(col("value") * 100).cast("long").as("cents"))
-      } { (stream, ckpt, out) =>
+      // replayed as 4 event-time quarters, oldest first: the 0-delay
+      // watermark never late-drops a row of a later slice
+      val (slices, _) = timeQuarters(t(s, dir, "events")
+        .select(col("ts"), col("event_type"), col("user_id"),
+          round(col("value") * 100).cast("long").as("cents")))
+      streamReplay(s, "q305", slices) { (stream, ckpt, out) =>
         stream
           .withWatermark("ts", "0 seconds")
           .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
@@ -942,18 +884,19 @@ private[graft] object EventsQueries extends QueryBook {
 
     "q306_stream_state_totals" -> ((s, dir) => {
       // Arbitrary stateful processing under the batch oracle:
-      // mapGroupsWithState running (count, cents) per event type across 4
-      // micro-batches. Update-mode emissions land in an append sink with
-      // their batch id; totals are CUMULATIVE, so the latest emission per
-      // key IS the full total regardless of which batch last touched the
-      // key — that final slice must equal the one-shot batch GROUP BY,
-      // bit-for-bit (exact LONGs through the state store).
+      // mapGroupsWithState running (count, cents) per event type across 3
+      // micro-batches (event_id % 3 slices). Update-mode emissions land in
+      // an append sink with their batch id; totals are CUMULATIVE, so the
+      // latest emission per key IS the full total regardless of which batch
+      // last touched the key — that final slice must equal the one-shot
+      // batch GROUP BY, bit-for-bit (exact LONGs through the state store).
       // NoTimeout mapGroupsWithState in update mode: a no-data batch updates
       // no key, so it appends zero rows — skipped (r18)
-      val mat = streamReplay(s, dir, "q306", noDataBatch = false) {
-        _.select(col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-      } { (stream, ckpt, out) =>
+      val slices = modSlices(t(s, dir, "events"), "event_id", 3)
+        .map(_.select(col("event_type"),
+          round(col("value") * 100).cast("long").as("cents")))
+      val mat = streamReplay(s, "q306", slices, noDataBatch = false) {
+          (stream, ckpt, out) =>
         graft.streaming.EventStreams.runningCentTotals(stream)
           .writeStream
           .outputMode("update")
@@ -987,10 +930,10 @@ private[graft] object EventsQueries extends QueryBook {
       // from the same parquet), no rounding needed.
       // inner join: every matched pair emits while a DATA batch processes;
       // the trailing no-data batch only evicts state — skipped (r18)
-      streamReplay(s, dir, "q307", timeOrdered = true, noDataBatch = false) {
-        _.select(col("ts"), col("event_type"), col("user_id"),
-          col("event_id"), col("value"))
-      } { (stream, ckpt, out) =>
+      val (slices, _) = timeQuarters(t(s, dir, "events")
+        .select(col("ts"), col("event_type"), col("user_id"),
+          col("event_id"), col("value")))
+      streamReplay(s, "q307", slices, noDataBatch = false) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.errorPurchaseJoin(
             stream.where(col("event_type") === "error"),
             stream.where(col("event_type") === "purchase"))
@@ -1019,10 +962,10 @@ private[graft] object EventsQueries extends QueryBook {
       // sessions the final watermark never reached (strict <, the
       // GroupState timeout contract) — which the DuckDB twin states as
       // last_ts + gap < max ts.
-      streamReplay(s, dir, "q322", timeOrdered = true) {
-        _.select(col("ts"), col("user_id"),
-          round(col("value") * 100).cast("long").as("cents"))
-      } { (stream, ckpt, out) =>
+      val (slices, _) = timeQuarters(t(s, dir, "events")
+        .select(col("ts"), col("user_id"),
+          round(col("value") * 100).cast("long").as("cents")))
+      streamReplay(s, "q322", slices) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.closedCentSessions(stream)
           .writeStream
           .outputMode("append")
@@ -1076,22 +1019,15 @@ private[graft] object EventsQueries extends QueryBook {
       // END of batch (inclusive: expiry ≤ wm evicts), so back-to-back
       // file batches see the PREVIOUS batch's watermark — see q325Sql and
       // the Round14Spec boundary probes.
-      val ev = Tables.table(s, dir, "events")
-        .select(col("user_id"), col("event_type"), col("ts"),
-          unix_micros(col("ts")).as("tus"))
-      val mm = ev.agg(min("tus"), max("tus")).head
-      val (tmin, tmax) = (mm.getLong(0), mm.getLong(1))
-      val span = tmax - tmin
+      val (quarters, span) = timeQuarters(t(s, dir, "events")
+        .select(col("user_id"), col("event_type"), col("ts")))
       val delayMs = span / 1000L / 8L
-      val sl = ev.withColumn("b",
-        expr(s"((tus - ${tmin}L) * 4) div ${span + 1}L"))
-      val slices = (0 until 4).map(i => sl.where(col("b") === i)
-        .groupBy("user_id", "event_type").agg(min("ts").as("ts")))
+      val slices = quarters.map(
+        _.groupBy("user_id", "event_type").agg(min("ts").as("ts")))
       // dedup emits kept rows in THEIR data batch; the trailing no-data
       // batch only evicts expired state — skipped (r18), data-batch
       // watermark sequencing (the twin-calibrated part) is untouched
-      QueryHelpers.streamReplaySlices(s, "q325", slices,
-          noDataBatch = false) { (stream, ckpt, out) =>
+      streamReplay(s, "q325", slices, noDataBatch = false) { (stream, ckpt, out) =>
         stream
           .withWatermark("ts", s"$delayMs milliseconds")
           .dropDuplicatesWithinWatermark("user_id", "event_type")

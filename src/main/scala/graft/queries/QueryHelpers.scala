@@ -40,55 +40,37 @@ private[graft] object QueryHelpers {
       .groupBy(col(key))
       .agg(coalesce(sum(col("_bv")), lit(0L)).as("prev_cum"))
 
-  /** Scope `spark.sql.shuffle.partitions` down for a bounded stream replay
-    * and restore it afterwards. A 4-micro-batch replay at sf0.1 pays per
-    * batch per stateful operator one task per shuffle partition — at the
-    * session default that fixed fan-out, not the data, dominates the
-    * drain (r13 close bench: q307 17.7 s with the join itself sub-second).
-    * Measured at sf0.1 min-of-3 on q307 (stream-stream join, the worst
-    * case: 4 state stores per partition per batch): 32 partitions 17.7 s,
-    * 8 → 9.6 s, 4 → 8.4 s, 2 → 4.3 s, 1 → 5.5 s (loses the 2-way task
-    * overlap) — so 2. Safe to scope: Bench/Verify run queries sequentially
-    * on this session, each replay creates a FRESH checkpoint (the
-    * state-store partition count is pinned per checkpoint, never inherited
-    * across runs), and aggregation values are partition-count invariant. */
-  /** Run a streaming drain under a narrow shuffle width WITHOUT touching
-    * the shared session conf. Round-15 correction of the r14 set/restore
-    * version — the q309 root cause: Bench's pass-0 warm-up pool runs
-    * rigs CONCURRENTLY, and two overlapped set/restores interleave as
-    * A:read 32 → A:set 2 → B:read 2 → A:restore 32 → B:restore 2,
-    * leaving the GLOBAL conf at 2 for the rest of the suite — every
-    * later query silently ran 2-partition shuffles (q309's triangular
-    * join: 0.89 s isolated vs 3.9–4.7 s in-suite; q28 1.37 → 1.8).
-    * `newSession()` shares the SparkContext, catalog, and cached data but
-    * owns its SQL conf, so the narrow width is visible ONLY to plans built
-    * from the scoped session — no mutation, no race, nothing to restore.
-    * The callback must build its readStream (and everything the drain
-    * executes) from the session it receives. */
-  private[graft] def withStreamShuffle[T](s: SparkSession, n: Int = 2)(f: SparkSession => T): T = {
-    val scoped = s.newSession()
-    // newSession() inherits builder/SparkContext conf but NOT runtime SQL
-    // conf set on the parent (ADVICE r15: a caller's runtime override
-    // would silently vanish inside the drain) — copy the parent's runtime
-    // view across before narrowing. Static/immutable entries can't be
-    // re-set; they are identical in the clone anyway, so skip them.
-    s.conf.getAll.foreach { case (k, v) =>
-      try if (scoped.conf.get(k, null) != v) scoped.conf.set(k, v)
-      catch { case _: org.apache.spark.sql.AnalysisException => () }
-    }
-    scoped.conf.set("spark.sql.shuffle.partitions", n.toString)
-    f(scoped)
+  /** Slice `df` into `n` replay slices by a pure key: slice `b` holds the
+    * rows with `pmod(key, n) == b`. Batch membership is then a function of
+    * the data alone, which a DuckDB twin can recompute. */
+  private[graft] def modSlices(df: DataFrame, key: String, n: Int): Seq[DataFrame] =
+    (0 until n).map(b => df.where(pmod(col(key), lit(n)) === b))
+
+  /** Slice `ev` (which carries a `ts` column) into four contiguous
+    * event-time quarters, oldest first: row r lands in quarter
+    * `((unix_micros(ts) - tmin) * 4) div (span + 1)`. Equal timestamps share
+    * a quarter, so every row of slice i+1 is strictly later than every row
+    * of slice i and a watermark that trails the replay never late-drops.
+    * Returns the quarters and the corpus span in microseconds. */
+  private[graft] def timeQuarters(ev: DataFrame): (Seq[DataFrame], Long) = {
+    val mm = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head
+    val (tmin, span) = (mm.getLong(0), mm.getLong(1) - mm.getLong(0))
+    val q = expr(s"((unix_micros(ts) - ${tmin}L) * 4) div ${span + 1}L")
+    ((0 until 4).map(i => ev.where(q === i)), span)
   }
 
-  /** File-stream replay over EXPLICIT slices: writes slice `i` as the
-    * single file `b0i.parquet` with ascending mtimes (FileStreamSource
-    * replays oldest-first), runs the caller's writeStream with
-    * `maxFilesPerTrigger 1` (slice i == micro-batch i, deterministically —
-    * unlike a hash/range reshard, the batch membership is a pure function
-    * the DuckDB twin can recompute), drains, and reads back the
-    * materialization. Used by the streaming-under-oracle queries whose
-    * semantics depend on WHICH batch a row lands in (q310). */
-  /** `noDataBatch = false` disables the TRAILING no-data micro-batches
+  /** The one file-stream replay rig of the streaming-under-oracle queries.
+    * Writes slice `i` as the single file `b0i.parquet` with ascending mtimes
+    * (FileStreamSource replays oldest-first), runs the caller's writeStream
+    * with `maxFilesPerTrigger 1` (slice i == micro-batch i,
+    * deterministically — unlike a hash/range reshard, the batch membership
+    * is a pure function the DuckDB twin can recompute), drains, checks the
+    * replay invariant, and reads back the materialization. Prior run dirs
+    * under `target/stream/<tag>` are reaped first — executions of one tag
+    * never overlap (Bench's warm-up pool runs each query once, timed passes
+    * are sequential, Verify is a separate JVM).
+    *
+    * `noDataBatch = false` disables the TRAILING no-data micro-batches
     * (round 18, guide §1.2/§2.6: each one re-plans and re-runs the full
     * stateful plan for ~0.5 s and exists only to fire watermark-driven
     * emission/eviction). Legal ONLY for queries whose every output row is
@@ -98,9 +80,9 @@ private[graft] object QueryHelpers {
     * appends zero rows. Queries that EMIT on watermark passage (append-mode
     * session_window q305, EventTimeTimeout q322) must keep the default.
     * Data-batch watermark sequencing is untouched (the disabled batches
-    * only ever TRAIL the last data batch — the rig's replay-invariant
-    * guard already rejects interleaved ones). */
-  private[graft] def streamReplaySlices(s: SparkSession, tag: String,
+    * only ever TRAIL the last data batch — the replay-invariant guard
+    * already rejects interleaved ones). */
+  private[graft] def streamReplay(s: SparkSession, tag: String,
       slices: Seq[DataFrame], noDataBatch: Boolean = true)(
       run: (DataFrame, String, String) => org.apache.spark.sql.streaming.StreamingQuery)
       : DataFrame = {
@@ -152,41 +134,73 @@ private[graft] object QueryHelpers {
       java.nio.file.Files.move(part.toPath, dst.toPath)
       dst.setLastModified(1700000000000L + i * 60000L)
     }
-    withStreamShuffle(s) { scoped =>
-      // the guard below reads recentProgress, which is capped by
-      // numRecentProgressUpdates (default 100) — raise it above the batch
-      // count so a long replay can't undercount its own batches (ADVICE
-      // r15); slices.length data batches + headroom for no-data batches
-      scoped.conf.set("spark.sql.streaming.numRecentProgressUpdates",
-        (slices.length + 32).toString)
-      if (!noDataBatch)
-        scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val stream = scoped.readStream
-        .schema(scoped.read.parquet(src.getPath).schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src.getPath)
-      val q = run(stream, s"$base/ckpt", out)
-      try {
-        q.processAllAvailable()
-        // Replay-invariant guard (ADVICE r14): the streaming-under-oracle
-        // twins (q310/q323/q325) are calibrated to slice i == micro-batch
-        // i, back-to-back, with no no-data batch interleaved before the
-        // last data batch (an interleaved one would run state cleanup at
-        // a different watermark and silently desynchronize engine and
-        // oracle). Fail loudly if a trigger setting or Spark's batch
-        // planning ever changes that. Trailing no-data batches are
-        // harmless: no data follows them, so they cannot change emission.
-        val prog = q.recentProgress
-        val lastData = prog.lastIndexWhere(_.numInputRows > 0)
-        val dataBatches = prog.count(_.numInputRows > 0)
-        require(dataBatches == slices.length,
-          s"$tag replay: ${dataBatches} data micro-batches, expected ${slices.length}")
-        require(prog.take(lastData + 1).forall(_.numInputRows > 0),
-          s"$tag replay: a no-data batch interleaved before the last data batch " +
-            s"(batch rows: ${prog.map(_.numInputRows).mkString(",")})")
-      } finally q.stop()
+    // The drain runs on a CLONED session with a narrow shuffle width. A
+    // 4-micro-batch replay at sf0.1 pays per batch per stateful operator
+    // one task per shuffle partition — at the session default that fixed
+    // fan-out, not the data, dominated the drain (r13 close bench: q307
+    // 17.7 s with the join itself sub-second). Measured at sf0.1 min-of-3
+    // on q307 (stream-stream join, the worst case: 4 state stores per
+    // partition per batch): 32 partitions 17.7 s, 8 → 9.6 s, 4 → 8.4 s,
+    // 2 → 4.3 s, 1 → 5.5 s (loses the 2-way task overlap) — so 2. Values
+    // are partition-count invariant, and each replay creates a FRESH
+    // checkpoint (the state-store partition count is pinned per
+    // checkpoint, never inherited across runs).
+    //
+    // Why a clone and not set/restore on `s` (round 15, the q309 root
+    // cause): Bench's pass-0 warm-up pool runs rigs CONCURRENTLY, and two
+    // overlapped set/restores interleave as A:read 32 → A:set 2 → B:read 2
+    // → A:restore 32 → B:restore 2, leaving the GLOBAL conf at 2 for the
+    // rest of the suite — every later query silently ran 2-partition
+    // shuffles (q309's triangular join: 0.89 s isolated vs 3.9–4.7 s
+    // in-suite). `newSession()` shares the SparkContext, catalog, and
+    // cached data but owns its SQL conf, so the narrow width is visible
+    // ONLY to plans built from `scoped` — no mutation, no race, nothing to
+    // restore. The caller's writeStream is built on `stream`, which
+    // belongs to `scoped`.
+    val scoped = s.newSession()
+    // newSession() inherits builder/SparkContext conf but NOT runtime SQL
+    // conf set on the parent (ADVICE r15: a caller's runtime override
+    // would silently vanish inside the drain) — copy the parent's runtime
+    // view across before narrowing. Static/immutable entries can't be
+    // re-set; they are identical in the clone anyway, so skip them.
+    s.conf.getAll.foreach { case (k, v) =>
+      try if (scoped.conf.get(k, null) != v) scoped.conf.set(k, v)
+      catch { case _: org.apache.spark.sql.AnalysisException => () }
     }
+    scoped.conf.set("spark.sql.shuffle.partitions", "2")
+    // the guard below reads recentProgress, which is capped by
+    // numRecentProgressUpdates (default 100) — raise it above the batch
+    // count so a long replay can't undercount its own batches (ADVICE
+    // r15); slices.length data batches + headroom for no-data batches
+    scoped.conf.set("spark.sql.streaming.numRecentProgressUpdates",
+      (slices.length + 32).toString)
+    if (!noDataBatch)
+      scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val stream = scoped.readStream
+      .schema(scoped.read.parquet(src.getPath).schema)
+      .option("maxFilesPerTrigger", 1)
+      .option("latestFirst", "false")
+      .parquet(src.getPath)
+    val q = run(stream, s"$base/ckpt", out)
+    try {
+      q.processAllAvailable()
+      // Replay-invariant guard (ADVICE r14): every replay query's twin
+      // assumes slice i == micro-batch i, back-to-back, with no no-data
+      // batch interleaved before the last data batch (an interleaved one
+      // would run state cleanup at a different watermark and silently
+      // desynchronize engine and oracle). Fail loudly if a trigger setting
+      // or Spark's batch planning ever changes that. Trailing no-data
+      // batches are harmless: no data follows them, so they cannot change
+      // emission.
+      val prog = q.recentProgress
+      val lastData = prog.lastIndexWhere(_.numInputRows > 0)
+      val dataBatches = prog.count(_.numInputRows > 0)
+      require(dataBatches == slices.length,
+        s"$tag replay: ${dataBatches} data micro-batches, expected ${slices.length}")
+      require(prog.take(lastData + 1).forall(_.numInputRows > 0),
+        s"$tag replay: a no-data batch interleaved before the last data batch " +
+          s"(batch rows: ${prog.map(_.numInputRows).mkString(",")})")
+    } finally q.stop()
     s.read.parquet(out)
   }
 

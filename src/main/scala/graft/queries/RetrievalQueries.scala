@@ -211,9 +211,8 @@ private[graft] object RetrievalQueries extends QueryBook {
       // lost by the commit protocol breaks the hash.
       val ixDir = s"target/lex_index_ingest/${new java.io.File(dir).getName}"
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val slices = (0 until 4).map(b =>
-        docs.where(pmod(col("doc_id"), lit(4)) === b))
-      QueryHelpers.streamReplaySlices(s, "q350", slices) { (stream, ckpt, out) =>
+      val slices = modSlices(docs, "doc_id", 4)
+      streamReplay(s, "q350", slices) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.indexedIngest(stream, ixDir, out, ckpt)
       }
       graft.operators.LexIndex.query(s, ixDir,

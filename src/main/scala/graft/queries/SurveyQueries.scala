@@ -127,9 +127,8 @@ private[graft] object SurveyQueries extends QueryBook {
       val docs = t(s, dir, "documents").select(
         col("doc_id"), col("source").as("product"),
         concat(col("text"), tail).as("answer"))
-      val slices = (0 until 4).map(b =>
-        docs.where(pmod(col("doc_id"), lit(4)) === b))
-      QueryHelpers.streamReplaySlices(s, "q323", slices) { (stream, ckpt, out) =>
+      val slices = modSlices(docs, "doc_id", 4)
+      streamReplay(s, "q323", slices) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.classifiedSummary(stream, "retail",
           graft.operators.DemoAnswerClassifier, out, ckpt)
       }

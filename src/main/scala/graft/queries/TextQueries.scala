@@ -1006,9 +1006,8 @@ private[graft] object TextQueries extends QueryBook {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           concat(coalesce(col("text"), lit("")), tail).as("_t"))
-      val slices = (0 until 4).map(b =>
-        docs.where(pmod(col("doc_id"), lit(4)) === b))
-      QueryHelpers.streamReplaySlices(s, "q345", slices) { (stream, ckpt, out) =>
+      val slices = modSlices(docs, "doc_id", 4)
+      streamReplay(s, "q345", slices) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.redactedSummary(stream, pats, "[X]", out, ckpt)
       }
         .groupBy("source")
@@ -1071,9 +1070,8 @@ private[graft] object TextQueries extends QueryBook {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           concat(coalesce(col("text"), lit("")), tail).as("_t"))
-      val slices = (0 until 4).map(b =>
-        docs.where(pmod(col("doc_id"), lit(4)) === b))
-      QueryHelpers.streamReplaySlices(s, "q351", slices) { (stream, ckpt, out) =>
+      val slices = modSlices(docs, "doc_id", 4)
+      streamReplay(s, "q351", slices) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.typedRedactedSummary(stream, pats, masks,
           Seq("<EMAIL>", "<PHONE>", "<ID>"), out, ckpt)
       }

@@ -20,17 +20,22 @@ class Round13Spec extends SparkSpec {
     r.unpersist()
   }
 
-  test("q302: the file stream replays MULTIPLE micro-batches (incremental state)") {
-    // the query reshards the source into 4 files and triggers one file per
-    // micro-batch; at least 2 non-empty shards must exist for the run to
-    // have exercised cross-batch state merge
-    SparkEntry.queries("q302_stream_window")(spark, sf()).count()
-    val base = new java.io.File("target/stream/q302")
-    val runs = base.listFiles().filter(_.isDirectory).sortBy(_.lastModified)
-    val src = new java.io.File(runs.last, "src")
-    val shards = src.listFiles().count(f =>
-      f.getName.startsWith("part-") && f.length() > 0)
-    assert(shards >= 2, s"expected >= 2 source shards, got $shards")
+  test("q302, q306, q349: the file stream replays exactly 3 micro-batches") {
+    // each query slices the events by event_id % 3; the replay rig writes
+    // one source file b<i>.parquet per slice, triggers one file per
+    // micro-batch, and its guard fails the query unless every file ran as
+    // one data batch — so 3 non-empty files are 3 batches of cross-batch
+    // state merge
+    for (q <- Seq("q302_stream_window", "q306_stream_state_totals",
+        "q349_stream_static_enrich")) {
+      SparkEntry.queries(q)(spark, sf()).count()
+      val base = new java.io.File(s"target/stream/${q.take(4)}")
+      val runs = base.listFiles().filter(_.isDirectory).sortBy(_.lastModified)
+      val src = new java.io.File(runs.last, "src")
+      val files = src.listFiles().count(f =>
+        f.getName.matches("b\\d+\\.parquet") && f.length() > 0)
+      assert(files === 3, s"$q: expected 3 replay source files, got $files")
+    }
   }
 
   test("q284: prior moments are partition-order invariant (exact-integer path)") {

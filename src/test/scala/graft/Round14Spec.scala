@@ -54,8 +54,8 @@ class Round14Spec extends SparkSpec {
       .writeStream.outputMode("append").format("memory").queryName("ccs").start()
     try {
       // ONE batch containing TWO complete sessions for user 1 (40-min gap)
-      // plus the open tail — the in-batch split the old closedSessions
-      // missed — and user 2's lone event.
+      // plus the open tail — the in-batch split that buffering a whole
+      // batch into one session would miss — and user 2's lone event.
       mem.addData((1L, ts(0), 100L), (1L, ts(10), 50L),
         (1L, ts(50), 10L), (1L, ts(120), 7L), (2L, ts(0), 1L))
       q.processAllAvailable()

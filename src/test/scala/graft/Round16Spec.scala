@@ -191,11 +191,11 @@ class Round16Spec extends SparkSpec {
 
   // ---------------- replay guard ----------------
 
-  test("streamReplaySlices fails fast and actionably on an empty slice") {
+  test("streamReplay fails fast and actionably on an empty slice") {
     val docs = spark.read.parquet(sf() + "/documents.parquet")
       .select(col("doc_id"), col("source"), col("text"))
     val e = intercept[IllegalArgumentException] {
-      graft.queries.QueryHelpers.streamReplaySlices(spark, "r16emptyslice",
+      graft.queries.QueryHelpers.streamReplay(spark, "r16emptyslice",
         Seq(docs.limit(5), docs.where(lit(false)))) { (stream, ckpt, out) =>
         stream.writeStream.option("checkpointLocation", ckpt)
           .format("parquet").option("path", out).start()

@@ -61,18 +61,18 @@ class StreamingMultimodalSpec extends SparkSpec {
 
   test("mapGroupsWithState keeps running totals across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, Double)]
-    val df = mem.toDF().toDF("event_type", "value")
-    val q = EventStreams.runningTotals(df)
+    val mem = MemoryStream[(String, Long)]
+    val df = mem.toDF().toDF("event_type", "cents")
+    val q = EventStreams.runningCentTotals(df)
       .writeStream.outputMode("update").format("memory").queryName("rt").start()
     try {
-      mem.addData(("click", 1.0), ("click", 2.0), ("view", 5.0))
+      mem.addData(("click", 100L), ("click", 200L), ("view", 500L))
       q.processAllAvailable()
-      mem.addData(("click", 3.0))
+      mem.addData(("click", 300L))
       q.processAllAvailable()
       val clicks = spark.table("rt").collect().filter(_.getString(0) == "click")
       assert(clicks.map(_.getLong(1)).max == 3) // state carried across batches
-      assert(math.abs(clicks.map(_.getDouble(2)).max - 6.0) < 1e-9)
+      assert(clicks.map(_.getLong(2)).max == 600L)
     } finally q.stop()
   }
 
@@ -100,24 +100,24 @@ class StreamingMultimodalSpec extends SparkSpec {
 
   test("flatMapGroupsWithState emits a session only when the watermark closes it") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, Double)]
-    val df = mem.toDF().toDF("user_id", "ts", "value")
-    val q = EventStreams.closedSessions(df, gapMs = 10L * 60 * 1000)
+    val mem = MemoryStream[(Long, Timestamp, Long)]
+    val df = mem.toDF().toDF("user_id", "ts", "cents")
+    val q = EventStreams.closedCentSessions(df, gapMs = 10L * 60 * 1000)
       .writeStream.outputMode("append").format("memory").queryName("cs").start()
     try {
       mem.addData(
-        (1L, Timestamp.valueOf("2024-01-01 00:00:00"), 2.0),
-        (1L, Timestamp.valueOf("2024-01-01 00:01:00"), 3.0))
+        (1L, Timestamp.valueOf("2024-01-01 00:00:00"), 200L),
+        (1L, Timestamp.valueOf("2024-01-01 00:01:00"), 300L))
       q.processAllAvailable()
       assert(spark.table("cs").count() == 0) // watermark 00:01 < timeout 00:11
       // user 2 at 01:00 pushes the watermark past user 1's 00:11 timeout
-      mem.addData((2L, Timestamp.valueOf("2024-01-01 01:00:00"), 1.0))
+      mem.addData((2L, Timestamp.valueOf("2024-01-01 01:00:00"), 100L))
       q.processAllAvailable()
       val rows = spark.table("cs").collect()
       assert(rows.length == 1) // user 1 closed; user 2 (timeout 01:10) still open
       assert(rows.head.getAs[Long]("user_id") == 1L)
       assert(rows.head.getAs[Long]("n_events") == 2L)
-      assert(math.abs(rows.head.getAs[Double]("session_value") - 5.0) < 1e-9)
+      assert(rows.head.getAs[Long]("cents") == 500L)
       assert(rows.head.getAs[Long]("last_ts_ms") - rows.head.getAs[Long]("first_ts_ms") == 60000L)
     } finally q.stop()
   }
