@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Per-round benchmark: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Queries are materialized through the `noop` sink —
   * a `count()` would let Catalyst prune the projected expressions away and
@@ -17,10 +19,14 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession("graft-bench", GraftSession.cpus(32))
-    val runQuery: String => Unit = name =>
+    // A failed query keeps its wall time in the line, and its name goes into
+    // the trailing "failed" field, so a total with failures in it says so.
+    val failed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def runQuery(name: String): Unit =
       try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed.add(name)
       }
     // Optional comma-separated name-prefix filter (local iteration only;
     // the driver never sets it, so round benches always cover the suite).
@@ -109,8 +115,12 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val shardField = shard.map { case (i, n) => s""","shard":"$i/$n"""" }.getOrElse("")
+    // last, after sf and shard: the field a reader must see survives a
+    // head-truncated capture
+    val failedField = failed.asScala.toSeq.sorted
+      .map(n => "\"" + n.takeWhile(_ != '_') + "\"").mkString(""","failed":[""", ",", "]")
     val line =
-      f"""{"queries":$qs,"metric":"total","value":$total%.3f,"unit":"sec","passes":${passes.size},"sf":"$sfDir"$shardField}"""
+      f"""{"queries":$qs,"metric":"total","value":$total%.3f,"unit":"sec","passes":${passes.size},"sf":"$sfDir"$shardField$failedField}"""
     println(line)
     // Round 18 (VERDICT r17 #9): the round-over-round perf comparison died
     // once to the driver's stdout capture clipping this line — persist the

@@ -111,11 +111,35 @@ object SurveyPipeline {
     * scan → explode is the only shuffle-free fan-out; classification stays in
     * codegen via the demo expression classifier (or is delegated to `clf`,
     * which computes on distinct keys and joins back — O7).
+    *
+    * The distinct-key path returns the frame pinned once (an eager
+    * `localCheckpoint`): the report sinks run five actions over it, and a
+    * lazy frame would re-run the CSV scan, the cache joins and the
+    * classifier for each. `localCheckpoint`, not `cache()`: a cached plan is
+    * matched by plan, so a later run over the same CSV and cache paths would
+    * reuse this run's classification even after either file changed; the
+    * checkpoint's blocks belong to this frame and are released when it is
+    * garbage collected. The inline demo path stays lazy: it has no join to
+    * repeat, and its callers run one action over it.
     */
   def analyzeWide(
       dfIn: DataFrame,
       industry: String,
       clf: AnswerClassifier = DemoAnswerClassifier,
+      faithfulIds: Boolean = false,
+      idCol: Option[Column] = None,
+      pandasNa: Boolean = false,
+  ): DataFrame = {
+    val wide = wideFrame(dfIn, industry, clf, faithfulIds, idCol, pandasNa)
+    if (clf == DemoAnswerClassifier) wide else wide.localCheckpoint()
+  }
+
+  /** [[analyzeWide]]'s lazy plan, before the distinct-key path's pin (the
+    * plan-shape tests read its scans). */
+  private[graft] def wideFrame(
+      dfIn: DataFrame,
+      industry: String,
+      clf: AnswerClassifier,
       faithfulIds: Boolean = false,
       idCol: Option[Column] = None,
       pandasNa: Boolean = false,

@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end CLI flow: CSV in → wide/summary parquet out, memo-cache
   * persisted and effective on the second run. */
@@ -44,8 +50,63 @@ class SurveyMainSpec extends SparkSpec {
     assert(r.nonEmpty && r.forall(_.getAs[String]("Q1_Opinion_Sentiment") == "Negative"))
   }
 
+  test("run: the xlsx sink adds no CSV scan, the wide frame is classified once") {
+    val base = Paths.get("target/tmp/survey_main_scans")
+    Files.createDirectories(base)
+    val csv = Files.writeString(base.resolve("survey.csv"), Seq(
+      "Email,Name,Products,Q1 Opinion,Q2 Service",
+      "a@x.com,Ana,\"Alpha,Beta\",I love it,too expensive",
+      "b@x.com,Bo,Alpha,n/a,great support team",
+      "c@x.com,Cy,,late again,I love it").mkString("\n")).toString
+    val cache = s"$base/cache.parquet"
+    def csvScans(xlsx: Option[String]): Int = fileScans("survey.csv") {
+      SurveyMain.run(spark, csv, "retail", s"$base/out", cache, xlsx)
+    }
+    csvScans(None) // warms the cache, so both counted runs hit it
+    val parquetOnly = csvScans(None)
+    assert(parquetOnly > 0)
+    assert(csvScans(Some(s"$base/report.xlsx")) == parquetOnly)
+  }
+
   test("parseArgs handles the reference's flag shapes") {
     val m = SurveyMain.parseArgs(Array("--input", "a.csv", "--industry", "retail", "--max-chars", "600"))
     assert(m == Map("input" -> "a.csv", "industry" -> "retail", "max-chars" -> "600"))
+  }
+
+  /** File scans of `table` over every SQL action `body` runs, counted on the
+    * executed plans a [[QueryExecutionListener]] receives. */
+  private def fileScans(table: String)(body: => Unit): Int = {
+    val scans = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        scans.addAndGet(PlanInspect(qe.executedPlan).scansOf(table))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; drainListenerBus() }
+    finally spark.listenerManager.unregister(listener)
+    scans.get
+  }
+
+  /** Returns once every listener event posted so far has been delivered: a
+    * marker job's end event reaches a listener after every earlier event of
+    * the shared queue, which also carries the SQL executions. */
+  private def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val markerKey = "graft.test.marker"
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var markerJob = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(markerKey) != null)) markerJob = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) done.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(markerKey, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(markerKey, null)
+      assert(done.await(60, TimeUnit.SECONDS), "the listener bus did not drain in 60 s")
+    } finally sc.removeSparkListener(listener)
   }
 }

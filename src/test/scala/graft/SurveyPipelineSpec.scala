@@ -3,7 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{CacheJoinClassifier, Classify, DemoAnswerClassifier, SurveyPipeline}
+import org.apache.spark.util.LongAccumulator
+import graft.operators.{AnswerClassifier, CacheJoinClassifier, Classify, DemoAnswerClassifier, SurveyPipeline}
 
 /** The reference dataflow on an adversarial synthetic survey frame
   * (FIXTURES.md A1 characteristics: multi-product, filler variants, emoji,
@@ -241,10 +242,39 @@ class SurveyPipelineSpec extends SparkSpec {
       SurveyMain.updatedCache(df, "retail", SurveyPipeline.questionColumns(df), cold)
         .write.parquet(cachePath)
       val clf = new CacheJoinClassifier(spark.read.parquet(cachePath), DemoAnswerClassifier)
-      PlanInspect(SurveyPipeline.analyzeWide(df, "retail", clf)).scansOf(s"scans_q$q.csv")
+      // the classify plan itself: analyzeWide returns it pinned, with no scan left
+      PlanInspect(SurveyPipeline.wideFrame(df, "retail", clf)).scansOf(s"scans_q$q.csv")
     }
     val Seq(s3, s4, s5) = Seq(3, 4, 5).map(scans)
     assert(s5 <= 2 * 5 + 1)
     assert(s5 - s4 == s4 - s3)
+  }
+
+  test("the report sinks classify no key again: each cache miss is classified once per run") {
+    val dir = tmpDir()
+    val df = SurveyPipeline.readSurveyCsv(spark, csvFile(dir, "survey.csv", equivCsv))
+    val evaluated = spark.sparkContext.longAccumulator("classified keys")
+    val clf = new CacheJoinClassifier(
+      SurveyMain.loadCache(spark, s"$dir/absent.parquet"),
+      new SurveyPipelineSpec.CountingClassifier(evaluated))
+    val wide = SurveyPipeline.analyzeWide(df, "retail", clf)
+    SurveyPipeline.writeReport(wide, SurveyPipeline.buildSummary(wide), s"$dir/out")
+    SurveyPipeline.writeExcelReport(wide, s"$dir/report.xlsx")
+    // a cold cache misses every key: the distinct answers of each classified column
+    val misses = SurveyPipeline.questionBases(SurveyPipeline.questionColumns(df)).map {
+      case (_, q) => Classify.keys(df, "retail", Seq(q -> col(q))).count()
+    }.sum
+    assert(evaluated.value == misses)
+  }
+}
+
+object SurveyPipelineSpec {
+  /** The demo classifier, counting every key it evaluates. */
+  final class CountingClassifier(evaluated: LongAccumulator) extends AnswerClassifier {
+    override def classify(keys: DataFrame): DataFrame = {
+      val acc = evaluated
+      val counted = udf { (answer: String) => acc.add(1); answer }.asNondeterministic()
+      DemoAnswerClassifier.classify(keys.withColumn("answer", counted(col("answer"))))
+    }
   }
 }
