@@ -14,7 +14,8 @@ import pandas as pd
 SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("-") else "/root/testdata/sf0.01"
 ONLY = sys.argv[sys.argv.index("--only") + 1] if "--only" in sys.argv else ""
 PREFIXES = [p for p in ONLY.split(",") if p]
-OUT = "/root/repo/target/verify_out"
+ROOT = Path(__file__).resolve().parent.parent  # the checkout this script belongs to
+OUT = str(ROOT / "target" / "verify_out")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 # Per-query oracle wall cap, twice the slowest oracle seen to finish: the
@@ -35,7 +36,7 @@ if "--skip-verify" not in sys.argv:
             shutil.rmtree(d)
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT} {",".join(PREFIXES)}'.rstrip()],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+        cwd=ROOT, capture_output=True, text=True, timeout=1800)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-15:])
     if r.returncode != 0:
         print("VERIFY FAILED:\n", tail); sys.exit(1)

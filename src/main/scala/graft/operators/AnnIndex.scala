@@ -6,6 +6,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExprs
+import graft.sources.Tables
 
 /** Persist-and-reuse IVFADC index (Jégou et al. 2011 §IV): a real 100 TB
   * ANN deployment fits its quantizers ONCE, writes the artifact, and serves
@@ -14,8 +15,9 @@ import graft.functions.VectorExprs
   * oracle-determinism). This operator splits the lifecycle:
   *
   *  - [[build]] fits the coarse quantizer + per-subspace PQ codebooks
-  *    (KMeansOp.fit, concurrent driver threads — q115's shape), encodes
-  *    the corpus, and writes TWO parquet tables under `dir`:
+  *    (one KMeansOp.fitViews Lloyd loop: 1 + iters jobs for all 1 + nSub
+  *    codebooks — q115's shape), encodes the corpus, and writes TWO
+  *    parquet tables under `dir`:
   *      `centroids` (kind, cid, c)  — k×dim rows per quantizer, driver-tiny
   *      `codes`     (vec_id, cell, code0..code{nSub-1}) — one row per
   *                   corpus vector, the 100 TB-side artifact (nSub bytes of
@@ -42,13 +44,8 @@ object AnnIndex {
   def build(e: DataFrame, id: Column, vec: Column, dir: String,
       p: Params = Params()): Unit = {
     val spark = e.sparkSession
-    val coarseF = Future(KMeansOp.fit(e, id, vec, k = p.kCoarse, iters = p.iters))
-    val fitsF = Future.sequence((0 until p.nSub).map { m => Future {
-      KMeansOp.fit(
-        e, id, slice(vec, m * p.subDim + 1, p.subDim), k = p.kCode, iters = p.iters)._1
-    }})
-    val (coarse, base) = Await.result(coarseF, Duration.Inf)
-    val fits = Await.result(fitsF, Duration.Inf)
+    val (coarse +: fits, base) = KMeansOp.fitViews(e, id, vec,
+      ((v: Column) => v, p.kCoarse) +: KMeansOp.subspaces(p.nSub, p.subDim, p.kCode), p.iters)
 
     val centRows =
       coarse.zipWithIndex.map { case (c, i) => Row("coarse", i, c.toSeq) } ++
@@ -105,7 +102,7 @@ object AnnIndex {
     * "sub<m>"), each in cid order (bounded collect: quantizer matrices are
     * driver-state by design). */
   private def centroids(spark: SparkSession, dir: String): String => Seq[Array[Double]] = {
-    val stored = spark.read.parquet(s"$dir/centroids")
+    val stored = Tables.parquet(spark, s"$dir/centroids")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getSeq[Double](2).toArray))
     kind => stored.filter(_._1 == kind).sortBy(_._2).map(_._3).toSeq
   }
@@ -149,7 +146,7 @@ object AnnIndex {
       fs.delete(tmp, true)
       // hash-repartition on the partition column: every row of a cell
       // lands in one task, so each rewritten cell is exactly one fragment
-      spark.read.parquet(s"$dir/codes")
+      Tables.parquet(spark, s"$dir/codes")
         .where(col("cell").isin(over.map(Integer.valueOf): _*))
         .repartition(col("cell"))
         .write.partitionBy("cell").mode("overwrite").parquet(tmp.toString)
@@ -175,7 +172,7 @@ object AnnIndex {
     val subs = (0 until p.nSub).map(m => matOf(s"sub$m"))
     require(coarse.numRows == p.kCoarse,
       s"index at $dir has ${coarse.numRows} coarse cells, params say ${p.kCoarse}")
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = Tables.parquet(spark, s"$dir/codes")
     // ‖q‖² is constant per query — computed ONCE on the query row, before
     // the probe explode, never per candidate; and the probe side sheds the
     // raw qv once the LUTs are built, so the (broadcast) join input is

@@ -38,6 +38,12 @@ import graft.functions.VectorExprs
   * full-corpus fit, which keeps the unrolled DuckDB Lloyd twins valid
   * (Round11Spec pins this precondition at sf0.01).
   *
+  * Several codebooks over views of one vector — an IVFADC index's coarse
+  * quantizer and its per-subspace PQ codebooks — share ONE Lloyd loop
+  * ([[fitViews]]): one sample, one seed collect, one aggregate job per
+  * iteration for all of them, each codebook bit-identical to its own
+  * [[fit]].
+  *
   * Assignment uses score_k = |c_k|² − 2·v·c_k (adding the row-constant
   * |v|² recovers the squared L2 distance), so nearest-centroid needs no
   * per-centroid subtraction loop and the squared distance comes back for
@@ -80,44 +86,95 @@ object KMeansOp {
   /** Runs `iters` centroid updates on the bounded md5-draw sample (object
     * scaladoc); returns the learned k×dim codebook AND the (uncached) full
     * (id, v) projection, so callers can derive assignments, distances, or
-    * (PQ) asymmetric lookups without re-running Lloyd. */
+    * (PQ) asymmetric lookups without re-running Lloyd. The one-view case
+    * of [[fitViews]]. */
   def fit(df: DataFrame, id: Column, vec: Column, k: Int = 4,
       iters: Int = 2, fitSampleCap: Int = DefaultFitSampleCap): (Seq[Array[Double]], DataFrame) = {
+    val (codebooks, base) = fitViews(df, id, vec, Seq((v => v, k)), iters, fitSampleCap)
+    (codebooks.head, base)
+  }
+
+  /** One codebook per view of `vec` — view j is `views(j)._1` applied to
+    * the double vector, fit with `k = views(j)._2` — in ONE Lloyd loop.
+    * Each codebook is bit-identical to `fit` of that view alone (an
+    * IVFADC index's coarse quantizer and its per-subspace PQ codebooks are
+    * such views): the md5 sample is drawn once at the largest cap and
+    * cached as one partition, view j fits on its first
+    * `max(fitSampleCap, 16·k_j)` rows (exactly the sample `fit` would
+    * draw), the seeds come back in one collect per distinct cap, and each
+    * iteration is one aggregate over `explode`d (view, cluster, x) records
+    * grouped by (view, cluster). Every (view, cluster) sum adds the same
+    * sample rows in the same order as the one-view fit, so the rounded
+    * centroids agree to the bit. Jobs: 1 + iters when the views share a k,
+    * whatever their number. Returns the codebooks in view order and the
+    * (uncached) full (id, v) projection. */
+  def fitViews(df: DataFrame, id: Column, vec: Column,
+      views: Seq[(Column => Column, Int)], iters: Int = 2,
+      fitSampleCap: Int = DefaultFitSampleCap): (Seq[Seq[Array[Double]]], DataFrame) = {
     val base = df.select(id.as("id"), VectorExprs.toDouble(vec).as("v"))
-    val cap = math.max(fitSampleCap, 16 * k)
+    val caps = views.map { case (_, k) => math.max(fitSampleCap, 16 * k) }
     // bounded deterministic draw: lowest md5(id) first, id tie-break — a
-    // TakeOrdered over the corpus (one pass, cap rows kept), never a sort
+    // TakeOrdered over the corpus (one pass, cap rows kept), never a sort.
+    // The sample is ONE partition in draw order (the local re-sort costs
+    // no exchange; it only matters when the input's row bound let the
+    // optimizer drop the limit for a global sort over several partitions),
+    // so `_rank` is the row's position in the draw and a view's sample is
+    // the prefix below its cap
+    val draw = Seq(col("_draw").asc, col("id").asc)
     val sample = base
       .withColumn("_draw", md5(col("id").cast("string")))
-      .orderBy(col("_draw").asc, col("id").asc).limit(cap)
-      .drop("_draw").cache()
-    var centroids: Seq[Array[Double]] = sample.orderBy("id").limit(k).collect()
-      .map(_.getSeq[Double](1).toArray).toSeq
-    require(centroids.length == k,
-      s"fit sample (${centroids.length} rows) smaller than k=$k — raise fitSampleCap")
-    // dim read off the seed rows (round 17: the seed collect already has
-    // a full vector — the previous separate size(v) head() was one more
-    // serial driver job per fit, five fits per index build)
-    val dim = centroids.head.length
+      .orderBy(draw: _*).limit(caps.max).coalesce(1).sortWithinPartitions(draw: _*)
+      .drop("_draw").withColumn("_rank", monotonically_increasing_id()).cache()
+    // seeds = the k lowest-id vectors of each view's sample: one ordered
+    // collect per distinct cap, a TakeOrdered over the cached sample
+    val seeds: Map[Int, Seq[Array[Double]]] = caps.distinct.flatMap { c =>
+      val js = caps.indices.filter(caps(_) == c)
+      val rows = sample.where(col("_rank") < c).orderBy("id")
+        .limit(js.map(views(_)._2).max)
+        .select(js.map(j => views(j)._1(col("v"))): _*).collect()
+      js.zipWithIndex.map { case (j, x) =>
+        j -> rows.take(views(j)._2).map(_.getSeq[Double](x).toArray).toSeq }
+    }.toMap
+    var codebooks: Seq[Seq[Array[Double]]] = views.indices.map { j =>
+      require(seeds(j).length == views(j)._2,
+        s"fit sample (${seeds(j).length} rows) smaller than k=${views(j)._2} — raise fitSampleCap")
+      seeds(j)
+    }
+    // dims read off the seed rows (round 17: the seed collect already has
+    // full vectors — a separate size(v) head() was one more serial job)
+    val dims = codebooks.map(_.head.length)
     for (_ <- 1 to iters) {
-      val (cl, _) = argmin(col("v"), centroids)
-      val dimSums = (0 until dim).map(i =>
-        sum(element_at(col("v"), i + 1)).as(s"_s$i"))
-      val sums = sample.select(cl.as("cluster"), col("v"))
-        .groupBy("cluster")
+      val current = codebooks
+      // `get` is null past a shorter view's end, and sum skips the nulls
+      val dimSums = (0 until dims.max).map(i => sum(get(col("r.x"), lit(i))).as(s"_s$i"))
+      // one record per (sample row, view whose sample holds it)
+      val records = array(views.zipWithIndex.map { case ((view, _), j) =>
+        val x = view(col("v"))
+        when(col("_rank") < caps(j),
+          struct(lit(j).as("view"), argmin(x, current(j))._1.as("cluster"), x.as("x")))
+      }: _*)
+      val sums = sample.select(explode(records).as("r")).where(col("r").isNotNull)
+        .groupBy(col("r.view"), col("r.cluster"))
         .agg(count(lit(1)).as("_n"), dimSums: _*)
         .collect()
-      val byCluster = sums.map(r => r.getInt(0) -> r).toMap
-      centroids = (0 until k).map { c =>
-        byCluster.get(c).map { r =>
-          val n = r.getLong(1).toDouble
-          Array.tabulate(dim)(i => round6(r.getDouble(2 + i) / n))
-        }.getOrElse(centroids(c)) // empty cluster keeps its previous centroid
+      val byCluster = sums.map(r => (r.getInt(0), r.getInt(1)) -> r).toMap
+      codebooks = current.zipWithIndex.map { case (cents, j) =>
+        cents.indices.map { c =>
+          byCluster.get((j, c)).map { r =>
+            val n = r.getLong(2).toDouble
+            Array.tabulate(dims(j))(i => round6(r.getDouble(3 + i) / n))
+          }.getOrElse(cents(c)) // empty cluster keeps its previous centroid
+        }
       }
     }
     sample.unpersist(false)
-    (centroids, base)
+    (codebooks, base)
   }
+
+  /** The `n` consecutive `dim`-wide subspaces of a vector as [[fitViews]]
+    * views of `k` centroids each — a product quantizer's codebooks. */
+  def subspaces(n: Int, dim: Int, k: Int): Seq[(Column => Column, Int)] =
+    (0 until n).map(m => ((v: Column) => slice(v, m * dim + 1, dim), k))
 
   /** Runs `iters` centroid updates then a final assignment.
     * Returns (id, cluster, sq_dist) with sq_dist rounded to 4 dp. */

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Persist-and-reuse LEXICAL (BM25 inverted) index — the [[AnnIndex]]
   * build-once/query-many discipline applied to sparse retrieval (VERDICT
@@ -325,7 +326,7 @@ object LexIndex {
         s"torn stats object under $dir/$statsGen")
       (kv("n_docs").toLong, kv("dl_sum").toLong, kv("n_buckets").toInt)
     } else {
-      val r = spark.read.parquet(s"$dir/$statsGen").head()
+      val r = Tables.parquet(spark, s"$dir/$statsGen").head()
       (r.getAs[Long]("n_docs"), r.getAs[Long]("dl_sum"), r.getAs[Int]("n_buckets"))
     }
   }
@@ -458,7 +459,7 @@ object LexIndex {
         .observe(obs, count(lit(1)).as("n"),
           coalesce(sum("dl"), lit(0L)).as("s"))
         .select("doc_id").write.mode("append").parquet(s"$dir/docs")),
-      Future(spark.read.parquet(s"$dir/${m.dict}")
+      Future(Tables.parquet(spark, s"$dir/${m.dict}")
         .unionByName(tfd.groupBy("token").agg(count(lit(1)).as("dfreq")))
         .groupBy("token").agg(sum("dfreq").as("dfreq"))
         .write.mode("overwrite").parquet(s"$dir/dict/g$gen")))
@@ -590,7 +591,7 @@ object LexIndex {
     val postings = readRel(spark, dir, "postings", m.postings)
       .where(col("tok_bucket").isin(buckets: _*) &&
         col("token").isin(terms: _*))
-    val dict = spark.read.parquet(s"$dir/${m.dict}")
+    val dict = Tables.parquet(spark, s"$dir/${m.dict}")
       .where(col("token").isin(terms: _*))
     bm25Score(postings, dict, statsDf(spark, dir, m), Seq("doc_id"), k1, b)
   }
@@ -621,7 +622,7 @@ object LexIndex {
       .join(broadcast(qt), Seq("tok_bucket", "token"))
     // dict is vocab-sized: semi-join it down to the queries' term set
     // before broadcasting the survivors into the scoring join
-    val dict = spark.read.parquet(s"$dir/${m.dict}")
+    val dict = Tables.parquet(spark, s"$dir/${m.dict}")
       .join(broadcast(qt.select("token").distinct()), Seq("token"), "left_semi")
     val scored = bm25Score(postings, dict, statsDf(spark, dir, m),
       Seq("query_id", "doc_id"), k1, b)

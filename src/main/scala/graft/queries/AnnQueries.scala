@@ -1,14 +1,11 @@
 package graft.queries
 
 import scala.collection.immutable.ListMap
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration.Duration
-import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorExprs
-import graft.operators.{Dedup, Similarity, TopKAgg}
+import graft.operators.{Dedup, KMeansOp, Similarity, TopKAgg}
 import graft.queries.QueryHelpers._
 
 /** Embedding similarity: brute-force / IVF / PQ ANN search, k-means,
@@ -43,7 +40,7 @@ private[graft] object AnnQueries extends QueryBook {
       // fixed-iteration Lloyd k-means over embeddings (semantic-clustering
       // curation pass); oracle generated for the same (k, iters) by
       // KMeansOp.oracleSql
-      graft.operators.KMeansOp.kmeans(t(s, dir, "embeddings"),
+      KMeansOp.kmeans(t(s, dir, "embeddings"),
           col("vec_id"), col("embedding"), k = 4, iters = 2)
         .withColumnRenamed("id", "vec_id")
     }),
@@ -118,14 +115,13 @@ private[graft] object AnnQueries extends QueryBook {
       // bytes of floats. Top-5 per query via the per-query window (8 query
       // partitions — q30's shape).
       val e = t(s, dir, "embeddings")
-      // independent subspace fits on concurrent driver threads (q111's note)
-      val fits = Await.result(Future.sequence((0 until 4).map { m => Future {
-        val (cents, base) = graft.operators.KMeansOp.fit(
-          e, col("vec_id"), slice(col("embedding"), m * 16 + 1, 16), k = 4, iters = 2)
-        val (cl, _) = graft.operators.KMeansOp.argmin(col("v"), cents)
-        (cents, base.select(col("id").as("vec_id"), cl.cast("int").as(s"code$m")))
-      }}), Duration.Inf)
-      val codes = fits.map(_._2).reduce(_.join(_, "vec_id"))
+      // the 4 subspace codebooks in one Lloyd loop; every code is an argmin
+      // of the same row's vector, so the code table is one projection
+      val (fits, base) = KMeansOp.fitViews(
+        e, col("vec_id"), col("embedding"), KMeansOp.subspaces(4, 16, k = 4), iters = 2)
+      val codes = base.select(col("id").as("vec_id") +: (0 until 4).map { m =>
+        KMeansOp.argmin(slice(col("v"), m * 16 + 1, 16), fits(m))._1.cast("int").as(s"code$m")
+      }: _*)
       // ‖q‖² once per query row; the raw qv never crosses the join — the
       // broadcast side is (query_id, 4 luts, one scalar)
       val q = e.where(col("vec_id") < 8)
@@ -134,7 +130,7 @@ private[graft] object AnnQueries extends QueryBook {
             col("embedding").cast("array<double>")).as("_q2")) ++
           (0 until 4).map { m =>
             graft.plans.AnnNative.adcLut(col("embedding").cast("array<double>"),
-              fits(m)._1, m * 16).as(s"_lut$m")
+              fits(m), m * 16).as(s"_lut$m")
           }: _*)
       val lutSum = (0 until 4).map(m =>
         element_at(col(s"_lut$m"), col(s"code$m") + 1)).reduce(_ + _)
@@ -153,27 +149,19 @@ private[graft] object AnnQueries extends QueryBook {
       // query to its nProbe=2 nearest cells, and ADC over q111's PQ codes
       // scores ONLY vectors in probed cells — the scan touches nProbe/k of
       // the code table (cell-partitioned at scale) and reads 4 bytes of
-      // codes per candidate. Composes the engine's own parts: KMeansOp.fit
-      // for both quantizer levels, q114's LUT expression for ADC, the
-      // per-query window for top-k. Approximation is BY CONSTRUCTION
+      // codes per candidate. Composes the engine's own parts: one KMeansOp
+      // Lloyd loop for both quantizer levels, q114's LUT expression for
+      // ADC, the per-query window for top-k. Approximation is BY CONSTRUCTION
       // identical in the oracle (same probed cells, same codes), so the
       // driver hash-checks the full approximate result.
       val e = t(s, dir, "embeddings")
-      // all five quantizer fits (coarse + 4 subspace) are independent —
-      // run them on concurrent driver threads; wall ≈ one fit
-      val coarseF = Future(graft.operators.KMeansOp.fit(
-        e, col("vec_id"), col("embedding"), k = 4, iters = 2))
-      val fitsF = Future.sequence((0 until 4).map { m => Future {
-        val (cents, base) = graft.operators.KMeansOp.fit(
-          e, col("vec_id"), slice(col("embedding"), m * 16 + 1, 16), k = 4, iters = 2)
-        val (cl, _) = graft.operators.KMeansOp.argmin(col("v"), cents)
-        (cents, base.select(col("id").as("vec_id"), cl.cast("int").as(s"code$m")))
-      }})
-      val (coarse, base64) = Await.result(coarseF, Duration.Inf)
-      val (cellCol, _) = graft.operators.KMeansOp.argmin(col("v"), coarse)
-      val cells = base64.select(col("id").as("vec_id"), cellCol.cast("int").as("cell"))
-      val fits = Await.result(fitsF, Duration.Inf)
-      val codes = (fits.map(_._2) :+ cells).reduce(_.join(_, "vec_id"))
+      // all five quantizers (coarse + 4 subspace) in one Lloyd loop; cell
+      // and codes are argmins of the same row, so one projection
+      val (coarse +: fits, base) = KMeansOp.fitViews(e, col("vec_id"), col("embedding"),
+        ((v: Column) => v, 4) +: KMeansOp.subspaces(4, 16, k = 4), iters = 2)
+      val codes = base.select(col("id").as("vec_id") +: (0 until 4).map { m =>
+        KMeansOp.argmin(slice(col("v"), m * 16 + 1, 16), fits(m))._1.cast("int").as(s"code$m")
+      } :+ KMeansOp.argmin(col("v"), coarse)._1.cast("int").as("cell"): _*)
       val q = e.where(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"),
           col("embedding").cast("array<double>").as("qv"))
@@ -192,7 +180,7 @@ private[graft] object AnnQueries extends QueryBook {
           explode(graft.plans.AnnNative.argTopM(col("qv"), coarse, 2)).as("cell"))
         .select(Seq(col("query_id"), col("_q2"), col("cell")) ++
           (0 until 4).map { m =>
-            graft.plans.AnnNative.adcLut(col("qv"), fits(m)._1, m * 16).as(s"_lut$m")
+            graft.plans.AnnNative.adcLut(col("qv"), fits(m), m * 16).as(s"_lut$m")
           }: _*)
       val lutSum = (0 until 4).map(m =>
         element_at(col(s"_lut$m"), col(s"code$m") + 1)).reduce(_ + _)
@@ -327,29 +315,26 @@ private[graft] object AnnQueries extends QueryBook {
       // non-residual codes (Round10Spec asserts the inequality on this
       // table). Scale shape: the coarse fit + 4 residual sub-fits are the
       // same bounded driver state as q115 (k×dim matrices), the residual
-      // column derives in one pass from the cached base (no second scan),
-      // and the code table stays one row per vector, equi-joined on id.
+      // column derives in one pass from the base, and the code table is
+      // one projection of it, one row per vector.
       val e = t(s, dir, "embeddings")
-      val (coarse, base) = graft.operators.KMeansOp.fit(
+      val (coarse, base) = KMeansOp.fit(
         e, col("vec_id"), col("embedding"), k = 4, iters = 2)
-      val (cellCol, _) = graft.operators.KMeansOp.argmin(col("v"), coarse)
+      val (cellCol, _) = KMeansOp.argmin(col("v"), coarse)
       val res = base.select(col("id"), cellCol.cast("int").as("cell"), col("v"))
         .select(col("id"), col("cell"),
           graft.plans.AnnNative.subCentroid(col("v"), col("cell"), coarse).as("rv"))
-      // 4 independent residual sub-fits on concurrent driver threads
-      // (q111's pattern; wall ≈ one fit)
-      val fits = Await.result(Future.sequence((0 until 4).map { m => Future {
-        graft.operators.KMeansOp.kmeans(
-            res, col("id"), slice(col("rv"), m * 16 + 1, 16), k = 4, iters = 2)
-          .select(col("id"), col("cluster").as(s"code$m"),
-            col("sq_dist").as(s"_e$m"))
-      }}), Duration.Inf)
-      val codes = fits.reduce(_.join(_, "id"))
-      res.select(col("id"), col("cell").cast("long").as("cell"))
-        .join(codes, "id")
-        .select(col("id").as("vec_id"), col("cell"),
-          col("code0"), col("code1"), col("code2"), col("code3"),
-          round(col("_e0") + col("_e1") + col("_e2") + col("_e3"), 4).as("rpq_err"))
+      // the 4 residual codebooks in one Lloyd loop; each code and its
+      // squared error (KMeansOp.kmeans's sq_dist) come from the same row
+      val (fits, _) = KMeansOp.fitViews(
+        res, col("id"), col("rv"), KMeansOp.subspaces(4, 16, k = 4), iters = 2)
+      val coded = (0 until 4).map { m =>
+        val x = slice(col("rv"), m * 16 + 1, 16)
+        val (cl, sc) = KMeansOp.argmin(x, fits(m))
+        (cl.cast("long").as(s"code$m"), round(VectorExprs.dot(x, x) + sc, 4))
+      }
+      res.select(Seq(col("id").as("vec_id"), col("cell").cast("long").as("cell")) ++
+        coded.map(_._1) :+ round(coded.map(_._2).reduce(_ + _), 4).as("rpq_err"): _*)
     }),
 
     "q123_ann_index_query" -> ((s, dir) => {
@@ -756,7 +741,7 @@ private[graft] object AnnQueries extends QueryBook {
           | row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id ASC) AS rnk
           |FROM scored QUALIFY rnk <= 5""".stripMargin,
 
-      "q78_kmeans" -> graft.operators.KMeansOp.oracleSql(
+      "q78_kmeans" -> KMeansOp.oracleSql(
         "embeddings", "vec_id", "embedding", k = 4, iters = 2, dim = 64),
 
       "q101_embed_outlier" ->
@@ -791,11 +776,11 @@ private[graft] object AnnQueries extends QueryBook {
           |FROM dq GROUP BY label""".stripMargin,
 
       "q114_pq_adc_search" -> {
-        def asg(m: Int): String = "(" + graft.operators.KMeansOp.oracleSql(
+        def asg(m: Int): String = "(" + KMeansOp.oracleSql(
           "embeddings", "vec_id",
           s"list_slice(embedding, ${m * 16 + 1}, ${m * 16 + 16})",
           k = 4, iters = 2, dim = 16) + s"\n) a$m"
-        def cb(m: Int): String = "(" + graft.operators.KMeansOp.oracleCentroidsSql(
+        def cb(m: Int): String = "(" + KMeansOp.oracleCentroidsSql(
           "embeddings", "vec_id",
           s"list_slice(embedding, ${m * 16 + 1}, ${m * 16 + 16})",
           k = 4, iters = 2, dim = 16) + s"\n) cb$m"
@@ -905,9 +890,9 @@ private[graft] object AnnQueries extends QueryBook {
            |FROM qq LEFT JOIN hits USING (query_id)""".stripMargin,
 
       "q120_residual_pq" -> {
-        val asgFull = "(" + graft.operators.KMeansOp.oracleSql(
+        val asgFull = "(" + KMeansOp.oracleSql(
           "embeddings", "vec_id", "embedding", k = 4, iters = 2, dim = 64) + "\n) ac"
-        val cbFull = "(" + graft.operators.KMeansOp.oracleCentroidsSql(
+        val cbFull = "(" + KMeansOp.oracleCentroidsSql(
           "embeddings", "vec_id", "embedding", k = 4, iters = 2, dim = 64) + "\n) cc"
         // the residual table: v − its coarse centroid (centroids 6dp-rounded
         // by the Lloyd chain on BOTH engines, subtraction exact)
@@ -919,7 +904,7 @@ private[graft] object AnnQueries extends QueryBook {
              |   FROM embeddings) ev
              | JOIN $asgFull ON ac.vec_id = ev.vec_id
              | JOIN $cbFull ON cc.cid = ac.cluster)""".stripMargin
-        def sub(m: Int): String = "(" + graft.operators.KMeansOp.oracleSql(
+        def sub(m: Int): String = "(" + KMeansOp.oracleSql(
           s"$resTable rt$m", "vec_id",
           s"list_slice(rv, ${m * 16 + 1}, ${m * 16 + 16})",
           k = 4, iters = 2, dim = 16) + s"\n) r$m"
@@ -942,10 +927,10 @@ private[graft] object AnnQueries extends QueryBook {
         // hash gate proves AnnIndex.append's encode is bit-identical to
         // a from-scratch encode with the same stored quantizers
         val slice = "(SELECT * FROM embeddings WHERE vec_id % 10 <> 0) ix_src"
-        def cbs(m: Int): String = "(" + graft.operators.KMeansOp.oracleCentroidsSql(
+        def cbs(m: Int): String = "(" + KMeansOp.oracleCentroidsSql(
           slice, "vec_id", s"list_slice(embedding, ${m * 16 + 1}, ${m * 16 + 16})",
           k = 4, iters = 2, dim = 16) + s"\n)"
-        val cbf = "(" + graft.operators.KMeansOp.oracleCentroidsSql(
+        val cbf = "(" + KMeansOp.oracleCentroidsSql(
           slice, "vec_id", "embedding", k = 4, iters = 2, dim = 64) + "\n)"
         val lut = (0 until 4).map { m =>
           s"""(list_inner_product(cm$m.c, cm$m.c)

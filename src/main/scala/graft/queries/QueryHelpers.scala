@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import graft.functions.Lexicons
 import graft.operators.Profiler
 import graft.sources.Tables
@@ -65,7 +66,11 @@ private[graft] object QueryHelpers {
     * with `maxFilesPerTrigger 1` (slice i == micro-batch i,
     * deterministically — unlike a hash/range reshard, the batch membership
     * is a pure function the DuckDB twin can recompute), drains, checks the
-    * replay invariant, and reads back the materialization. Prior run dirs
+    * replay invariant, and reads back the materialization. The stream
+    * source's schema is the first slice's schema made nullable (what Spark
+    * reads back from the written files), so no file is read to learn it;
+    * the read-back of `out` takes its schema from a footer
+    * ([[graft.sources.Tables.parquet]]). Neither launches a job. Prior run dirs
     * under `target/stream/<tag>` are reaped first — executions of one tag
     * never overlap (Bench's warm-up pool runs each query once, timed passes
     * are sequential, Verify is a separate JVM).
@@ -177,7 +182,7 @@ private[graft] object QueryHelpers {
     if (!noDataBatch)
       scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val stream = scoped.readStream
-      .schema(scoped.read.parquet(src.getPath).schema)
+      .schema(nullable(slices.head.schema))
       .option("maxFilesPerTrigger", 1)
       .option("latestFirst", "false")
       .parquet(src.getPath)
@@ -201,7 +206,19 @@ private[graft] object QueryHelpers {
         s"$tag replay: a no-data batch interleaved before the last data batch " +
           s"(batch rows: ${prog.map(_.numInputRows).mkString(",")})")
     } finally q.stop()
-    s.read.parquet(out)
+    Tables.parquet(s, out)
+  }
+
+  /** `t` with every field, array element and map value nullable — the
+    * schema Spark reads back from parquet files written from `t`. */
+  private def nullable(st: StructType): StructType =
+    StructType(st.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+
+  private def nullable(t: DataType): DataType = t match {
+    case st: StructType => nullable(st)
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
   }
 
   /** The reference's shipped memo-cache fixture (q122). Overridable via

@@ -1,6 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 
 /** Test-table loaders for the driver's TPC-H-ish parquet layout
   * (sfDir/name.parquet — see TESTDATA.md). Plain parquet scans: predicate
@@ -11,7 +16,43 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job — the one
+    * parquet reader of the engine. Spark infers a parquet schema by reading
+    * one footer inside a Spark job; at fixture scale that job, not the
+    * scan, is most of a small read's cost. Here the driver lists `path`
+    * (skipping `_*` and `.*` names, as the file index does), opens the
+    * footer of the lexicographically first data file and derives the
+    * schema with Spark's own `readSchemaFromFooter`: the stored Spark row
+    * schema when the writer left one, else the parquet types converted
+    * under the session conf (so `nanosAsLong` and NTZ inference still
+    * apply). The file index still discovers partition columns such as
+    * AnnIndex's `cell`. A path with no data file falls through to the
+    * plain read, which raises Spark's own error. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    firstDataFile(root.getFileSystem(conf), root) match {
+      case Some(file) =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+        val meta = try reader.getFooter finally reader.close()
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(file, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The lexicographically first visible file under `p` (`p` itself when
+    * it is a file), or None when `p` is missing or holds no data file. */
+  private def firstDataFile(fs: FileSystem, p: Path): Option[Path] =
+    if (!fs.exists(p)) None
+    else if (fs.getFileStatus(p).isFile) Some(p)
+    else fs.listStatus(p)
+      .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName).iterator
+      .flatMap(f => firstDataFile(fs, f.getPath)).nextOption()
 
   /** events.ts normalization — the fixture generator has shipped this column
     * as parquet TIMESTAMP(NANOS) in some refreshes and TIMESTAMP(MICROS,
@@ -28,7 +69,7 @@ object Tables {
     *    matches the DuckDB oracle, which also reads the column naively. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     import org.apache.spark.sql.functions.{col, expr}
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

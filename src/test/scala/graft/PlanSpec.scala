@@ -294,7 +294,8 @@ class PlanSpec extends SparkSpec {
                                           // (r18); pair join + keep join
                                           // read its blocks
       ("q91_scalable_percentile", "orders", 0),   // rank dataflow, pre-boundary
-      ("q119_ivfpq_recall", "embeddings", 9),     // q115 inline + exact side
+      ("q119_ivfpq_recall", "embeddings", 5),     // q115 inline (codes in one
+                                                  // projection) + exact side
       ("q80_repetition", "documents", 2),
       ("q125_shard_manifest", "documents", 0),    // total derived from the
                                                   // manifest, never a second

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, transform}
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,6 +25,46 @@ trait SparkSpec extends AnyFunSuite {
     replicated(graft.sources.Tables.table(spark, sf(), "embeddings"), "vec_id", rep)
       .select(col("vec_id"), transform(col("embedding"),
         x => x.cast("double") + col("copy").cast("double") * 1e-4).as("v"))
+
+  private val MarkerKey = "graft.test.marker"
+
+  /** Returns once every listener event posted so far has been delivered: a
+    * marker job's end event reaches a listener after every earlier event of
+    * the shared queue, which also carries the SQL executions. */
+  protected def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var markerJob = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (isMarker(e)) markerJob = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) done.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(MarkerKey, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(MarkerKey, null)
+      assert(done.await(60, TimeUnit.SECONDS), "the listener bus did not drain in 60 s")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def isMarker(e: SparkListenerJobStart): Boolean =
+    Option(e.properties).exists(_.getProperty(MarkerKey) != null)
+
+  /** Spark jobs `body` launches (the suites run one at a time, so every
+    * job started in between is `body`'s). */
+  def jobsOf(body: => Unit): Int = {
+    drainListenerBus()
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!isMarker(e)) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; drainListenerBus() } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
 }
 
 object SparkSpec {

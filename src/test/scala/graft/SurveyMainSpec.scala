@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -86,27 +84,5 @@ class SurveyMainSpec extends SparkSpec {
     try { body; drainListenerBus() }
     finally spark.listenerManager.unregister(listener)
     scans.get
-  }
-
-  /** Returns once every listener event posted so far has been delivered: a
-    * marker job's end event reaches a listener after every earlier event of
-    * the shared queue, which also carries the SQL executions. */
-  private def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val markerKey = "graft.test.marker"
-    val done = new CountDownLatch(1)
-    val listener = new SparkListener {
-      @volatile private var markerJob = -1
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(markerKey) != null)) markerJob = e.jobId
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerJob) done.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(markerKey, "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(markerKey, null)
-      assert(done.await(60, TimeUnit.SECONDS), "the listener bus did not drain in 60 s")
-    } finally sc.removeSparkListener(listener)
   }
 }
