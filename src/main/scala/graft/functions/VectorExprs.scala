@@ -41,10 +41,6 @@ object VectorExprs {
   def cosineHoisted(a: Column, b: Column, na: Column, nb: Column): Column =
     when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(dot(a, b) / (na * nb))
 
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x))
-
   /** Sign-bit bucket for random-hyperplane LSH: for each plane (a fixed
     * deterministic matrix), bit = dot(v, plane) >= 0; bits packed into a
     * LONG bucket id (max 64 planes — enforced). Native expression — the

@@ -16,19 +16,24 @@ import graft.sources.Tables
   *
   *  - [[build]] fits the coarse quantizer + per-subspace PQ codebooks
   *    (one KMeansOp.fitViews Lloyd loop: 1 + iters jobs for all 1 + nSub
-  *    codebooks — q115's shape), encodes the corpus, and writes TWO
-  *    parquet tables under `dir`:
-  *      `centroids` (kind, cid, c)  — k×dim rows per quantizer, driver-tiny
-  *      `codes`     (vec_id, cell, code0..code{nSub-1}) — one row per
-  *                   corpus vector, the 100 TB-side artifact (nSub bytes of
-  *                   payload per vector; partition/bucket by `cell` at
-  *                   scale so a probe reads only its cells)
-  *  - [[query]] loads `centroids` (bounded collect: quantizer matrices are
-  *    driver-state by design), wraps them in [[graft.plans.CentMatrix]]
-  *    (broadcast above the size threshold), and runs the probe dataflow
-  *    against `codes` — ZERO Lloyd iterations, zero aggregates in the
-  *    plan (Round11Spec asserts this), and the corpus embeddings table is
-  *    never touched.
+  *    codebooks — q115's shape), encodes the corpus, and commits a
+  *    manifest-committed artifact under `dir` (the [[IndexLog]] protocol:
+  *    layout, crash/retry contract and retention window):
+  *      `centroids/g{N}` (kind, cid, c) — k×dim rows per quantizer,
+  *                   driver-tiny, one generation per build
+  *      `codes/cell=N` (vec_id, code0..code{nSub-1}) — one row per corpus
+  *                   vector, the 100 TB-side artifact (nSub bytes of
+  *                   payload per vector), partitioned by coarse `cell` so a
+  *                   probe reads only its cells
+  *  - [[query]] loads the live centroid generation (bounded collect:
+  *    quantizer matrices are driver-state by design), wraps them in
+  *    [[graft.plans.CentMatrix]] (broadcast above the size threshold), and
+  *    runs the probe dataflow against the live `codes` files — ZERO Lloyd
+  *    iterations, zero aggregates in the plan (Round11Spec asserts this),
+  *    and the corpus embeddings table is never touched.
+  *
+  * [[build]], [[append]] and [[compact]] write only new files and commit
+  * one manifest each; the index renames and deletes no live file.
   *
   * Built from the same deterministic fits as q115, a build+query round
   * trip reproduces q115's answers exactly — q123 puts that under the
@@ -40,10 +45,17 @@ object AnnIndex {
   case class Params(nSub: Int = 4, subDim: Int = 16, kCoarse: Int = 4,
       kCode: Int = 4, iters: Int = 2)
 
-  /** Fit quantizers on `e`, encode it, write `dir/centroids` + `dir/codes`. */
+  private def indexLog(spark: SparkSession, dir: String): IndexLog =
+    new IndexLog(spark, dir, Seq("centroids"), Seq("codes"))
+
+  /** Fit quantizers on `e`, encode it, and commit a new centroid generation
+    * with its codes. Over a live index this is a commit, not a wipe: the
+    * previous snapshot stays readable for the retention window. */
   def build(e: DataFrame, id: Column, vec: Column, dir: String,
       p: Params = Params()): Unit = {
     val spark = e.sparkSession
+    val ix = indexLog(spark, dir)
+    val gen = ix.nextSeq
     val (coarse +: fits, base) = KMeansOp.fitViews(e, id, vec,
       ((v: Column) => v, p.kCoarse) +: KMeansOp.subspaces(p.nSub, p.subDim, p.kCode), p.iters)
 
@@ -60,15 +72,17 @@ object AnnIndex {
     // write them concurrently (round 17, guide §2.6)
     val centW = Future(
       spark.createDataFrame(spark.sparkContext.parallelize(centRows.toSeq, 1), centSchema)
-        .write.mode("overwrite").parquet(s"$dir/centroids"))
-
-    writeCodes(base.select(col("id").as("vec_id"), col("v")), coarse, fits, p,
-      dir, "overwrite")
-    Await.result(centW, Duration.Inf)
+        .write.mode("overwrite").parquet(s"$dir/centroids/g$gen"))
+    val fresh = ix.written {
+      writeCodes(base.select(col("id").as("vec_id"), col("v")), coarse, fits, p, dir)
+      Await.result(centW, Duration.Inf)
+    }
+    IndexLog.trip("build-post-data")
+    ix.commit(IndexLog.Manifest(gen, Map("centroids" -> s"centroids/g$gen"), fresh), "build")
   }
 
-  /** Encode `base` (vec_id, v) with the given quantizers and write it to
-    * the cell-partitioned `dir/codes` under `mode`. Cell-partitioned
+  /** Encode `base` (vec_id, v) with the given quantizers and add it to
+    * the cell-partitioned `dir/codes` as new files. Cell-partitioned
     * layout: each coarse cell is its own directory, so the query path's
     * probe join can DYNAMICALLY PRUNE to the probed cells — at a
     * production k the probe reads nProbe/k of the artifact from storage
@@ -82,7 +96,7 @@ object AnnIndex {
     * toDouble(slice(vec)) element-wise and the argmin arithmetic is the
     * same native expression. */
   private def writeCodes(base: DataFrame, coarse: Seq[Array[Double]],
-      subs: Seq[Seq[Array[Double]]], p: Params, dir: String, mode: String): Unit = {
+      subs: Seq[Seq[Array[Double]]], p: Params, dir: String): Unit = {
     val spark = base.sparkSession
     val (cellCol, _) = KMeansOp.argmin(col("v"),
       graft.plans.AnnNative.matrix(spark, coarse))
@@ -95,14 +109,15 @@ object AnnIndex {
     }
     encoded
       .select(col("vec_id") +: (0 until p.nSub).map(m => col(s"code$m")) :+ col("cell"): _*)
-      .write.partitionBy("cell").mode(mode).parquet(s"$dir/codes")
+      .write.partitionBy("cell").mode("append").parquet(s"$dir/codes")
   }
 
-  /** The stored quantizers of the index at `dir`, by kind ("coarse",
-    * "sub<m>"), each in cid order (bounded collect: quantizer matrices are
-    * driver-state by design). */
-  private def centroids(spark: SparkSession, dir: String): String => Seq[Array[Double]] = {
-    val stored = Tables.parquet(spark, s"$dir/centroids")
+  /** The quantizers of manifest `m`, by kind ("coarse", "sub<m>"), each in
+    * cid order (bounded collect: quantizer matrices are driver-state by
+    * design). */
+  private def centroids(spark: SparkSession, dir: String, m: IndexLog.Manifest)
+      : String => Seq[Array[Double]] = {
+    val stored = Tables.parquet(spark, s"$dir/${m.gens("centroids")}")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getSeq[Double](2).toArray))
     kind => stored.filter(_._1 == kind).sortBy(_._2).map(_._3).toSeq
   }
@@ -110,69 +125,50 @@ object AnnIndex {
   /** Append a NEW batch to an existing index using the STANDING
     * quantizers — the ingest path: assign + encode with the stored
     * centroids (ZERO Lloyd iterations; the batch never triggers a refit)
-    * and append the encoded rows to the cell-partitioned codes artifact.
-    * This is q124's incremental contract applied to the stored index:
-    * per-ingest cost is one argmin pass over the batch, independent of
-    * corpus history; queries immediately see old + new rows. */
+    * and commit the encoded rows as new codes files. This is q124's
+    * incremental contract applied to the stored index: per-ingest cost is
+    * one argmin pass over the batch, independent of corpus history;
+    * queries see old + new rows from the commit on. */
   def append(spark: SparkSession, dir: String, batch: DataFrame, id: Column,
       vec: Column, p: Params = Params()): Unit = {
-    val cents = centroids(spark, dir)
-    writeCodes(batch.select(id.as("vec_id"), VectorExprs.toDouble(vec).as("v")),
-      cents("coarse"), (0 until p.nSub).map(m => cents(s"sub$m")), p, dir, "append")
+    val ix = indexLog(spark, dir)
+    val m = ix.live
+    val cents = centroids(spark, dir, m)
+    val fresh = ix.written(
+      writeCodes(batch.select(id.as("vec_id"), VectorExprs.toDouble(vec).as("v")),
+        cents("coarse"), (0 until p.nSub).map(k => cents(s"sub$k")), p, dir))
+    IndexLog.trip("append-post-data")
+    ix.commit(m.copy(seq = m.seq + 1,
+      files = fresh.map { case (c, f) => c -> (m.data(c) ++ f) }), "append")
   }
 
-  /** Compact the cell-partitioned codes artifact: every cell whose parquet
-    * fragment count exceeds `maxFragments` is rewritten into ONE fragment —
-    * content-identical, zero refit, untouched cells keep their files. The
-    * maintenance pass of the [[append]] ingest loop: each append lands one
-    * file per written cell, and after enough batches the probe path pays a
-    * small-file open per fragment instead of a streaming scan. Rewrites go
-    * to a temp dir first and swap in via rename, so a concurrent reader
-    * never observes a half-written cell; per-cell work is bounded by that
-    * cell's rows and the directory listing by the coarse k — never the
-    * corpus. Returns the compacted cell ids. */
-  def compact(spark: SparkSession, dir: String, maxFragments: Int = 4): Seq[Int] = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val codes = new Path(s"$dir/codes")
-    def fragments(p: Path): Int =
-      fs.listStatus(p).count(f => f.getPath.getName.endsWith(".parquet"))
-    val over = fs.listStatus(codes)
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("cell="))
-      .filter(d => fragments(d.getPath) > maxFragments)
-      .map(_.getPath.getName.stripPrefix("cell=").toInt).toSeq.sorted
-    if (over.nonEmpty) {
-      val tmp = new Path(s"$dir/codes_compacting")
-      fs.delete(tmp, true)
-      // hash-repartition on the partition column: every row of a cell
-      // lands in one task, so each rewritten cell is exactly one fragment
-      Tables.parquet(spark, s"$dir/codes")
-        .where(col("cell").isin(over.map(Integer.valueOf): _*))
-        .repartition(col("cell"))
-        .write.partitionBy("cell").mode("overwrite").parquet(tmp.toString)
-      over.foreach { c =>
-        val live = new Path(codes, s"cell=$c")
-        fs.delete(live, true)
-        fs.rename(new Path(tmp, s"cell=$c"), live)
-      }
-      fs.delete(tmp, true)
-    }
-    over
-  }
+  /** Compact the cell-partitioned codes artifact through
+    * [[IndexLog.compactPartitions]]: every cell whose LIVE fragment count
+    * exceeds `maxFragments` is rewritten into ONE new fragment —
+    * content-identical, zero refit, untouched cells keep their files — and
+    * one manifest commit swaps it in. The maintenance pass of the
+    * [[append]] ingest loop: each append lands one file per written cell,
+    * and after enough batches the probe path pays a small-file open per
+    * fragment instead of a streaming scan. Per-cell work is bounded by that
+    * cell's rows, never the corpus. Returns the compacted cell ids. */
+  def compact(spark: SparkSession, dir: String, maxFragments: Int = 4): Seq[Int] =
+    indexLog(spark, dir).compactPartitions("codes", "cell", maxFragments).map(_.toInt)
 
   /** Load the stored quantizers and serve `queries` (query_id, qv) —
     * top-k by ADC over the nProbe probed cells. No fit, no corpus scan. */
   def query(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
       nProbe: Int, p: Params = Params()): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cents = centroids(spark, dir)
+    val ix = indexLog(spark, dir)
+    val live = ix.live
+    val cents = centroids(spark, dir, live)
     def matOf(kind: String): graft.plans.CentMatrix =
       graft.plans.AnnNative.matrix(spark, cents(kind))
     val coarse = matOf("coarse")
     val subs = (0 until p.nSub).map(m => matOf(s"sub$m"))
     require(coarse.numRows == p.kCoarse,
       s"index at $dir has ${coarse.numRows} coarse cells, params say ${p.kCoarse}")
-    val codes = Tables.parquet(spark, s"$dir/codes")
+    val codes = ix.read("codes", live.data("codes"))
     // ‖q‖² is constant per query — computed ONCE on the query row, before
     // the probe explode, never per candidate; and the probe side sheds the
     // raw qv once the LUTs are built, so the (broadcast) join input is

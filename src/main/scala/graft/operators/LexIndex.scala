@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -13,59 +12,28 @@ import graft.sources.Tables
   * are exactly `Retrieval.bm25`'s, so a build+query round trip reproduces
   * q52's answers and the oracle hash gate carries over verbatim (q344).
   *
-  * == Artifact layout (manifest-committed) ==
-  * All state transitions commit by writing ONE new small manifest file;
-  * data files are never renamed or overwritten in place (round 17 —
-  * VERDICT r16 "What's wrong #1": the previous rename-aside swap assumed
-  * atomic directory rename, which object stores do not provide; this is
-  * the Delta/Iceberg log discipline at operator scale). Under `dir`:
+  * == Artifact layout ==
+  * A manifest-committed artifact under `dir` (the [[IndexLog]] protocol:
+  * layout, crash/retry contract and retention window):
   *
   *  - `postings/tok_bucket=N/…parquet` — one row per (token, doc)
   *    posting: (token, doc_id, tf, dl), hash-partitioned by `tok_bucket`
   *    = pmod(xxhash64(token), nBuckets). The document length is
   *    DENORMALIZED into the posting (classic inverted-index design:
   *    Robertson's dl lives next to tf) so the query path never touches a
-  *    corpus-sized side table. The LIVE fragment set is defined by the
-  *    manifest, not the directory listing.
+  *    corpus-sized side table.
   *  - `docs/…parquet` — slim (doc_id) rows, one per indexed document:
   *    the [[append]] disjointness guard scans this n_docs-sized column
   *    instead of the postings (ADVICE r16: re-ingesting a doc_id would
   *    silently double tf contributions).
-  *  - `dict/g{N}/` — (token, dfreq), vocabulary-sized, one GENERATION
-  *    directory per commit that changes it (never overwritten in place).
+  *  - `dict/g{N}/` — (token, dfreq), vocabulary-sized generation.
   *  - `stats/g{N}/stats.txt` — the corpus scalars (n_docs, dl_sum,
-  *    n_buckets) as ONE terminator-validated text object (round 17: they
+  *    n_buckets) as ONE [[IndexLog.writeText]] object (round 17: they
   *    are protocol metadata like the manifest, so reading them costs
   *    metadata I/O, not a Spark job): EXACT integer totals (avgdl derives
   *    at query time), so [[append]] merges them additively with zero
   *    floating-point drift — plus the bucket modulus, PERSISTED so
   *    query/append always hash with the build's modulus.
-  *  - `manifest/m{seq}.txt` — the commit log: dict/stats generation plus
-  *    the live postings/docs file lists, terminated by a `commit=` line
-  *    (readers ignore a torn write and fall back to the previous seq).
-  *
-  * == Crash/retry contract ==
-  * [[build]], [[append]] and [[compact]] write ONLY new files, then
-  * commit one new manifest. A crash at ANY step before the manifest
-  * write leaves the previous manifest — and therefore the query path —
-  * fully consistent; the new files are unreferenced orphans (swept by
-  * [[gc]] on the next successful commit, or by a [[compact]] call even
-  * when nothing needs rewriting). Retrying a failed [[append]] is safe:
-  * the orphaned first attempt is never in any manifest, so nothing
-  * double-counts; retrying an append that DID commit fails the doc_id
-  * disjointness guard instead of silently doubling tf (the correct
-  * refusal). Rebuilding over a live index is itself a commit, never a
-  * wipe. Single writer assumed — the manifest sequence is not a lock.
-  *
-  * == Retention window ==
-  * Every commit retains the PREVIOUS snapshot in full (its manifest,
-  * generation dirs, and data files) and reclaims everything older — so
-  * a query plan resolved just before a commit keeps collecting
-  * correctly across that commit, and a reader racing the writer falls
-  * back cleanly if the newest manifest is torn. One snapshot of history
-  * is the minimum that makes single-writer/many-reader safe; a real
-  * deployment would widen the window by time, exactly as Delta/Iceberg
-  * retention does.
   *
   * == Query-path scale shape (the PlanSpec-pinned contract) ==
   * The ONLY scan is `postings`, partition-pruned to the query terms'
@@ -98,16 +66,6 @@ object LexIndex {
     b
   }
 
-  /** Test-only failpoint: when set, [[append]]/[[compact]] throw at the
-    * named step boundary — Round17Spec uses it to simulate a kill between
-    * every pair of protocol steps and assert the query path stays green
-    * (previous manifest) and the retry semantics hold. Never set outside
-    * tests. */
-  @volatile private[graft] var failpoint: Option[String] = None
-  private def trip(name: String): Unit =
-    if (failpoint.contains(name))
-      throw new IllegalStateException(s"LexIndex failpoint tripped: $name")
-
   /** One tokenize pass over `df` (round-17 optimization): the pinned
     * grain is the ROW-LOCALLY computed (doc_id, token, tf, dl) long
     * format — [[Retrieval.termFreqsWithDl]] derives tf and dl inside the
@@ -126,144 +84,11 @@ object LexIndex {
     (tfd, tfd.where(col("is_first")).select(col("doc_id"), col("dl")))
   }
 
-  // ---------------------------------------------------------------- manifest
+  private def indexLog(spark: SparkSession, dir: String): IndexLog =
+    new IndexLog(spark, dir, Seq("dict", "stats"), Seq("postings", "docs"))
 
-  /** The committed state: dict/stats generation paths plus the live data
-    * file lists, all `dir`-relative. */
-  private case class Manifest(seq: Long, dict: String, stats: String,
-      postings: Seq[String], docs: Seq[String])
-
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def manifestName(seq: Long): String = f"m$seq%020d.txt"
-
-  /** Commit `m`: write one small manifest object, terminated by a
-    * `commit=<n_lines>` line so a torn write is detectably invalid. A
-    * leftover file at the same seq can only be a torn write from a failed
-    * attempt (a COMPLETE one would have been read as `latest` and bumped
-    * the seq) — replaced. Single PUT of a single object: no directory
-    * rename anywhere in the protocol. */
-  private def writeManifest(fs: FileSystem, dir: String, m: Manifest): Unit = {
-    val lines = Seq(s"dict=${m.dict}", s"stats=${m.stats}") ++
-      m.postings.sorted.map("p=" + _) ++ m.docs.sorted.map("d=" + _)
-    val body = (lines :+ s"commit=${lines.length}").mkString("\n")
-    val p = new Path(s"$dir/manifest/${manifestName(m.seq)}")
-    if (fs.exists(p)) fs.delete(p, false)
-    val out = fs.create(p, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Parse one manifest file; None when torn/invalid — or no longer
-    * readable at all (a concurrent GC may reclaim a superseded manifest
-    * between the directory listing and the open; the reader just moves
-    * on to the next candidate). */
-  private def parseManifest(fs: FileSystem, p: Path, seq: Long): Option[Manifest] =
-    scala.util.Try {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        buf.toString("UTF-8")
-      } finally in.close()
-    }.toOption.flatMap { body =>
-      val lines = body.split("\n", -1).toSeq.filter(_.nonEmpty)
-      if (lines.isEmpty || !lines.last.startsWith("commit=")) None
-      else {
-        val payload = lines.init
-        if (lines.last != s"commit=${payload.length}") None
-        else {
-          def one(k: String) = payload.collectFirst {
-            case l if l.startsWith(k + "=") => l.drop(k.length + 1)
-          }
-          for (d <- one("dict"); s <- one("stats")) yield Manifest(seq, d, s,
-            payload.collect { case l if l.startsWith("p=") => l.drop(2) },
-            payload.collect { case l if l.startsWith("d=") => l.drop(2) })
-        }
-      }
-    }
-
-  /** The newest `n` VALID manifests, newest first (torn trailing writes
-    * are skipped). take(1) = the live state; take(2) = the RETENTION
-    * WINDOW: the live snapshot plus one previous snapshot stay fully
-    * readable after every commit, so a plan resolved against the
-    * pre-commit manifest keeps collecting correctly across one
-    * concurrent commit (the Delta retention discipline at its minimum
-    * useful depth — review r17 finding #1). */
-  private def newest(fs: FileSystem, dir: String, n: Int): Seq[Manifest] = {
-    val md = new Path(s"$dir/manifest")
-    if (!fs.exists(md)) return Nil
-    fs.listStatus(md).map(_.getPath)
-      .filter(_.getName.matches("m\\d{20}\\.txt"))
-      .sortBy(_.getName)(Ordering[String].reverse)
-      .iterator
-      .flatMap { p =>
-        scala.util.Try(p.getName.stripPrefix("m").stripSuffix(".txt").toLong)
-          .toOption.flatMap(parseManifest(fs, p, _))
-      }
-      .take(n).toSeq
-  }
-
-  private def latest(fs: FileSystem, dir: String): Option[Manifest] =
-    newest(fs, dir, 1).headOption
-
-  private def live(fs: FileSystem, dir: String): Manifest =
-    latest(fs, dir).getOrElse(
-      sys.error(s"no committed LexIndex manifest under $dir — build first"))
-
-  /** All committed data files (`*.parquet`, non-hidden) under `dir/$sub`,
-    * as dir-relative paths. */
-  private def listData(fs: FileSystem, dir: String, sub: String): Set[String] = {
-    val root = new Path(s"$dir/$sub")
-    if (!fs.exists(root)) return Set.empty
-    val out = Set.newBuilder[String]
-    val it = fs.listFiles(root, true)
-    val prefix = fs.makeQualified(new Path(dir)).toString + "/"
-    while (it.hasNext) {
-      val f = it.next()
-      val q = f.getPath.toString
-      val name = f.getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
-          && !q.contains("/_temporary/"))
-        out += fs.makeQualified(f.getPath).toString.stripPrefix(prefix)
-    }
-    out.result()
-  }
-
-  private def readRel(spark: SparkSession, dir: String, base: String,
-      rels: Seq[String]): DataFrame =
-    spark.read.option("basePath", s"$dir/$base")
-      .parquet(rels.map(r => s"$dir/$r"): _*)
-
-  /** Best-effort GC, run after every commit (and by a no-op [[compact]],
-    * so crash debris is reclaimed even when nothing needs rewriting —
-    * review r17 finding #3): everything outside the RETENTION WINDOW
-    * (the two newest valid manifests — see [[newest]]) is deleted —
-    * older manifests, unreferenced dict/stats generations, and
-    * postings/docs data files no retained manifest lists (fragments a
-    * compact replaced two commits ago, debris from crashed writes). A
-    * crash mid-GC leaves unreferenced orphans, never corruption. */
-  private def gc(fs: FileSystem, dir: String): Unit = {
-    val keep = newest(fs, dir, 2)
-    if (keep.isEmpty) return
-    val minName = manifestName(keep.map(_.seq).min)
-    val md = new Path(s"$dir/manifest")
-    fs.listStatus(md).map(_.getPath)
-      .filter(p => p.getName.matches("m\\d{20}\\.txt") && p.getName < minName)
-      .foreach(p => fs.delete(p, false))
-    val keepGens = keep.flatMap(m => Seq(m.dict, m.stats)).toSet
-    Seq("dict", "stats").foreach { comp =>
-      val root = new Path(s"$dir/$comp")
-      if (fs.exists(root)) fs.listStatus(root).map(_.getPath)
-        .filter(p => p.getName.startsWith("g") && !keepGens.contains(s"$comp/${p.getName}"))
-        .foreach(p => fs.delete(p, true))
-    }
-    val keepData = keep.flatMap(m => m.postings ++ m.docs).toSet
-    (listData(fs, dir, "postings") ++ listData(fs, dir, "docs"))
-      .filterNot(keepData).foreach(f => fs.delete(new Path(s"$dir/$f"), false))
-  }
+  private def gensOf(gen: Long): Map[String, String] =
+    Map("dict" -> s"dict/g$gen", "stats" -> s"stats/g$gen")
 
   // ------------------------------------------------------------------- build
 
@@ -287,111 +112,64 @@ object LexIndex {
       .sortWithinPartitions("tok_bucket", "token", "doc_id")
       .write.partitionBy("tok_bucket").mode("append").parquet(s"$dir/postings")
 
-  /** Write the corpus scalars as ONE small terminator-validated text
-    * object (round-17 optimization: the stats are PROTOCOL METADATA like
-    * the manifest — three integers — and the previous single-row parquet
-    * write/read cost a Spark job on every lifecycle op and every query
-    * setup; the Delta discipline keeps table-level scalars in the log,
-    * not in data files). Layout: `stats/g{N}/stats.txt`, same generation
-    * paths as before, same gc. */
-  private def statsRow(fs: FileSystem, dir: String, nDocs: Long, dlSum: Long,
-      nBuckets: Int, gen: String): Unit = {
-    val body = s"n_docs=$nDocs\ndl_sum=$dlSum\nn_buckets=$nBuckets\ncommit=3"
-    val p = new Path(s"$dir/$gen/stats.txt")
-    if (fs.exists(p)) fs.delete(p, false)
-    val out = fs.create(p, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
+  /** Write the corpus scalars as ONE small [[IndexLog.writeText]] object
+    * (round-17 optimization: the stats are PROTOCOL METADATA like the
+    * manifest — three integers — and a single-row parquet write/read cost
+    * a Spark job on every lifecycle op and every query setup; the Delta
+    * discipline keeps table-level scalars in the log, not in data files). */
+  private def writeStats(ix: IndexLog, nDocs: Long, dlSum: Long, nBuckets: Int,
+      gen: Long): Unit =
+    ix.writeText(s"stats/g$gen/stats.txt",
+      Seq(s"n_docs=$nDocs", s"dl_sum=$dlSum", s"n_buckets=$nBuckets"))
 
   /** Read the committed corpus scalars — pure metadata I/O, zero Spark
-    * jobs. Falls back to the pre-round-17 single-row parquet layout so a
-    * standing artifact written by older code stays readable for its
-    * retention window. */
-  private def readStats(spark: SparkSession, dir: String, statsGen: String)
-      : (Long, Long, Int) = {
-    val fs = fsOf(spark, dir)
-    val p = new Path(s"$dir/$statsGen/stats.txt")
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val body = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](4096)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        buf.toString("UTF-8")
-      } finally in.close()
-      val kv = body.split("\n").filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
-      require(kv.get("commit").contains("3"),
-        s"torn stats object under $dir/$statsGen")
-      (kv("n_docs").toLong, kv("dl_sum").toLong, kv("n_buckets").toInt)
-    } else {
-      val r = Tables.parquet(spark, s"$dir/$statsGen").head()
-      (r.getAs[Long]("n_docs"), r.getAs[Long]("dl_sum"), r.getAs[Int]("n_buckets"))
-    }
+    * jobs. */
+  private def readStats(ix: IndexLog, m: IndexLog.Manifest): (Long, Long, Int) = {
+    val rel = s"${m.gens("stats")}/stats.txt"
+    val kv = ix.readText(rel)
+      .getOrElse(throw new IllegalArgumentException(s"torn stats object $rel"))
+      .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
+    (kv("n_docs").toLong, kv("dl_sum").toLong, kv("n_buckets").toInt)
   }
 
   /** Tokenize `df` exactly as `Retrieval.bm25` does and commit the
-    * artifact under `dir`. Rebuild-over-a-LIVE-index follows the same
-    * commit protocol as every other transition (review r17 finding #4 —
-    * the previous version wiped the directory first, which broke
-    * concurrent queries for the whole build and destroyed the standing
-    * index on a mid-build crash): the new corpus lands as NEW files and
-    * a NEW generation, one manifest commit makes it live, and the
-    * superseded snapshot stays readable for the retention window. A
-    * crash mid-build leaves the previous index (or, on a fresh dir,
-    * nothing) committed. `nBuckets = 0` (default) picks the modulus from
-    * the vocabulary via [[nBucketsFor]]. */
+    * artifact under `dir`; over a live index this is one more commit, not
+    * a wipe (review r17 finding #4). `nBuckets = 0` (default) picks the
+    * modulus from the vocabulary via [[nBucketsFor]]. */
   def build(df: DataFrame, id: Column, text: Column, dir: String,
       nBuckets: Int = 0): Unit = {
-    val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
-    val prev = latest(fs, dir)
+    val ix = indexLog(df.sparkSession, dir)
+    val gen = ix.nextSeq
     val (tfd, docsDl) = tokenized(df, id, text)
-    val beforeP = listData(fs, dir, "postings")
-    val beforeD = listData(fs, dir, "docs")
-    val gen = prev.map(_.seq).getOrElse(0L) + 1
-    // Round 18 (guide §1.2 — don't compute things twice): the vocabulary
-    // size the bucket modulus needs is OBSERVED on the dict write itself,
-    // replacing the previous dict checkpoint + count() pair (two jobs and
-    // a block-manager copy of the vocab table). The dict therefore lands
-    // before the bucketed writes — the modulus depends on it — which the
-    // crash contract allows: nothing is referenced until the manifest.
+    // the vocabulary size the bucket modulus needs is OBSERVED on the dict
+    // write itself, so the dict lands before the bucketed writes — which
+    // the crash contract allows: nothing is referenced until the manifest
     val dictObs = org.apache.spark.sql.Observation()
     tfd.groupBy("token").agg(count(lit(1)).as("dfreq"))
       .observe(dictObs, count(lit(1)).as("vocab"))
       .write.mode("overwrite").parquet(s"$dir/dict/g$gen")
     val nb = if (nBuckets > 0) nBuckets
       else nBucketsFor(dictObs.get("vocab").asInstanceOf[Long])
-    // the remaining data-file writes are independent derivations of the
-    // pinned tfd checkpoint — run them concurrently (round 17, guide
-    // §2.6); the protocol's crash contract only requires that ALL land
-    // before the one manifest commit, which the Await below preserves
+    // the postings and docs writes are independent derivations of the
+    // pinned tfd checkpoint, so they run concurrently. The stats are EXACT
+    // INTEGER totals (doc count, Σdl) OBSERVED on the docs write: avgdl is
+    // one double division at query time, so an appended index recombines
+    // bit-identically with a from-scratch build
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    // stats as EXACT INTEGER totals (doc count, Σdl): avgdl is derived
-    // at query time as one double division — so an appended index
-    // recombines bit-identically with a from-scratch build (a stored
-    // floating avgdl would re-round on every merge; integer sums
-    // cannot drift). Round 18: the totals are OBSERVED on the docs write
-    // itself (guide §1.2 — don't compute things twice: the previous
-    // separate docsDl.agg job re-scanned the checkpoint for two scalars
-    // the write-side pass already streams past).
     val obs = org.apache.spark.sql.Observation()
-    Await.result(Future.sequence(Seq(
+    val fresh = ix.written(Await.result(Future.sequence(Seq(
       Future(writePostings(tfd, dir, nb)),
       Future(docsDl
         .observe(obs, count(lit(1)).as("n_docs"),
           coalesce(sum("dl"), lit(0L)).as("dl_sum"))
         .select("doc_id").write.mode("append").parquet(s"$dir/docs")))),
-      Duration.Inf)
-    statsRow(fs, dir, obs.get("n_docs").asInstanceOf[Long],
-      obs.get("dl_sum").asInstanceOf[Long], nb, s"stats/g$gen")
-    writeManifest(fs, dir, Manifest(gen, s"dict/g$gen", s"stats/g$gen",
-      (listData(fs, dir, "postings") -- beforeP).toSeq,
-      (listData(fs, dir, "docs") -- beforeD).toSeq))
-    gc(fs, dir)
+      Duration.Inf))
+    IndexLog.trip("build-post-data")
+    writeStats(ix, obs.get("n_docs").asInstanceOf[Long],
+      obs.get("dl_sum").asInstanceOf[Long], nb, gen)
+    ix.commit(IndexLog.Manifest(gen, gensOf(gen), fresh), "build")
   }
 
   // ------------------------------------------------------------------ append
@@ -415,135 +193,77 @@ object LexIndex {
     * silently doubling tf contributions. */
   def append(spark: SparkSession, dir: String, batch: DataFrame, id: Column,
       text: Column): Unit = {
-    val fs = fsOf(spark, dir)
-    val m = live(fs, dir)
-    val (oldN, oldSum, nBuckets) = readStats(spark, dir, m.stats)
+    val ix = indexLog(spark, dir)
+    val m = ix.live
+    val (oldN, oldSum, nBuckets) = readStats(ix, m)
     val (tfd, docsDl) = tokenized(batch, id, text)
-    // new files only: snapshot the listing, write, diff — orphans from a
-    // previously failed attempt are in the BEFORE set, so they can never
-    // leak into the manifest
-    val beforeP = listData(fs, dir, "postings")
-    val beforeD = listData(fs, dir, "docs")
-    // Round 18 (guide §2.6, VERDICT r17 #4): ALL per-commit derivations of
-    // the pinned tfd checkpoint — postings, docs (with the batch's exact
-    // integer stats OBSERVED on the write itself, replacing the separate
-    // docsDl.agg job), the dict dfreq merge, and the disjointness guard —
-    // are independent, so they run concurrently. The crash contract is
-    // unchanged: nothing is referenced until the one manifest commit, a
-    // guard refusal aborts BEFORE the commit (the freshly written files
-    // stay unreferenced orphans, swept by the next successful commit's
-    // gc), and a retry of a committed append still refuses instead of
-    // double-counting. The failpoints keep their names and their
-    // between-phase positions: post-data now fires after the whole
-    // concurrent write phase, post-gens after the stats object lands.
+    // ALL per-commit derivations of the pinned tfd checkpoint — postings,
+    // docs (with the batch's exact integer stats OBSERVED on the write),
+    // the dict dfreq merge, and the disjointness guard — run concurrently.
+    // A guard refusal aborts BEFORE the commit; the freshly written files
+    // stay orphans for the next commit's GC.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val gen = m.seq + 1
     val obs = org.apache.spark.sql.Observation()
-    val guard: Future[Unit] =
-      if (m.docs.isEmpty) Future.successful(())
+    def guard: Future[Unit] =
+      if (m.data("docs").isEmpty) Future.successful(())
       else Future {
         val overlap = docsDl.select("doc_id")
-          .join(readRel(spark, dir, "docs", m.docs), Seq("doc_id"), "left_semi")
+          .join(ix.read("docs", m.data("docs")), Seq("doc_id"), "left_semi")
           .limit(1).count()
         require(overlap == 0L,
           s"LexIndex.append: batch contains doc_ids already indexed under $dir — " +
             "re-ingesting a document would silently double its tf contributions " +
             "(retry of an already-committed append?)")
       }
-    val phase: Seq[Future[Unit]] = Seq(
+    // the writes start inside `written`, after its before-listing, and ALL
+    // settle before a guard refusal is rethrown: a caller's immediate retry
+    // would otherwise race its before-listing against this attempt's
+    // landing files and could pull them into ITS manifest
+    val fresh = ix.written(Await.result(Future.sequence(Seq(
       guard,
       Future(writePostings(tfd, dir, nBuckets)),
       Future(docsDl
         .observe(obs, count(lit(1)).as("n"),
           coalesce(sum("dl"), lit(0L)).as("s"))
         .select("doc_id").write.mode("append").parquet(s"$dir/docs")),
-      Future(Tables.parquet(spark, s"$dir/${m.dict}")
+      Future(Tables.parquet(spark, s"$dir/${m.gens("dict")}")
         .unionByName(tfd.groupBy("token").agg(count(lit(1)).as("dfreq")))
         .groupBy("token").agg(sum("dfreq").as("dfreq"))
-        .write.mode("overwrite").parquet(s"$dir/dict/g$gen")))
-    // settle ALL futures before rethrowing a guard refusal: append must
-    // never return (or throw) with a write still in flight — a caller's
-    // immediate retry would otherwise race its before-listing against the
-    // failed attempt's landing files and could pull them into ITS manifest
-    val settled = Await.result(
-      Future.sequence(phase.map(_.transform(scala.util.Success(_)))),
-      Duration.Inf)
-    settled.foreach(_.get)
-    trip("append-post-data")
-    // stats: exact integer addition — no floating recombination anywhere;
-    // the stats object is protocol metadata (no Spark job)
-    statsRow(fs, dir, oldN + obs.get("n").asInstanceOf[Long],
-      oldSum + obs.get("s").asInstanceOf[Long], nBuckets, s"stats/g$gen")
-    trip("append-post-gens")
-    val next = Manifest(gen, s"dict/g$gen", s"stats/g$gen",
-      m.postings ++ (listData(fs, dir, "postings") -- beforeP),
-      m.docs ++ (listData(fs, dir, "docs") -- beforeD))
-    writeManifest(fs, dir, next)
-    trip("append-post-commit")
-    gc(fs, dir)
+        .write.mode("overwrite").parquet(s"$dir/dict/g$gen"))
+    ).map(_.transform(scala.util.Success(_)))), Duration.Inf).foreach(_.get))
+    IndexLog.trip("append-post-data")
+    writeStats(ix, oldN + obs.get("n").asInstanceOf[Long],
+      oldSum + obs.get("s").asInstanceOf[Long], nBuckets, gen)
+    ix.commit(IndexLog.Manifest(gen, gensOf(gen),
+      fresh.map { case (c, f) => c -> (m.data(c) ++ f) }), "append")
   }
 
   // ----------------------------------------------------------------- compact
 
-  /** Compact the bucket-partitioned postings: every `tok_bucket` whose
-    * LIVE fragment count exceeds `maxFragments` is rewritten into ONE
-    * TOKEN-SORTED fragment (the same layout [[writePostings]] produces —
-    * review r17 finding #2: an unsorted rewrite would permanently lose
-    * the min/max row-group skipping) — content-identical, dict/stats
-    * untouched, clean buckets keep their files. The maintenance pass of
-    * the [[append]] ingest loop: each append lands one file per touched
-    * bucket, and after enough batches the query path pays a small-file
-    * open per fragment instead of a streaming scan. Commit = one manifest
-    * swap (compacted files in, replaced fragments out); [[gc]] then
-    * reclaims everything outside the retention window — and runs even
-    * when NO bucket is over (review r17 finding #3), so debris from
-    * crashed writes is swept by the next compact regardless. A crash at
-    * any step leaves the previous manifest serving identical content.
-    * Returns the bucket ids rewritten. */
-  def compact(spark: SparkSession, dir: String, maxFragments: Int = 4): Seq[Long] = {
-    val fs = fsOf(spark, dir)
-    val m = live(fs, dir)
-    def bucketOf(rel: String): Long =
-      rel.split("/").collectFirst {
-        case s if s.startsWith("tok_bucket=") => s.stripPrefix("tok_bucket=").toLong
-      }.getOrElse(sys.error(s"posting fragment outside bucket layout: $rel"))
-    val byBucket = m.postings.groupBy(bucketOf)
-    val over = byBucket.filter(_._2.size > maxFragments).keys.toSeq.sorted
-    if (over.nonEmpty) {
-      val before = listData(fs, dir, "postings")
-      val overFiles = over.flatMap(byBucket)
-      // hash-repartition on the partition column (every row of a bucket
-      // lands in one task, so each rewritten bucket is exactly one
-      // fragment), token-sorted like the write path
-      readRel(spark, dir, "postings", overFiles)
-        .repartition(col("tok_bucket"))
-        .sortWithinPartitions("tok_bucket", "token", "doc_id")
-        .write.partitionBy("tok_bucket").mode("append").parquet(s"$dir/postings")
-      val fresh = (listData(fs, dir, "postings") -- before).toSeq
-      trip("compact-post-data")
-      val overSet = over.toSet
-      val next = Manifest(m.seq + 1, m.dict, m.stats,
-        m.postings.filterNot(f => overSet.contains(bucketOf(f))) ++ fresh, m.docs)
-      writeManifest(fs, dir, next)
-      trip("compact-post-commit")
-    }
-    gc(fs, dir)
-    over
-  }
+  /** Compact the bucket-partitioned postings through
+    * [[IndexLog.compactPartitions]]: every `tok_bucket` whose LIVE fragment
+    * count exceeds `maxFragments` is rewritten into ONE TOKEN-SORTED
+    * fragment (the same layout [[writePostings]] produces — review r17
+    * finding #2: an unsorted rewrite would permanently lose the min/max
+    * row-group skipping) — content-identical, dict/stats untouched, clean
+    * buckets keep their files. The maintenance pass of the [[append]]
+    * ingest loop: each append lands one file per touched bucket, and after
+    * enough batches the query path pays a small-file open per fragment
+    * instead of a streaming scan. A no-op compact still sweeps crash debris
+    * (review r17 finding #3). Returns the bucket ids rewritten. */
+  def compact(spark: SparkSession, dir: String, maxFragments: Int = 4): Seq[Long] =
+    indexLog(spark, dir).compactPartitions("postings", "tok_bucket", maxFragments, "token", "doc_id")
 
   // ------------------------------------------------------------------- query
 
   /** The committed corpus scalars: (n_docs, dl_sum, n_buckets). */
   def stats(spark: SparkSession, dir: String): (Long, Long, Int) = {
-    val m = live(fsOf(spark, dir), dir)
-    readStats(spark, dir, m.stats)
+    val ix = indexLog(spark, dir)
+    readStats(ix, ix.live)
   }
-
-  /** The live manifest's postings file list (tests). */
-  private[graft] def livePostingFiles(spark: SparkSession, dir: String): Seq[String] =
-    live(fsOf(spark, dir), dir).postings
 
   /** Shared scoring tail: postings already filtered to the query terms,
     * dict filtered to the same, stats broadcast — BM25 per `grain`. */
@@ -559,10 +279,10 @@ object LexIndex {
       .agg(round(sum("_s"), 4).as("score"))
   }
 
-  private def statsDf(spark: SparkSession, dir: String, m: Manifest): DataFrame = {
+  private def statsDf(spark: SparkSession, ix: IndexLog, m: IndexLog.Manifest): DataFrame = {
     // metadata read + literal one-row relation: zero jobs, and the avgdl
     // division is the SAME double op the previous in-plan cast performed
-    val (n, dlSum, _) = readStats(spark, dir, m.stats)
+    val (n, dlSum, _) = readStats(ix, m)
     spark.range(1).select(lit(n.toDouble).as("n_docs"),
       lit(dlSum.toDouble / n.toDouble).as("avgdl"))
   }
@@ -575,9 +295,9 @@ object LexIndex {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "LexIndex.query needs at least one query term")
     import spark.implicits._
-    val fs = fsOf(spark, dir)
-    val m = live(fs, dir)
-    val (nDocsQ, _, nBuckets) = readStats(spark, dir, m.stats)
+    val ix = indexLog(spark, dir)
+    val m = ix.live
+    val (nDocsQ, _, nBuckets) = readStats(ix, m)
     require(nDocsQ > 0L,
       s"LexIndex.query: index under $dir is empty (n_docs = 0) — avgdl is " +
         "undefined; build with at least one non-empty document first")
@@ -588,12 +308,12 @@ object LexIndex {
     val buckets = terms.toDF("token")
       .select(pmod(xxhash64(col("token")), lit(nBuckets)).as("b"))
       .distinct().as[Long].collect().toSeq
-    val postings = readRel(spark, dir, "postings", m.postings)
+    val postings = ix.read("postings", m.data("postings"))
       .where(col("tok_bucket").isin(buckets: _*) &&
         col("token").isin(terms: _*))
-    val dict = Tables.parquet(spark, s"$dir/${m.dict}")
+    val dict = Tables.parquet(spark, s"$dir/${m.gens("dict")}")
       .where(col("token").isin(terms: _*))
-    bm25Score(postings, dict, statsDf(spark, dir, m), Seq("doc_id"), k1, b)
+    bm25Score(postings, dict, statsDf(spark, ix, m), Seq("doc_id"), k1, b)
   }
 
   /** BM25 for a QUERY TABLE `queries(query_id, terms: array<string>)` —
@@ -610,21 +330,21 @@ object LexIndex {
     * by doc_id, so top-k is deterministic. */
   def queryMany(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int = 0, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val fs = fsOf(spark, dir)
-    val m = live(fs, dir)
-    val (nDocsQ, _, nBuckets) = readStats(spark, dir, m.stats)
+    val ix = indexLog(spark, dir)
+    val m = ix.live
+    val (nDocsQ, _, nBuckets) = readStats(ix, m)
     require(nDocsQ > 0L,
       s"LexIndex.queryMany: index under $dir is empty (n_docs = 0)")
     val qt = queries.select(col("query_id"),
         explode(array_distinct(col("terms"))).as("token"))
       .withColumn("tok_bucket", pmod(xxhash64(col("token")), lit(nBuckets)))
-    val postings = readRel(spark, dir, "postings", m.postings)
+    val postings = ix.read("postings", m.data("postings"))
       .join(broadcast(qt), Seq("tok_bucket", "token"))
     // dict is vocab-sized: semi-join it down to the queries' term set
     // before broadcasting the survivors into the scoring join
-    val dict = Tables.parquet(spark, s"$dir/${m.dict}")
+    val dict = Tables.parquet(spark, s"$dir/${m.gens("dict")}")
       .join(broadcast(qt.select("token").distinct()), Seq("token"), "left_semi")
-    val scored = bm25Score(postings, dict, statsDf(spark, dir, m),
+    val scored = bm25Score(postings, dict, statsDf(spark, ix, m),
       Seq("query_id", "doc_id"), k1, b)
     if (k <= 0) scored
     else {

@@ -6,6 +6,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Test-table loaders for the driver's TPC-H-ish parquet layout
   * (sfDir/name.parquet — see TESTDATA.md). Plain parquet scans: predicate
@@ -31,17 +32,30 @@ object Tables {
     * AnnIndex's `cell`. A path with no data file falls through to the
     * plain read, which raises Spark's own error. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
-    firstDataFile(root.getFileSystem(conf), root) match {
-      case Some(file) =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-        val meta = try reader.getFooter finally reader.close()
-        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(file, meta),
-          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-        spark.read.schema(schema).parquet(path)
+    firstDataFile(root.getFileSystem(spark.sessionState.newHadoopConf()), root) match {
+      case Some(file) => spark.read.schema(footerSchema(spark, file)).parquet(path)
       case None => spark.read.parquet(path)
     }
+  }
+
+  /** The listed parquet `files` under `basePath` as one DataFrame, with the
+    * schema of the first file's footer and no job: the file-list form of
+    * [[parquet]], for readers whose live file set is not a directory (the
+    * [[graft.operators.IndexLog]] manifests). `basePath` keeps partition
+    * columns such as `tok_bucket` and `cell` discovered from the paths. */
+  def parquet(spark: SparkSession, basePath: String, files: Seq[String]): DataFrame = {
+    require(files.nonEmpty, s"no parquet files listed under $basePath")
+    spark.read.schema(footerSchema(spark, new Path(files.head)))
+      .option("basePath", basePath).parquet(files: _*)
+  }
+
+  private def footerSchema(spark: SparkSession, file: Path): StructType = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sessionState.newHadoopConf()))
+    val meta = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** The lexicographically first visible file under `p` (`p` itself when

@@ -253,7 +253,9 @@ class Round11Spec extends SparkSpec {
     val out = SparkEntry.queries("q129_ann_index_upsert")(spark, sf())
     val rows = out.collect()
     assert(rows.length == 40, s"8 queries × top-5, got ${rows.length}")
-    val codes = spark.read.parquet("target/ann_index_upsert/sf0.001/codes")
+    val ix = "target/ann_index_upsert/sf0.001"
+    val codes = graft.sources.Tables.parquet(spark, s"$ix/codes",
+      graft.operators.IndexLog.snapshotFiles(spark, ix, "codes").head.map(f => s"$ix/$f"))
     val n = graft.sources.Tables.table(spark, sf(), "embeddings").count()
     assert(codes.count() == n, "artifact must hold standing + appended rows")
     assert(codes.select("vec_id").distinct().count() == n, "no duplicate encodes")

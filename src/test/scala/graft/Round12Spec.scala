@@ -78,15 +78,11 @@ class Round12Spec extends SparkSpec {
     def results() = AnnIndex.query(spark, dir, q, k = 5, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     val before = results()
-    def fragCounts(): Map[Int, Int] = {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/codes"))
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("cell="))
-        .map(d => d.getPath.getName.stripPrefix("cell=").toInt ->
-          fs.listStatus(d.getPath).count(_.getPath.getName.endsWith(".parquet")))
-        .toMap
-    }
+    // LIVE fragments per cell: the retention window keeps the previous
+    // snapshot's fragments on disk, so the manifest, not the listing, counts
+    def fragCounts(): Map[Int, Int] =
+      graft.operators.IndexLog.snapshotFiles(spark, dir, "codes").head
+        .groupBy(_.split("/")(1).stripPrefix("cell=").toInt).view.mapValues(_.size).toMap
     val overfull = fragCounts().filter(_._2 > 1).keySet
     assert(overfull.nonEmpty, "appends must have fragmented at least one cell")
     val compacted = AnnIndex.compact(spark, dir, maxFragments = 1)
@@ -95,6 +91,15 @@ class Round12Spec extends SparkSpec {
     assert(results() == before, "compaction must be invisible to queries")
     // idempotent: nothing left over the threshold
     assert(AnnIndex.compact(spark, dir, maxFragments = 1).isEmpty)
+    // one more commit pushes the pre-compaction fragments out of the
+    // window: every codes file on disk is in one of the two retained manifests
+    AnnIndex.compact(spark, dir, maxFragments = 0)
+    val retained = graft.operators.IndexLog.snapshotFiles(spark, dir, "codes").flatten.toSet
+    val onDisk = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/codes")).toArray
+      .map(_.toString).filter(f => f.endsWith(".parquet") && !f.contains("/."))
+      .map(f => "codes/" + f.split("/codes/")(1)).toSet
+    assert(onDisk.subsetOf(retained), s"unretained codes files: ${onDisk -- retained}")
+    assert(results() == before)
   }
 
   test("q169: top pair matches a driver recompute; frequencies weighted by token count") {

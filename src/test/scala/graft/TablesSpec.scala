@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.operators.AnnIndex
+import graft.operators.{AnnIndex, IndexLog, LexIndex}
 import graft.sources.Tables
 
 /** `Tables.parquet`, the one parquet reader: its footer-derived schema is
@@ -24,7 +24,7 @@ class TablesSpec extends SparkSpec {
     val emb = Tables.table(spark, sf(), "embeddings")
     AnnIndex.build(emb, col("vec_id"), col("embedding"), s"$dir/ann")
     assert(Files.isDirectory(Paths.get(s"$dir/ann/codes/cell=0")))
-    Seq("centroids", "codes").foreach(a => sameSchema(s"$dir/ann/$a"))
+    Seq("centroids/g1", "codes").foreach(a => sameSchema(s"$dir/ann/$a"))
     assert(Tables.parquet(spark, s"$dir/ann/codes").columns.last == "cell")
 
     // two source files, one micro-batch each, every batch appended by foreachBatch
@@ -54,6 +54,20 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("parquet: the file-list form gives a live postings or codes list Spark's schema, with no job") {
+    val dir = s"target/tmp/tables_spec/${System.nanoTime()}"
+    LexIndex.build(Tables.table(spark, sf(), "documents"), col("doc_id"), col("text"), s"$dir/lex")
+    AnnIndex.build(Tables.table(spark, sf(), "embeddings"), col("vec_id"), col("embedding"), s"$dir/ann")
+    for ((ix, component) <- Seq("lex" -> "postings", "ann" -> "codes")) {
+      val base = s"$dir/$ix/$component"
+      val files = IndexLog.snapshotFiles(spark, s"$dir/$ix", component).head.map(f => s"$dir/$ix/$f")
+      assert(files.size > 1, component)
+      assert(Tables.parquet(spark, base, files).schema ==
+        spark.read.option("basePath", base).parquet(files: _*).schema, component)
+      assert(jobsOf(Tables.parquet(spark, base, files)) == 0, s"$component: jobs to build the DataFrame")
+    }
+  }
+
   test("parquet: a path with no data file raises Spark's own error") {
     val empty = Files.createTempDirectory(Paths.get("target"), "tables_spec_empty")
     val err = intercept[org.apache.spark.sql.AnalysisException](Tables.parquet(spark, empty.toString))
@@ -65,10 +79,40 @@ class TablesSpec extends SparkSpec {
     val offenders = Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && !exempt(p.getFileName.toString))
       .flatMap { p =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains("read.parquet(") => s"$p:${i + 1}: ${line.trim}"
-        }
+        val src = Files.readString(p)
+        parquetReads(src).map(i => s"$p:${src.take(i).count(_ == '\n') + 1}")
       }.toSeq
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the reader guard sees option-chained and multi-line parquet reads") {
+    val flagged = Seq("spark.read.parquet(p)", "spark.read.schema(s).parquet(p)",
+      "spark.read.option(\"basePath\", s\"$dir/$base\")\n      .parquet(rels.map(r => s\"$dir/$r\"): _*)")
+    val clean = Seq("spark.readStream.schema(s).parquet(p)", "df.write.parquet(p)",
+      "in.read(chunk)", "spark.read.option(\"header\", \"true\").csv(p)")
+    flagged.foreach(src => assert(parquetReads(src).nonEmpty, src))
+    clean.foreach(src => assert(parquetReads(src).isEmpty, src))
+  }
+
+  /** Offsets of the `read` chains in `src` that end in `.parquet(`: from
+    * each `.read`, follow `.name(args)` links (any whitespace, balanced
+    * parentheses) to the end of the chain. */
+  private def parquetReads(src: String): Seq[Int] = {
+    val link = """\s*\.\s*(\w+)\s*""".r
+    def endsInParquet(from: Int): Boolean = link.findPrefixMatchOf(src.substring(from)) match {
+      case Some(m) =>
+        val at = from + m.end
+        if (at >= src.length || src(at) != '(') endsInParquet(at)
+        else if (m.group(1) == "parquet") true
+        else {
+          var depth = 0
+          var i = at
+          do { if (src(i) == '(') depth += 1 else if (src(i) == ')') depth -= 1; i += 1 }
+          while (depth > 0 && i < src.length)
+          endsInParquet(i)
+        }
+      case None => false
+    }
+    """\.read\b(?!\s*\()""".r.findAllMatchIn(src).map(_.start).filter(i => endsInParquet(i + 5)).toSeq
   }
 }
