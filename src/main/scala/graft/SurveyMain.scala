@@ -80,9 +80,16 @@ object SurveyMain {
       clf: AnswerClassifier): DataFrame =
     clf.classify(Classify.keys(df, industry, qcols.map(q => q -> col(q))))
 
+  /** The cache at `path`, or an empty one. A run killed inside
+    * [[writeCache]], between its delete and its rename, leaves only the
+    * complete staged copy; its swap is finished here, so the next run
+    * starts from that cache rather than from an empty one (and can later
+    * stage its own write without overwriting the files it reads). */
   def loadCache(spark: SparkSession, path: String): DataFrame = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(path))) spark.read.parquet(path)
+    val p = new Path(path); val staged = new Path(path + "._staged")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p) && fs.exists(new Path(staged, "_SUCCESS"))) fs.rename(staged, p)
+    if (fs.exists(p)) spark.read.parquet(path)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(
         "industry string, question string, answer string, sentiment string, category string"))

@@ -16,15 +16,10 @@ import org.apache.spark.sql.functions._
   */
 object TextExprs {
 
-  /** Astral-plane codepoints (emoji etc.) — survey_analysis.py:79.
-    * (Kept for the generated DuckDB oracle SQL and the regex-form tests;
-    * the engine-side scan is the native plans.CleanText expression.) */
-  val AstralRegex = "[\\x{10000}-\\x{10FFFF}]"
-
   /** survey_analysis.py:76-81. Null-safe: non-string/null → "".
     * Native single-pass byte scan (plans.CleanText) — semantically equal to
     * trim(regexp_replace(regexp_replace(trim(s), astral, ''), '\\s+', ' '))
-    * and asserted so by TextExprsSpec's differential property test. */
+    * and asserted so by PropertySpec's differential property test. */
   def cleanText(c: Column): Column =
     graft.plans.CleanText.clean(coalesce(c, lit("")))
 
@@ -36,10 +31,6 @@ object TextExprs {
     * `len(list_filter(string_split(lower(<clean>), ' '), t -> t <> ''))`. */
   def tokenCount(c: Column): Column =
     size(filter(split(lower(cleanText(c)), " "), t => t =!= "")).cast("long")
-
-  /** The original two-regex form — the oracle-twin semantics reference. */
-  def cleanTextRegex(c: Column): Column =
-    trim(regexp_replace(regexp_replace(trim(coalesce(c, lit(""))), AstralRegex, ""), "\\s+", " "))
 
   /** survey_analysis.py:83-84 — lower(trim(s)) ∈ FILLER_VALUES. */
   def isFiller(c: Column): Column =
@@ -150,12 +141,10 @@ object TextExprs {
   /** BPE-ish token count: runs of letters, single digits, single
     * non-alphanumeric marks — a cheap proxy for subword token cost.
     * Native single-scan form (plans.BpeCount); the regex it implements is
-    * kept below for the oracle twin and the differential test. */
+    * kept here for the oracle twins (TextExprsSpec checks the two agree). */
   val BpeTokenRegex = "[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"
   def tokenCountBpe(c: Column): Column =
     graft.plans.BpeCount.bpeCount(coalesce(c, lit("")))
-  def tokenCountBpeRegex(c: Column): Column =
-    size(regexp_extract_all(coalesce(c, lit("")), lit(BpeTokenRegex), lit(0))).cast("int")
 
   /** Count of regex hits in lowercased text (kept for char-class patterns,
     * e.g. the CJK range; plain word sets go through [[wordHitCount]]). */
@@ -183,19 +172,9 @@ object TextExprs {
       .otherwise("fr")
   }
 
-  /** Stopword-count language ID over {en, es, de, fr} + CJK detection.
-    * Single-Column form (each hit count scanned once here, but `best` and the
-    * tie-break re-embed them — use [[withLangId]] on the hot path). */
-  def langId(c: Column): Column =
-    langIdFromHits(
-      wordHitCount(c, Lexicons.StopwordsEn),
-      wordHitCount(c, Lexicons.StopwordsEs),
-      wordHitCount(c, Lexicons.StopwordsDe),
-      wordHitCount(c, Lexicons.StopwordsFr),
-      hitCount(c, "[\\x{4e00}-\\x{9fff}]"))
-
-  /** DataFrame-level staged language ID: one projection runs the five regex
-    * scans, the next applies the decision rule over the attribute columns. */
+  /** Stopword-count language ID over {en, es, de, fr} + CJK detection,
+    * staged: one projection runs the five hit-count scans, the next applies
+    * the decision rule over the attribute columns. */
   def withLangId(df: org.apache.spark.sql.DataFrame, text: Column,
       outCol: String): org.apache.spark.sql.DataFrame = {
     val p = s"_${outCol}_"

@@ -87,35 +87,6 @@ object Multimodal {
       .select(col("doc_id"), col("n_frames"),
         explode(sequence(lit(0), col("n_frames") - 1, lit(stride))).as("frame_idx"))
   }
-
-  /** Resize stage: clamp the longer edge to `maxDim`, preserving aspect
-    * ratio (integer arithmetic, floor) — the metadata math is real, the
-    * pixel resample is the stubbed codec call. */
-  def resizeMeta(meta: Dataset[MediaMeta], maxDim: Int): Dataset[MediaMeta] = {
-    val spark = meta.sparkSession
-    import spark.implicits._
-    meta.map { m =>
-      val longEdge = math.max(m.width, m.height)
-      if (longEdge <= maxDim) m
-      else m.copy(
-        width = math.max(1, m.width * maxDim / longEdge),
-        height = math.max(1, m.height * maxDim / longEdge))
-    }
-  }
-
-  /** Feature-extraction stage: payload → dense embedding via the codec's
-    * encoder call (default: the stub's L2-normalized byte histogram —
-    * deterministic, so the downstream similarity/dedup operators are
-    * testable on its output). Executor-side partition batches, like a real
-    * encoder. */
-  def featureExtract(media: DataFrame, dim: Int = 16,
-                     codec: MediaCodec = StubCodec): Dataset[MediaFeature] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("doc_id", "payload", "kind").as[(Long, Array[Byte], String)]
-      .mapPartitions(_.map { case (id, bytes, kind) =>
-        codec.encodeFeature(id, bytes, kind, dim) })
-  }
 }
 
 /** Dense feature vector produced by the (stubbed) encoder stage. */

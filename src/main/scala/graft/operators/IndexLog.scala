@@ -177,17 +177,17 @@ final class IndexLog(spark: SparkSession, dir: String, gens: Seq[String],
   }
 
   /** Best-effort GC, run after every commit: everything outside the
-    * retention window (the two newest valid manifests) is deleted — older
-    * manifests, unreferenced generations, and data files no retained
-    * manifest lists (files a compaction replaced two commits ago, debris
-    * from crashed writes). A crash mid-GC leaves orphans, never
-    * corruption. */
+    * retention window (the two newest valid manifests) is deleted — every
+    * other manifest (older ones, torn writes at any seq, names past Long),
+    * unreferenced generations, and data files no retained manifest lists
+    * (files a compaction replaced two commits ago, debris from crashed
+    * writes). A crash mid-GC leaves orphans, never corruption. */
   private def gc(): Unit = {
     val keep = newest(2)
     if (keep.isEmpty) return
-    val minName = manifestName(keep.map(_.seq).min)
+    val keepNames = keep.map(m => manifestName(m.seq)).toSet
     fs.listStatus(new Path(s"$dir/manifest")).map(_.getPath)
-      .filter(p => ManifestName.matches(p.getName) && p.getName < minName)
+      .filter(p => ManifestName.matches(p.getName) && !keepNames(p.getName))
       .foreach(fs.delete(_, false))
     val keepGens = keep.flatMap(_.gens.values).toSet
     gens.foreach { g =>

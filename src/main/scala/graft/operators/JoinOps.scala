@@ -70,17 +70,4 @@ object JoinOps {
     val might = udf((k: java.lang.Long) => k != null && bc.value.mightContainLong(k))
     big.where(might(bigKey))
   }
-
-  /** Salted join for a skewed left side against a (modest) right side: the
-    * left's hot keys are spread across `nSalts` sub-keys, the right side is
-    * replicated once per salt. Correct for any join whose right side fits
-    * nSalts-fold replication; results identical to the plain equi-join. */
-  def saltedJoin(skewed: DataFrame, other: DataFrame, keys: Seq[String],
-      nSalts: Int = 16, joinType: String = "inner"): DataFrame = {
-    require(nSalts >= 1)
-    val l = skewed.withColumn("_salt",
-      pmod(xxhash64(monotonically_increasing_id(), spark_partition_id()), lit(nSalts.toLong)))
-    val r = other.withColumn("_salt", explode(sequence(lit(0L), lit(nSalts.toLong - 1))))
-    l.join(r, keys :+ "_salt", joinType).drop("_salt")
-  }
 }

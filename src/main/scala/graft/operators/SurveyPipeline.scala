@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import graft.functions.{Lexicons, TextExprs}
@@ -63,46 +63,26 @@ object SurveyPipeline {
       .otherwise(transform(arr, p => substring(p, 1, 100)))
   }
 
-  /** O9 — ResponseID synthesis. Two modes, per SURVEY.md §7.5:
-    *  - faithful: input-order `str(idx+1)` (survey_analysis.py:292) via
-    *    zipWithIndex — breaks whole-stage pipelines, test-scale only;
-    *  - scale: deterministic content-keyed surrogate (xxhash64 of the row) —
-    *    distributes, stable under repartitioning.
-    */
-  def withResponseId(df: DataFrame, faithful: Boolean): DataFrame =
-    if (faithful) {
-      val schema = df.schema.add("ResponseID", StringType, nullable = false)
-      val rdd = df.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1).toString) }
-      df.sparkSession.createDataFrame(rdd, schema)
-    } else {
-      df.withColumn("ResponseID",
-        xxhash64(concat_ws("", df.columns.map(c => coalesce(col(c).cast("string"), lit(""))): _*))
-          .cast("string"))
-    }
-
-  /** pandas `read_csv` default NA sentinels. The reference reads with
-    * pandas and then `str()`-ifies each answer (survey_analysis.py:283), so
-    * a missing or sentinel cell ("N/A", "NULL", …) becomes the LITERAL
-    * string "nan" in its wide frame — the golden workbook carries those
-    * cells. "nan" sits in FILLER_VALUES (:60), so classification is
-    * unaffected; only the displayed answer text differs. */
-  val PandasNaValues: Seq[String] = Seq(
-    "", "#N/A", "#N/A N/A", "#NA", "-1.#IND", "-1.#QNAN", "-NaN", "-nan",
-    "1.#IND", "1.#QNAN", "<NA>", "N/A", "NA", "NULL", "NaN", "None",
-    "n/a", "nan", "null")
-
-  /** Faithful-mode NA coercion: question cells that pandas would read as
-    * NaN become the literal "nan" (see [[PandasNaValues]]). Scale path
-    * keeps real nulls — this exists for byte-parity with the reference's
-    * report artifacts. */
-  def withPandasNa(df: DataFrame): DataFrame = {
-    val qset = questionColumns(df).toSet
-    df.select(df.columns.map { c =>
-      if (qset(c))
-        when(col(c).isNull || col(c).isin(PandasNaValues: _*), lit("nan"))
-          .otherwise(col(c)).as(c)
-      else col(c)
-    }: _*)
+  /** O9 — ResponseID: the response's 1-based input position as a string,
+    * the reference's `str(idx+1)` (survey_analysis.py:292). Built as an
+    * expression over the input frame: `monotonically_increasing_id` numbers
+    * each partition's rows from 0 in its low 33 bits, and a per-partition
+    * offset (the rows of every earlier partition) makes that global. A
+    * one-partition input, such as a one-file CSV, needs no offsets and so
+    * no job; a wider one runs one job that counts each partition's rows.
+    * The input's partitioning must be the same in that count and in the
+    * plan that uses the ids, which holds for a file scan and a local
+    * relation. The frame is not rebuilt from an RDD: that would be planned
+    * at `spark.sql.defaultSizeInBytes`, and the distinct-key join-backs
+    * would lose their planned broadcast. */
+  private def withResponseId(df: DataFrame): DataFrame = {
+    val rows = df.queryExecution.toRdd
+    val offsets =
+      if (rows.getNumPartitions <= 1) Seq(0L)
+      else rows.mapPartitions(it => Iterator(it.size.toLong)).collect().toSeq.scanLeft(0L)(_ + _)
+    val position = monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) +
+      element_at(typedLit(offsets), spark_partition_id() + 1) + 1
+    df.withColumn("ResponseID", position.cast(StringType))
   }
 
   /** O5+O6+O8+O10 — the wide analysis table (survey_analysis.py:275-317):
@@ -126,11 +106,9 @@ object SurveyPipeline {
       dfIn: DataFrame,
       industry: String,
       clf: AnswerClassifier = DemoAnswerClassifier,
-      faithfulIds: Boolean = false,
       idCol: Option[Column] = None,
-      pandasNa: Boolean = false,
   ): DataFrame = {
-    val wide = wideFrame(dfIn, industry, clf, faithfulIds, idCol, pandasNa)
+    val wide = wideFrame(dfIn, industry, clf, idCol)
     if (clf == DemoAnswerClassifier) wide else wide.localCheckpoint()
   }
 
@@ -140,21 +118,17 @@ object SurveyPipeline {
       dfIn: DataFrame,
       industry: String,
       clf: AnswerClassifier,
-      faithfulIds: Boolean = false,
       idCol: Option[Column] = None,
-      pandasNa: Boolean = false,
   ): DataFrame = {
     require(dfIn.columns.length >= 4, "need >= 4 columns")
-    val dfNa = if (pandasNa) withPandasNa(dfIn) else dfIn
-    val productsCol = dfNa.columns(2)
-    val qcols = questionColumns(dfNa)
+    val productsCol = dfIn.columns(2)
+    val qcols = questionColumns(dfIn)
     val bases = questionBases(qcols)
 
-    // idCol: caller-supplied stable key (the scale path — no zipWithIndex,
-    // no content hashing); otherwise synthesize per `faithfulIds`.
+    // idCol: a caller-supplied key costs nothing; otherwise the input position
     val withId = idCol match {
-      case Some(c) => dfNa.withColumn("ResponseID", c.cast(StringType))
-      case None => withResponseId(dfNa, faithfulIds)
+      case Some(c) => dfIn.withColumn("ResponseID", c.cast(StringType))
+      case None => withResponseId(dfIn)
     }
     val exploded = withId.withColumn("Product", explode(productsArray(col(productsCol))))
 
@@ -267,7 +241,7 @@ object SurveyPipeline {
         "(use writeReport's partitioned parquet for bulk data)")
     // one driver-side collect, pre-sorted to the reference's sheet order:
     // groupby("Product") iterates sorted keys, each sheet sorted by
-    // ResponseID (a STRING sort — faithful ids are str(idx+1))
+    // ResponseID (a STRING sort, as the reference's: ids are str(idx+1))
     val rows = wide.orderBy("Product", "ResponseID").collect()
       .map(r => header.indices.map(r.get))
     val byProduct = rows.groupBy(_(1).asInstanceOf[String]).toSeq.sortBy(_._1)

@@ -20,30 +20,6 @@ case class BucketSigs(sigs: Seq[Long])
   * (SURVEY.md §7.6). */
 object EventStreams {
 
-  /** Tumbling-window counts with a watermark for late data. */
-  def windowedCounts(events: DataFrame, watermark: String = "10 minutes",
-      win: String = "5 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), win), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
-
-  /** Sliding-window load metric. */
-  def slidingLoad(events: DataFrame, win: String = "10 minutes",
-      slide: String = "5 minutes", watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), win, slide))
-      .agg(count(lit(1)).as("n"), round(avg("value"), 4).as("avg_value"))
-
-  /** Session windows per user (gap-based). */
-  def userSessions(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum("value").as("session_value"))
-
   /** Custom streaming state: running (count, cents) per event_type via
     * mapGroupsWithState — the KeyValueGroupedDataset form of arbitrary
     * stateful processing. The suite's cents discipline: the state carries
@@ -67,14 +43,6 @@ object EventStreams {
       }
       .toDF("event_type", "n", "cents")
   }
-
-  /** Streaming exact dedup: replayed/duplicate ids within the watermark
-    * horizon are dropped with bounded state (the streaming face of
-    * Dedup.exactGroups). */
-  def dedupStream(events: DataFrame, idCols: Seq[String] = Seq("event_id"),
-      watermark: String = "30 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(idCols.head, idCols.tail: _*)
 
   /** Stream-static enrichment: join each streamed event to a static (batch)
     * dimension table — the canonical "decorate the stream with reference

@@ -100,11 +100,6 @@ class ImageIoCodecSpec extends SparkSpec {
     // the audio row flowed through the stub branch inside the same pass
     assert(metas(4L) === StubCodec.decodeMeta(4L,
       "fake audio payload".getBytes("UTF-8"), "audio"))
-    // resize math operates on REAL decoded dims
-    val resized = Multimodal.resizeMeta(
-      Multimodal.decodeMeta(media, ImageIoCodec), maxDim = 32)
-      .collect().map(m => m.doc_id -> m).toMap
-    assert(resized(2L).width === 32 && resized(2L).height === 24)
   }
 
   test("q300/q301 run end-to-end on the fixture and return rows") {

@@ -141,6 +141,11 @@ class IndexLogSpec extends SparkSpec {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$dir/manifest/m${"9" * 20}.txt"), "junk")
       assert(ix.answers(dir) === ix.fullAnswers)
+      // the next commit's GC reclaims both: only the two retained manifests stay
+      ix.build(ix.corpus, dir)
+      assert(new File(s"$dir/manifest").list().filterNot(_.startsWith(".")).sorted.toSeq ===
+        Seq(1L, 2L).map(seq => f"m$seq%020d.txt"))
+      assert(ix.answers(dir) === ix.fullAnswers)
     }
 
     test(s"${ix.name}: orphan data files and stray generations are invisible to the query path") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import graft.functions.TextExprs
@@ -37,6 +38,12 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** The two-regex form [[TextExprs.cleanText]]'s native scan implements:
+    * strip, drop astral codepoints (survey_analysis.py:79), collapse \s+, strip. */
+  private def cleanTextRegex(c: Column): Column =
+    trim(regexp_replace(regexp_replace(trim(coalesce(c, lit(""))),
+      "[\\x{10000}-\\x{10FFFF}]", ""), "\\s+", " "))
+
   test("native cleanText == the two-regex reference form on adversarial inputs") {
     val hardGen: Gen[String] = Gen.listOf(Gen.oneOf(
       "a", "🙂", "😕", "é", "中", "\t", "\n", "\r", "", "\f",
@@ -45,7 +52,7 @@ class PropertySpec extends SparkSpec {
       val df = texts.toDF("t")
       val got = df.select(
         TextExprs.cleanText(col("t")).as("native"),
-        TextExprs.cleanTextRegex(col("t")).as("regex")).collect()
+        cleanTextRegex(col("t")).as("regex")).collect()
       got.foreach(r => assert(r.getString(0) == r.getString(1),
         s"native='${r.getString(0)}' regex='${r.getString(1)}'"))
     }
@@ -58,7 +65,7 @@ class PropertySpec extends SparkSpec {
         val df = prods.zipWithIndex
           .map { case (p, i) => (s"e$i", s"n$i", p, "some answer") }
           .toDF("Email", "Name", "Products", "Q1")
-        val wide = SurveyPipeline.analyzeWide(df, "retail", faithfulIds = true)
+        val wide = SurveyPipeline.analyzeWide(df, "retail")
         val expected = prods.map { p =>
           math.max(1, p.split(",").map(_.trim).count(_.nonEmpty))
         }.sum
@@ -76,10 +83,10 @@ class PropertySpec extends SparkSpec {
           }
           val df = rows.toDF("Email", "Name", "Products", "QA", "QB")
           val shuffled = rows.reverse.toDF("Email", "Name", "Products", "QA", "QB")
-          val wide = SurveyPipeline.analyzeWide(df, "retail", faithfulIds = true)
+          val wide = SurveyPipeline.analyzeWide(df, "retail")
           val s1 = SurveyPipeline.buildSummary(wide)
           val s2 = SurveyPipeline.buildSummary(
-            SurveyPipeline.analyzeWide(shuffled, "retail", faithfulIds = true))
+            SurveyPipeline.analyzeWide(shuffled, "retail"))
           val total = s1.select(
             sum(col("Positive") + col("Neutral") + col("Negative") + col("Mixed")))
             .collect()(0).getLong(0)

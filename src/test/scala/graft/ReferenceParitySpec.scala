@@ -33,7 +33,7 @@ class ReferenceParitySpec extends SparkSpec {
   }
 
   test("explode fan-out matches the reference: 988 wide rows, 6 products") {
-    val wide = SurveyPipeline.analyzeWide(df, "apparel", faithfulIds = true)
+    val wide = SurveyPipeline.analyzeWide(df, "apparel")
     assert(wide.count() == 988)
     val products = wide.select("Product").distinct().collect().map(_.getString(0)).toSet
     assert(products.size == 6 && !products.contains("Unspecified"))

@@ -9,56 +9,6 @@ import java.sql.Timestamp
 class StreamingMultimodalSpec extends SparkSpec {
   import spark.implicits._
 
-  test("windowedCounts runs as a genuine streaming query (memory sink)") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, String, Double)]
-    val events = mem.toDF().toDF("ts", "event_type", "value")
-    val agg = EventStreams.windowedCounts(events, watermark = "10 minutes", win = "5 minutes")
-    val q = agg.writeStream.outputMode("complete").format("memory").queryName("wc").start()
-    try {
-      mem.addData(
-        (Timestamp.valueOf("2024-01-01 00:01:00"), "click", 1.0),
-        (Timestamp.valueOf("2024-01-01 00:02:00"), "click", 2.0),
-        (Timestamp.valueOf("2024-01-01 00:07:00"), "view", 3.0))
-      q.processAllAvailable()
-      val rows = spark.table("wc").collect()
-      assert(rows.map(_.getAs[Long]("n")).sum == 3)
-      assert(rows.length == 2) // two (window, type) groups
-    } finally q.stop()
-  }
-
-  test("watermark drops events later than the horizon in append mode") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, String, Double)]
-    val events = mem.toDF().toDF("ts", "event_type", "value")
-    val agg = EventStreams.windowedCounts(events, watermark = "10 minutes", win = "5 minutes")
-    val q = agg.writeStream.outputMode("append").format("memory").queryName("wm").start()
-    try {
-      mem.addData((Timestamp.valueOf("2024-01-01 00:01:00"), "click", 1.0))
-      q.processAllAvailable()
-      // advance event time far beyond 00:01 + watermark → closes the first window
-      mem.addData((Timestamp.valueOf("2024-01-01 01:00:00"), "view", 2.0))
-      q.processAllAvailable()
-      // LATE: event-time 00:02 is behind the 00:50 watermark → must be dropped
-      mem.addData((Timestamp.valueOf("2024-01-01 00:02:00"), "click", 99.0))
-      q.processAllAvailable()
-      // and the closed [00:00,00:05) click window must still count exactly 1
-      mem.addData((Timestamp.valueOf("2024-01-01 02:00:00"), "view", 3.0))
-      q.processAllAvailable()
-      val clicks = spark.table("wm").collect()
-        .filter(_.getAs[String]("event_type") == "click")
-      assert(clicks.length == 1 && clicks.head.getAs[Long]("n") == 1L,
-        s"late event must not reopen the closed window: ${clicks.mkString(";")}")
-    } finally q.stop()
-  }
-
-  test("windowed/session aggregations also run in batch mode on the events table") {
-    val ev = graft.sources.Tables.table(spark, sf(), "events")
-    assert(EventStreams.windowedCounts(ev).count() > 0)
-    assert(EventStreams.slidingLoad(ev).count() > 0)
-    assert(EventStreams.userSessions(ev).count() > 0)
-  }
-
   test("mapGroupsWithState keeps running totals across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, Long)]
@@ -119,26 +69,6 @@ class StreamingMultimodalSpec extends SparkSpec {
       assert(rows.head.getAs[Long]("n_events") == 2L)
       assert(rows.head.getAs[Long]("cents") == 500L)
       assert(rows.head.getAs[Long]("last_ts_ms") - rows.head.getAs[Long]("first_ts_ms") == 60000L)
-    } finally q.stop()
-  }
-
-  test("dropDuplicatesWithinWatermark drops replayed event ids") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long)]
-    val df = mem.toDF().toDF("ts", "event_id")
-    val q = EventStreams.dedupStream(df)
-      .writeStream.outputMode("append").format("memory").queryName("dd").start()
-    try {
-      mem.addData(
-        (Timestamp.valueOf("2024-01-01 00:01:00"), 1L),
-        (Timestamp.valueOf("2024-01-01 00:02:00"), 2L))
-      q.processAllAvailable()
-      mem.addData( // replay id 1 within the watermark + one new id
-        (Timestamp.valueOf("2024-01-01 00:03:00"), 1L),
-        (Timestamp.valueOf("2024-01-01 00:04:00"), 3L))
-      q.processAllAvailable()
-      val ids = spark.table("dd").collect().map(_.getLong(1)).sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L))
     } finally q.stop()
   }
 
@@ -215,28 +145,6 @@ class StreamingMultimodalSpec extends SparkSpec {
       assert(m(("Beta", "Positive")) == 1) // batch 1
       assert(out.select("batch_id").distinct().count() == 2)
     } finally q.stop()
-  }
-
-  test("multimodal resize + feature-extract stages: deterministic, bounded, normalized") {
-    val docs = spark.read.parquet(sf() + "/documents.parquet")
-    val media = Multimodal.packFake(docs)
-    val meta = Multimodal.decodeMeta(media)
-    val resized = Multimodal.resizeMeta(meta, maxDim = 128).collect()
-    assert(resized.forall(m => math.max(m.width, m.height) <= 128))
-    // aspect preserved within integer-floor tolerance
-    val orig = meta.collect().map(m => m.doc_id -> m).toMap
-    resized.filter(m => math.max(orig(m.doc_id).width, orig(m.doc_id).height) > 128).foreach { m =>
-      val o = orig(m.doc_id)
-      val expected = o.width.toDouble / o.height
-      val got = m.width.toDouble / m.height
-      assert(math.abs(expected - got) / expected < 0.15, s"aspect drift for ${m.doc_id}")
-    }
-    val feats = Multimodal.featureExtract(media, dim = 16).collect()
-    assert(feats.forall(_.embedding.length == 16))
-    assert(feats.forall(f => math.abs(f.embedding.map(x => x * x).sum - 1.0) < 1e-5))
-    val again = Multimodal.featureExtract(media, dim = 16).collect()
-      .map(f => f.doc_id -> f.embedding.toSeq).toMap
-    assert(feats.forall(f => again(f.doc_id) == f.embedding.toSeq))
   }
 
   test("RemoteBatchClassifier: retry then degrade to (Neutral, No Feedback)") {

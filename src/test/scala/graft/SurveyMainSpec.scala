@@ -66,6 +66,49 @@ class SurveyMainSpec extends SparkSpec {
     assert(csvScans(Some(s"$base/report.xlsx")) == parquetOnly)
   }
 
+  test("run: the input-position ResponseID adds no job over a one-file CSV") {
+    val base = Files.createTempDirectory(
+      Files.createDirectories(Paths.get("target/tmp")), "survey_jobs")
+    val csv = Files.writeString(base.resolve("survey.csv"), Seq(
+      "Email,Name,Products,Q1 Opinion,Q2 Service",
+      "a@x.com,Ana,\"Alpha,Beta\",I love it,too expensive",
+      "b@x.com,Bo,Alpha,n/a,great support team",
+      "a@x.com,Ana,\"Alpha,Beta\",I love it,too expensive",
+      "c@x.com,Cy,,late again,I love it").mkString("\n")).toString
+    val cache = s"$base/cache.parquet"
+    def jobs(): Int = jobsOf(SurveyMain.run(spark, csv, "retail", s"$base/out", cache, Some(s"$base/r.xlsx")))
+    // a cold run, then warm ones; over a one-partition input the id itself
+    // launches no job
+    assert(Seq(jobs(), jobs(), jobs()) == Seq(32, 37, 37))
+  }
+
+  test("loadCache: a run killed between writeCache's delete and rename keeps its cache") {
+    val base = Files.createTempDirectory(
+      Files.createDirectories(Paths.get("target/tmp")), "survey_staged").toString
+    val csv = Files.writeString(Paths.get(base, "survey.csv"), Seq(
+      "Email,Name,Products,Q1 Opinion,Q2 Service",
+      "a@x.com,Ana,Alpha,I love it,great support team").mkString("\n")).toString
+    // the entry a classifier would never give, so a hit is visible in the output
+    val entry = ("retail", "Q1 Opinion", "I love it", "Negative", "Poisoned")
+    val cache = s"$base/cache.parquet"
+    // killed before the staged write finished: no _SUCCESS, an empty cache
+    Seq(entry).toDF("industry", "question", "answer", "sentiment", "category")
+      .write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(s"$cache._staged")
+    assert(SurveyMain.loadCache(spark, cache).count() == 0)
+    // killed after the delete: only the complete staged copy is on disk
+    Seq(entry).toDF("industry", "question", "answer", "sentiment", "category")
+      .write.mode("overwrite").parquet(s"$cache._staged")
+    assert(!Files.exists(Paths.get(cache)))
+    assert(SurveyMain.loadCache(spark, cache).as[(String, String, String, String, String)]
+      .collect().toSeq == Seq(entry))
+    // the next run serves it and writes its own cache over it
+    val (wide, _) = SurveyMain.run(spark, csv, "retail", s"$base/out", cache)
+    assert(wide.select("Q1_Opinion_Category").as[String].collect().toSeq == Seq("Poisoned"))
+    assert(spark.read.parquet(cache).where(col("category") === "Poisoned").count() == 1)
+    assert(!Files.exists(Paths.get(s"$cache._staged")))
+  }
+
   test("parseArgs handles the reference's flag shapes") {
     val m = SurveyMain.parseArgs(Array("--input", "a.csv", "--industry", "retail", "--max-chars", "600"))
     assert(m == Map("input" -> "a.csv", "industry" -> "retail", "max-chars" -> "600"))

@@ -57,7 +57,7 @@ class SurveyPipelineSpec extends SparkSpec {
   }
 
   test("analyzeWide: fan-out, triplet schema, classification") {
-    val wide = SurveyPipeline.analyzeWide(surveyDf, "retail", faithfulIds = true)
+    val wide = SurveyPipeline.analyzeWide(surveyDf, "retail")
     assert(wide.count() == 2 + 1 + 1 + 2) // Σ max(1, #products)
     assert(wide.columns.toSeq == Seq("ResponseID", "Product",
       "Q1_Opinion_Answer", "Q1_Opinion_Sentiment", "Q1_Opinion_Category",
@@ -78,8 +78,64 @@ class SurveyPipelineSpec extends SparkSpec {
     assert(r3.getAs[String]("Q2_Delivery_Category") == "General") // em-dash is not filler
   }
 
+  test("ResponseID: identical responses, and cells that only split differently, get different ids") {
+    val same = ("a@x.com", "Ana", "Alpha Jacket", "I love it", "too expensive")
+    val df = Seq(same, same,
+      ("ab", "c", "Alpha Jacket", "I love it", "too expensive"),
+      ("a", "bc", "Alpha Jacket", "I love it", "too expensive"),
+    ).toDF("Email", "Name", "Products", "Q1 Opinion", "Q2  Delivery")
+    val ids = SurveyPipeline.analyzeWide(df, "retail").select("ResponseID").as[String].collect()
+    assert(ids.sorted.toSeq == Seq("1", "2", "3", "4"))
+  }
+
+  test("ResponseID is the 1-based input position: one-file CSV, 1-, 4-partition frames, 4-file CSV") {
+    val rows = (1 to 10).map(i => Seq(s"r$i@x.com", "N", if (i % 3 == 0) "\"P1,P2\"" else "P1", s"answer $i"))
+    val header = "Email,Name,Products,Q1"
+    val dir = tmpDir()
+    val oneFile = SurveyPipeline.readSurveyCsv(spark,
+      csvFile(dir, "ids.csv", (header +: rows.map(_.mkString(","))).mkString("\n")))
+    // four files of 2, 3, 2 and 3 rows: one scan partition each
+    Files.createDirectories(Paths.get(dir, "parts"))
+    Seq(0 -> 2, 2 -> 5, 5 -> 7, 7 -> 10).foreach { case (from, until) =>
+      csvFile(dir, s"parts/ids$from.csv", (header +: rows.slice(from, until).map(_.mkString(","))).mkString("\n"))
+    }
+    val fourFiles = SurveyPipeline.readSurveyCsv(spark, s"$dir/parts")
+    val frame = rows.map { case Seq(e, n, p, a) => (e, n, p.stripPrefix("\"").stripSuffix("\""), a) }
+      .toDF("Email", "Name", "Products", "Q1")
+    val cases = Seq("one-file CSV" -> oneFile, "1-partition frame" -> frame.coalesce(1),
+      "4-partition frame" -> frame, "4-file CSV" -> fourFiles)
+    assert(cases.map(_._2.rdd.getNumPartitions) == Seq(1, 1, 4, 4))
+    for ((name, df) <- cases) {
+      // input order is the order the input's scan yields its rows
+      val expected = df.select("Q1").as[String].collect().zipWithIndex
+        .map { case (a, i) => (i + 1).toString -> a }.toSeq
+      val wide = SurveyPipeline.analyzeWide(df, "retail")
+      assert(wide.count() == 13, name)
+      val got = wide.select("ResponseID", "Q1_Answer").distinct().as[(String, String)].collect()
+      assert(got.sortBy(_._1.toInt).toSeq == expected, name)
+    }
+    assert(cases.head._2.select("Q1").as[String].collect().toSeq == rows.map(_(3)))
+  }
+
+  test("ResponseID needs no job over a one-partition input and one count job over a wider one") {
+    val dir = tmpDir()
+    val rows = (1 to 4).map(i => s"r$i@x.com,N,P1,answer $i")
+    val csv = csvFile(dir, "jobs.csv", ("Email,Name,Products,Q1" +: rows).mkString("\n"))
+    Files.createDirectories(Paths.get(dir, "parts"))
+    rows.indices.foreach(i => csvFile(dir, s"parts/p$i.csv", s"Email,Name,Products,Q1\n${rows(i)}"))
+    for ((path, idJobs) <- Seq(csv -> 0, s"$dir/parts" -> 1)) {
+      val df = SurveyPipeline.readSurveyCsv(spark, path)
+      assert(jobsOf(SurveyPipeline.analyzeWide(df, "retail")) == idJobs, path)
+      // the pinned distinct-key path: the id adds exactly those jobs to a caller's key
+      val clf = new CacheJoinClassifier(
+        SurveyMain.loadCache(spark, s"$dir/absent.parquet"), DemoAnswerClassifier)
+      val withEmail = jobsOf(SurveyPipeline.analyzeWide(df, "retail", clf, idCol = Some(col("Email"))))
+      assert(jobsOf(SurveyPipeline.analyzeWide(df, "retail", clf)) == withEmail + idJobs, path)
+    }
+  }
+
   test("buildSummary: counts pivot with fixed sentiment columns") {
-    val wide = SurveyPipeline.analyzeWide(surveyDf, "retail", faithfulIds = true)
+    val wide = SurveyPipeline.analyzeWide(surveyDf, "retail")
     val sum = SurveyPipeline.buildSummary(wide)
     assert(sum.columns.toSeq == Seq("Product", "Question", "Positive", "Neutral", "Negative", "Mixed"))
     val alpha1 = sum.where(col("Product") === "Alpha Jacket" && col("Question") === "Q1_Opinion").collect()(0)
@@ -96,7 +152,7 @@ class SurveyPipelineSpec extends SparkSpec {
   test("duplicate headers that sanitize identically collapse (last wins)") {
     val df = Seq(("e", "n", "P1", "love it", "hate it"))
       .toDF("Email", "Name", "Products", "Q A", "Q  A") // both sanitize to Q_A
-    val wide = SurveyPipeline.analyzeWide(df, "retail", faithfulIds = true)
+    val wide = SurveyPipeline.analyzeWide(df, "retail")
     assert(wide.columns.count(_ == "Q_A_Sentiment") == 1)
     assert(wide.collect()(0).getAs[String]("Q_A_Sentiment") == "Negative") // last column wins
   }
@@ -167,7 +223,7 @@ class SurveyPipelineSpec extends SparkSpec {
   }
 
   test("writeReport: wide partitioned by Product, summary alongside, read-back intact") {
-    val wide = SurveyPipeline.analyzeWide(surveyDf, "retail", faithfulIds = true)
+    val wide = SurveyPipeline.analyzeWide(surveyDf, "retail")
     val summary = SurveyPipeline.buildSummary(wide)
     val out = "target/tmp/report"
     SurveyPipeline.writeReport(wide, summary, out)
@@ -181,7 +237,7 @@ class SurveyPipelineSpec extends SparkSpec {
   test("empty-ish input: zero data rows still yields empty wide frame") {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], surveyDf.schema)
-    val wide = SurveyPipeline.analyzeWide(empty, "retail", faithfulIds = true)
+    val wide = SurveyPipeline.analyzeWide(empty, "retail")
     assert(wide.count() == 0)
   }
 

@@ -11,6 +11,10 @@ class TextExprsSpec extends SparkSpec {
   private def one(input: String, c: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Any =
     Seq(input).toDF("s").select(c(col("s"))).collect()(0).get(0)
 
+  /** The regex form [[TextExprs.tokenCountBpe]]'s native scan implements. */
+  private def tokenCountBpeRegex(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    size(regexp_extract_all(coalesce(c, lit("")), lit(TextExprs.BpeTokenRegex), lit(0))).cast("int")
+
   test("cleanText strips, drops astral codepoints, collapses whitespace") {
     // verified reference semantics: "hola 🙂  mundo\t x" → "hola mundo x" (SURVEY.md §2.2)
     assert(one("hola 🙂  mundo\t x", TextExprs.cleanText) == "hola mundo x")
@@ -72,10 +76,12 @@ class TextExprsSpec extends SparkSpec {
     assert(one("a b  c", TextExprs.tokenCountWs) == 3)
     assert(one("", TextExprs.tokenCountWs) == 0)
     assert(one("don't stop", TextExprs.tokenCountBpe) == 4) // don + ' + t + stop
-    assert(one("the cat and the hat", TextExprs.langId) == "en")
-    assert(one("el gato y la casa de que", TextExprs.langId) == "es")
-    assert(one("你好世界", TextExprs.langId) == "zh")
-    assert(one("xyz qrs", TextExprs.langId) == "und")
+    def langId(s: String): String =
+      TextExprs.withLangId(Seq(s).toDF("s"), col("s"), "lang").select("lang").as[String].head()
+    assert(langId("the cat and the hat") == "en")
+    assert(langId("el gato y la casa de que") == "es")
+    assert(langId("你好世界") == "zh")
+    assert(langId("xyz qrs") == "und")
   }
 
   test("wordHitCount == the \\b-alternation regex count on adversarial inputs") {
@@ -113,7 +119,7 @@ class TextExprsSpec extends SparkSpec {
       "中文mixed漢字", "émoji 🙂 test", "", "123", "___", "tab\there")
     val got = texts.toDF("t").select(
       TextExprs.tokenCountBpe(col("t")).as("native"),
-      TextExprs.tokenCountBpeRegex(col("t")).as("regex")).collect()
+      tokenCountBpeRegex(col("t")).as("regex")).collect()
     got.zip(texts).foreach { case (r, t) =>
       assert(r.getInt(0) == r.getInt(1), s"mismatch on '$t': ${r.getInt(0)} vs ${r.getInt(1)}")
     }

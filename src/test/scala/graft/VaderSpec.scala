@@ -99,8 +99,7 @@ class VaderSpec extends SparkSpec {
     // classifier — every classified (question, answer) must agree with the
     // shipped cache (filler rows short-circuit and are not in the cache)
     val df = SurveyPipeline.readSurveyCsv(spark, ReferenceAssets.SurveyCsv)
-    val wide = SurveyPipeline.analyzeWide(df, "Apparel",
-      clf = new VaderDemoClassifier(lex), faithfulIds = true, pandasNa = true)
+    val wide = SurveyPipeline.analyzeWide(PandasNa(df), "Apparel", new VaderDemoClassifier(lex))
     val cache = cacheEntries.map { case (_, q, a, s, _) => (q, a) -> s }.toMap
     val qcols = SurveyPipeline.questionColumns(df)
     val bases = SurveyPipeline.questionBases(qcols)

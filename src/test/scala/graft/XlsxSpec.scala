@@ -78,8 +78,7 @@ class XlsxSpec extends SparkSpec {
     val out = "target/tmp/report.xlsx"
     new java.io.File("target/tmp").mkdirs()
     val wide = SurveyPipeline.analyzeWide(
-      SurveyPipeline.readSurveyCsv(spark, csv), "apparel",
-      faithfulIds = true, pandasNa = true)
+      PandasNa(SurveyPipeline.readSurveyCsv(spark, csv)), "apparel")
     SurveyPipeline.writeExcelReport(wide, out)
     out
   }
@@ -154,9 +153,8 @@ class XlsxSpec extends SparkSpec {
     val lex = graft.functions.Vader.loadLexicon(ReferenceAssets.VaderLexicon)
     val out = "target/tmp/report_vader.xlsx"
     val wide = SurveyPipeline.analyzeWide(
-      SurveyPipeline.readSurveyCsv(spark, csv), "Apparel",
-      clf = new graft.operators.VaderDemoClassifier(lex),
-      faithfulIds = true, pandasNa = true)
+      PandasNa(SurveyPipeline.readSurveyCsv(spark, csv)), "Apparel",
+      new graft.operators.VaderDemoClassifier(lex))
     SurveyPipeline.writeExcelReport(wide, out)
     val names = XlsxRead.sheetNames(out)
     assert(names == XlsxRead.sheetNames(golden))
