@@ -33,24 +33,22 @@ object PageRank {
     * form TextRank uses (ranks sum to |V|, not 1 — rescaling is a
     * projection if needed).
     *
-    * With `materialize` (the default) the normalized contribution table
-    * `(u, v, w/outw)` is built ONCE and eagerly `localCheckpoint`ed — the
-    * per-round lineage-truncation posture star-contraction CC already
-    * uses — so the `iters` unrolled rounds read shuffle-ready blocks
-    * instead of re-deriving the corpus-sized edge stream. (Pure lazy
+    * The normalized contribution table `(u, v, w/outw)` is built ONCE and
+    * eagerly `localCheckpoint`ed — the per-round lineage-truncation
+    * posture star-contraction CC already uses — so the `iters` unrolled
+    * rounds read shuffle-ready blocks instead of re-deriving the
+    * corpus-sized edge stream. (Pure lazy
     * unrolling cannot deliver this: Catalyst prunes different column
     * sets into each iteration's reference, the canonical subtrees
     * diverge, and ReuseExchange stops applying — measured as 32 source
-    * scans in q130's final plan before this.) Pass `materialize = false`
-    * when the edge list is already a local relation (q134's
-    * enum-bounded graph). */
-  def ranks(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
-      materialize: Boolean = true): DataFrame = {
+    * scans in q130's final plan before this.) An edge list that is already
+    * on the driver (q134's enum-bounded graph) goes to [[ranksLocal]]. */
+  def ranks(edges: DataFrame, iters: Int = 5, damping: Double = 0.85): DataFrame = {
     val ed = edges.select(col("u"), col("v"), col("w"))
     val outw = ed.groupBy("u").agg(sum("w").as("outw"))
-    val edn0 = ed.join(outw, "u")
+    val edn = ed.join(outw, "u")
       .select(col("u"), col("v"), (col("w") / col("outw")).as("_frac"))
-    val edn = if (materialize) edn0.localCheckpoint() else edn0
+      .localCheckpoint()
     val vocab = edn.select(col("u").as("tok")).distinct()
     var pr = vocab.select(col("tok"), lit(1.0).as("pr"))
     for (_ <- 1 to iters) {

@@ -689,8 +689,8 @@ private[graft] object DedupQueries extends QueryBook {
       // would leave batch assignment engine-internal and the verdicts
       // order-dependent); nearDupDocStream's banded SimHash buckets
       // remember the last 64 signatures per (band, 16-bit slice) across
-      // batches and vote each arrival against that window. With exactSig
-      // (the q28 md5-feature signature) and doc_id-ordered processing the
+      // batches and vote each arrival against that window. With the q28
+      // md5-feature signature and doc_id-ordered processing the
       // flagged set is a pure function of the corpus, and the DuckDB twin
       // replays the same arrival discipline declaratively: dup(X) iff
       // ∃Y sharing a band bucket with 1 ≤ rn(X)−rn(Y) ≤ 64 in
@@ -698,13 +698,12 @@ private[graft] object DedupQueries extends QueryBook {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         .where(size(split(TextExprs.cleanText(col("text")), " ")) >= 3)
-      val slices = modSlices(docs, "doc_id", 4)
       // both flatMapGroupsWithState stages are NoTimeout: output rows exist
       // only for input rows, so the trailing no-data batch appends zero
       // rows — skipped (r18)
-      streamReplay(s, "q310", slices, noDataBatch = false) { (stream, ckpt, out) =>
-        graft.streaming.EventStreams.nearDupDocStream(stream, maxHamming = 3,
-            shingleLen = 3, maxSigsPerBucket = 64, exactSig = true)
+      streamReplay(s, "q310", modSlices(docs, "doc_id", 4), 4,
+          noDataBatch = false) { (stream, ckpt, out) =>
+        graft.streaming.EventStreams.nearDupDocStream(stream)
           .writeStream
           .outputMode("append")
           .option("checkpointLocation", ckpt)

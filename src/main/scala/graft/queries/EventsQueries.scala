@@ -789,7 +789,7 @@ private[graft] object EventsQueries extends QueryBook {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"), col("ts"))
-      streamReplay(s, "q349", modSlices(ev, "event_id", 3)) { (stream, ckpt, out) =>
+      streamReplay(s, "q349", modSlices(ev, "event_id", 3), 3) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.enrichWithDim(stream, dim, "user_id")
           .select(col("event_id"), col("event_type"), col("cents"),
             col("c_mktsegment"))
@@ -820,10 +820,10 @@ private[graft] object EventsQueries extends QueryBook {
       // micro-batches cannot flip a bit.
       // complete mode: the trailing no-data batch overwrites the SAME full
       // aggregation — provably zero-output-delta, so it is skipped (r18)
-      val slices = modSlices(t(s, dir, "events"), "event_id", 3)
-        .map(_.select(col("ts"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents")))
-      streamReplay(s, "q302", slices, noDataBatch = false) { (stream, ckpt, out) =>
+      val rows = modSlices(t(s, dir, "events"), "event_id", 3)
+        .select(col("ts"), col("event_type"),
+          round(col("value") * 100).cast("long").as("cents"), col("slice"))
+      streamReplay(s, "q302", rows, 3, noDataBatch = false) { (stream, ckpt, out) =>
         stream
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -858,10 +858,10 @@ private[graft] object EventsQueries extends QueryBook {
       // per-session sums exact across micro-batch state merges.
       // replayed as 4 event-time quarters, oldest first: the 0-delay
       // watermark never late-drops a row of a later slice
-      val (slices, _) = timeQuarters(t(s, dir, "events")
+      val (rows, _) = timeQuarters(t(s, dir, "events")
         .select(col("ts"), col("event_type"), col("user_id"),
           round(col("value") * 100).cast("long").as("cents")))
-      streamReplay(s, "q305", slices) { (stream, ckpt, out) =>
+      streamReplay(s, "q305", rows, 4) { (stream, ckpt, out) =>
         stream
           .withWatermark("ts", "0 seconds")
           .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
@@ -892,10 +892,10 @@ private[graft] object EventsQueries extends QueryBook {
       // batch GROUP BY, bit-for-bit (exact LONGs through the state store).
       // NoTimeout mapGroupsWithState in update mode: a no-data batch updates
       // no key, so it appends zero rows — skipped (r18)
-      val slices = modSlices(t(s, dir, "events"), "event_id", 3)
-        .map(_.select(col("event_type"),
-          round(col("value") * 100).cast("long").as("cents")))
-      val mat = streamReplay(s, "q306", slices, noDataBatch = false) {
+      val rows = modSlices(t(s, dir, "events"), "event_id", 3)
+        .select(col("event_type"),
+          round(col("value") * 100).cast("long").as("cents"), col("slice"))
+      val mat = streamReplay(s, "q306", rows, 3, noDataBatch = false) {
           (stream, ckpt, out) =>
         graft.streaming.EventStreams.runningCentTotals(stream)
           .writeStream
@@ -930,10 +930,10 @@ private[graft] object EventsQueries extends QueryBook {
       // from the same parquet), no rounding needed.
       // inner join: every matched pair emits while a DATA batch processes;
       // the trailing no-data batch only evicts state — skipped (r18)
-      val (slices, _) = timeQuarters(t(s, dir, "events")
+      val (rows, _) = timeQuarters(t(s, dir, "events")
         .select(col("ts"), col("event_type"), col("user_id"),
           col("event_id"), col("value")))
-      streamReplay(s, "q307", slices, noDataBatch = false) { (stream, ckpt, out) =>
+      streamReplay(s, "q307", rows, 4, noDataBatch = false) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.errorPurchaseJoin(
             stream.where(col("event_type") === "error"),
             stream.where(col("event_type") === "purchase"))
@@ -962,10 +962,10 @@ private[graft] object EventsQueries extends QueryBook {
       // sessions the final watermark never reached (strict <, the
       // GroupState timeout contract) — which the DuckDB twin states as
       // last_ts + gap < max ts.
-      val (slices, _) = timeQuarters(t(s, dir, "events")
+      val (rows, _) = timeQuarters(t(s, dir, "events")
         .select(col("ts"), col("user_id"),
           round(col("value") * 100).cast("long").as("cents")))
-      streamReplay(s, "q322", slices) { (stream, ckpt, out) =>
+      streamReplay(s, "q322", rows, 4) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.closedCentSessions(stream)
           .writeStream
           .outputMode("append")
@@ -1019,15 +1019,15 @@ private[graft] object EventsQueries extends QueryBook {
       // END of batch (inclusive: expiry ≤ wm evicts), so back-to-back
       // file batches see the PREVIOUS batch's watermark — see q325Sql and
       // the Round14Spec boundary probes.
-      val (quarters, span) = timeQuarters(t(s, dir, "events")
+      val (events, span) = timeQuarters(t(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("ts")))
       val delayMs = span / 1000L / 8L
-      val slices = quarters.map(
-        _.groupBy("user_id", "event_type").agg(min("ts").as("ts")))
+      val rows = events.groupBy("slice", "user_id", "event_type")
+        .agg(min("ts").as("ts"))
       // dedup emits kept rows in THEIR data batch; the trailing no-data
       // batch only evicts expired state — skipped (r18), data-batch
       // watermark sequencing (the twin-calibrated part) is untouched
-      streamReplay(s, "q325", slices, noDataBatch = false) { (stream, ckpt, out) =>
+      streamReplay(s, "q325", rows, 4, noDataBatch = false) { (stream, ckpt, out) =>
         stream
           .withWatermark("ts", s"$delayMs milliseconds")
           .dropDuplicatesWithinWatermark("user_id", "event_type")

@@ -41,39 +41,42 @@ private[graft] object QueryHelpers {
       .groupBy(col(key))
       .agg(coalesce(sum(col("_bv")), lit(0L)).as("prev_cum"))
 
-  /** Slice `df` into `n` replay slices by a pure key: slice `b` holds the
-    * rows with `pmod(key, n) == b`. Batch membership is then a function of
-    * the data alone, which a DuckDB twin can recompute. */
-  private[graft] def modSlices(df: DataFrame, key: String, n: Int): Seq[DataFrame] =
-    (0 until n).map(b => df.where(pmod(col(key), lit(n)) === b))
+  /** `df` with the replay slice `slice = pmod(key, n)`. Batch membership
+    * is then a function of the data alone, which a DuckDB twin can
+    * recompute. */
+  private[graft] def modSlices(df: DataFrame, key: String, n: Int): DataFrame =
+    df.withColumn("slice", pmod(col(key), lit(n)))
 
-  /** Slice `ev` (which carries a `ts` column) into four contiguous
-    * event-time quarters, oldest first: row r lands in quarter
+  /** `ev` (which carries a `ts` column) with its event-time quarter, oldest
+    * first, as `slice`: row r lands in quarter
     * `((unix_micros(ts) - tmin) * 4) div (span + 1)`. Equal timestamps share
     * a quarter, so every row of slice i+1 is strictly later than every row
     * of slice i and a watermark that trails the replay never late-drops.
-    * Returns the quarters and the corpus span in microseconds. */
-  private[graft] def timeQuarters(ev: DataFrame): (Seq[DataFrame], Long) = {
-    val mm = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head
+    * Returns the frame and the corpus span in microseconds. */
+  private[graft] def timeQuarters(ev: DataFrame): (DataFrame, Long) = {
+    val mm = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
     val (tmin, span) = (mm.getLong(0), mm.getLong(1) - mm.getLong(0))
-    val q = expr(s"((unix_micros(ts) - ${tmin}L) * 4) div ${span + 1}L")
-    ((0 until 4).map(i => ev.where(q === i)), span)
+    (ev.withColumn("slice", expr(s"((unix_micros(ts) - ${tmin}L) * 4) div ${span + 1}L")),
+      span)
   }
 
   /** The one file-stream replay rig of the streaming-under-oracle queries.
-    * Writes slice `i` as the single file `b0i.parquet` with ascending mtimes
-    * (FileStreamSource replays oldest-first), runs the caller's writeStream
-    * with `maxFilesPerTrigger 1` (slice i == micro-batch i,
-    * deterministically — unlike a hash/range reshard, the batch membership
-    * is a pure function the DuckDB twin can recompute), drains, checks the
-    * replay invariant, and reads back the materialization. The stream
-    * source's schema is the first slice's schema made nullable (what Spark
-    * reads back from the written files), so no file is read to learn it;
-    * the read-back of `out` takes its schema from a footer
-    * ([[graft.sources.Tables.parquet]]). Neither launches a job. Prior run dirs
-    * under `target/stream/<tag>` are reaped first — executions of one tag
-    * never overlap (Bench's warm-up pool runs each query once, timed passes
-    * are sequential, Verify is a separate JVM).
+    * `rows` carries an integer `slice` column in `[0, n)`. The rig writes
+    * `rows` in ONE Spark job, one task that writes one file per slice
+    * value (`partitionBy("slice")`), and moves slice `i`'s file to
+    * `b{i:02}.parquet` with ascending mtimes (FileStreamSource replays
+    * oldest-first). It then runs the caller's writeStream with
+    * `maxFilesPerTrigger 1` (slice i == micro-batch i, deterministically —
+    * unlike a hash/range reshard, the batch membership is a pure function
+    * the DuckDB twin can recompute), drains, checks the replay invariant,
+    * and reads back the materialization. The stream source's schema is
+    * `rows`' schema without `slice`, made nullable (what Spark reads back
+    * from the written files), so no file is read to learn it; the
+    * read-back of `out` takes its schema from a footer
+    * ([[graft.sources.Tables.parquet]]). Neither launches a job. Prior run
+    * dirs under `target/stream/<tag>` are reaped first — executions of one
+    * tag never overlap (Bench's warm-up pool runs each query once, timed
+    * passes are sequential, Verify is a separate JVM).
     *
     * `noDataBatch = false` disables the TRAILING no-data micro-batches
     * (round 18, guide §1.2/§2.6: each one re-plans and re-runs the full
@@ -88,7 +91,7 @@ private[graft] object QueryHelpers {
     * only ever TRAIL the last data batch — the replay-invariant guard
     * already rejects interleaved ones). */
   private[graft] def streamReplay(s: SparkSession, tag: String,
-      slices: Seq[DataFrame], noDataBatch: Boolean = true)(
+      rows: DataFrame, n: Int, noDataBatch: Boolean = true)(
       run: (DataFrame, String, String) => org.apache.spark.sql.streaming.StreamingQuery)
       : DataFrame = {
     val root = new java.io.File(s"target/stream/$tag")
@@ -101,42 +104,24 @@ private[graft] object QueryHelpers {
     val base = s"target/stream/$tag/${java.util.UUID.randomUUID()}"
     val src = new java.io.File(s"$base/src"); src.mkdirs()
     val out = s"$base/out"
-    // Write the slices CONCURRENTLY (round 17, guide §2.6 "overlap
-    // independent jobs"): the per-slice writes are independent Spark
-    // jobs, and running them serially left the cluster idle in each
-    // job's tail — at 4 slices this was the dominant rig-prep cost. The
-    // emptiness guard reads the written footer's row count directly
-    // (pure metadata — no Spark job at all). Moves + mtimes stay serial
-    // below: FileStreamSource replays oldest-mtime-first, so ordering is
-    // assigned once, deterministically, after every write landed.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val parts = Await.result(Future.sequence(slices.zipWithIndex.map {
-      case (df, i) => Future {
-        val tmp = s"$base/tmp$i"
-        df.coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.startsWith("part-"))
-          .getOrElse(sys.error(s"replay slice $i produced no part file"))
-        val conf = s.sparkContext.hadoopConfiguration
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(part.getAbsolutePath), conf))
-        val nRows = try reader.getRecordCount finally reader.close()
-        // the replay-invariant guard below requires one DATA batch per
-        // slice, so an empty slice would trip it spuriously (ADVICE r15)
-        // — fail HERE, at write time, with the actionable message
-        require(nRows > 0L,
-          s"$tag replay slice $i is empty — the slicing predicate must give " +
-            "every micro-batch at least one row (empty slices would replay " +
-            "as zero batches and desynchronize the batch-grain twin)")
-        part
-      }
-    }), Duration.Inf)
-    parts.zipWithIndex.foreach { case (part, i) =>
+    val tmp = new java.io.File(s"$base/tmp")
+    rows.coalesce(1).write.partitionBy("slice").parquet(tmp.getPath)
+    val written = tmp.listFiles().map(_.getName).filter(_.startsWith("slice=")).toSet
+    require(written.subsetOf((0 until n).map(i => s"slice=$i").toSet),
+      s"$tag replay: slice ids outside [0, $n): ${written.toSeq.sorted.mkString(", ")}")
+    (0 until n).foreach { i =>
+      // partitionBy writes no directory for a slice without rows; the
+      // replay-invariant guard below requires one DATA batch per slice, so
+      // an empty slice would trip it spuriously (ADVICE r15) — fail HERE,
+      // at write time, with the actionable message
+      val part = Option(new java.io.File(tmp, s"slice=$i").listFiles()).toSeq.flatten
+        .find(_.getName.startsWith("part-"))
+      require(part.isDefined,
+        s"$tag replay slice $i is empty — the slicing predicate must give " +
+          "every micro-batch at least one row (empty slices would replay " +
+          "as zero batches and desynchronize the batch-grain twin)")
       val dst = new java.io.File(src, f"b$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
+      java.nio.file.Files.move(part.get.toPath, dst.toPath)
       dst.setLastModified(1700000000000L + i * 60000L)
     }
     // The drain runs on a CLONED session with a narrow shuffle width. A
@@ -176,13 +161,13 @@ private[graft] object QueryHelpers {
     // the guard below reads recentProgress, which is capped by
     // numRecentProgressUpdates (default 100) — raise it above the batch
     // count so a long replay can't undercount its own batches (ADVICE
-    // r15); slices.length data batches + headroom for no-data batches
+    // r15); n data batches + headroom for no-data batches
     scoped.conf.set("spark.sql.streaming.numRecentProgressUpdates",
-      (slices.length + 32).toString)
+      (n + 32).toString)
     if (!noDataBatch)
       scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val stream = scoped.readStream
-      .schema(nullable(slices.head.schema))
+      .schema(nullable(rows.drop("slice").schema))
       .option("maxFilesPerTrigger", 1)
       .option("latestFirst", "false")
       .parquet(src.getPath)
@@ -200,8 +185,8 @@ private[graft] object QueryHelpers {
       val prog = q.recentProgress
       val lastData = prog.lastIndexWhere(_.numInputRows > 0)
       val dataBatches = prog.count(_.numInputRows > 0)
-      require(dataBatches == slices.length,
-        s"$tag replay: ${dataBatches} data micro-batches, expected ${slices.length}")
+      require(dataBatches == n,
+        s"$tag replay: ${dataBatches} data micro-batches, expected $n")
       require(prog.take(lastData + 1).forall(_.numInputRows > 0),
         s"$tag replay: a no-data batch interleaved before the last data batch " +
           s"(batch rows: ${prog.map(_.numInputRows).mkString(",")})")

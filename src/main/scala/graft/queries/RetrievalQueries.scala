@@ -211,8 +211,7 @@ private[graft] object RetrievalQueries extends QueryBook {
       // lost by the commit protocol breaks the hash.
       val ixDir = s"target/lex_index_ingest/${new java.io.File(dir).getName}"
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val slices = modSlices(docs, "doc_id", 4)
-      streamReplay(s, "q350", slices) { (stream, ckpt, out) =>
+      streamReplay(s, "q350", modSlices(docs, "doc_id", 4), 4) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.indexedIngest(stream, ixDir, out, ckpt)
       }
       graft.operators.LexIndex.query(s, ixDir,

@@ -127,8 +127,7 @@ private[graft] object SurveyQueries extends QueryBook {
       val docs = t(s, dir, "documents").select(
         col("doc_id"), col("source").as("product"),
         concat(col("text"), tail).as("answer"))
-      val slices = modSlices(docs, "doc_id", 4)
-      streamReplay(s, "q323", slices) { (stream, ckpt, out) =>
+      streamReplay(s, "q323", modSlices(docs, "doc_id", 4), 4) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.classifiedSummary(stream, "retail",
           graft.operators.DemoAnswerClassifier, out, ckpt)
       }

@@ -1006,8 +1006,7 @@ private[graft] object TextQueries extends QueryBook {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           concat(coalesce(col("text"), lit("")), tail).as("_t"))
-      val slices = modSlices(docs, "doc_id", 4)
-      streamReplay(s, "q345", slices) { (stream, ckpt, out) =>
+      streamReplay(s, "q345", modSlices(docs, "doc_id", 4), 4) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.redactedSummary(stream, pats, "[X]", out, ckpt)
       }
         .groupBy("source")
@@ -1070,8 +1069,7 @@ private[graft] object TextQueries extends QueryBook {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           concat(coalesce(col("text"), lit("")), tail).as("_t"))
-      val slices = modSlices(docs, "doc_id", 4)
-      streamReplay(s, "q351", slices) { (stream, ckpt, out) =>
+      streamReplay(s, "q351", modSlices(docs, "doc_id", 4), 4) { (stream, ckpt, out) =>
         graft.streaming.EventStreams.typedRedactedSummary(stream, pats, masks,
           Seq("<EMAIL>", "<PHONE>", "<ID>"), out, ckpt)
       }

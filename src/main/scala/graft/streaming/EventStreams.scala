@@ -170,23 +170,19 @@ object EventStreams {
     * 1 ≤ rn(X) − rn(Y) ≤ maxSigsPerBucket (the insertion-window eviction,
     * exactly) and hamming(X, Y) ≤ maxHamming.
     *
-    * `exactSig = true` swaps the native FNV SimHash for the engine-neutral
-    * md5-feature signature ([[graft.plans.SimHash.simhashMd5Shingled]], the
-    * q28 oracle-exact variant) so the twin can recompute signatures
-    * bit-for-bit; the production default stays on the ~2-3x faster FNV
-    * path.
+    * The signature is the engine-neutral md5-feature SimHash
+    * ([[graft.plans.SimHash.simhashMd5Shingled]], the q28 oracle-exact
+    * variant), so the twin can recompute signatures bit-for-bit.
     * Output: (doc_id, is_dup 0/1), append-mode per micro-batch. */
   def nearDupDocStream(docs: DataFrame, maxHamming: Int = 3, shingleLen: Int = 3,
-      maxSigsPerBucket: Int = 64, exactSig: Boolean = false): DataFrame = {
+      maxSigsPerBucket: Int = 64): DataFrame = {
     val sp = docs.sparkSession
     import sp.implicits._
     import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val cln = graft.functions.TextExprs.cleanText(col("text"))
-    val sigExpr =
-      if (exactSig) graft.plans.SimHash.simhashMd5Shingled(cln, shingleLen)
-      else graft.plans.SimHash.simhashShingled(cln, shingleLen)
     val banded = docs
-      .select(col("doc_id").cast("long").as("doc_id"), sigExpr.as("sig"))
+      .select(col("doc_id").cast("long").as("doc_id"),
+        graft.plans.SimHash.simhashMd5Shingled(cln, shingleLen).as("sig"))
       .select(col("doc_id"), col("sig"), explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"),
           shiftrightunsigned(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL)).as("bval"))): _*))

@@ -188,19 +188,4 @@ class Round16Spec extends SparkSpec {
     val finalCosts = tabs.last.toMap
     out.foreach { case (p, _, c6) => assert(finalCosts(p) === c6, p) }
   }
-
-  // ---------------- replay guard ----------------
-
-  test("streamReplay fails fast and actionably on an empty slice") {
-    val docs = spark.read.parquet(sf() + "/documents.parquet")
-      .select(col("doc_id"), col("source"), col("text"))
-    val e = intercept[IllegalArgumentException] {
-      graft.queries.QueryHelpers.streamReplay(spark, "r16emptyslice",
-        Seq(docs.limit(5), docs.where(lit(false)))) { (stream, ckpt, out) =>
-        stream.writeStream.option("checkpointLocation", ckpt)
-          .format("parquet").option("path", out).start()
-      }
-    }
-    assert(e.getMessage.contains("empty"), e.getMessage)
-  }
 }
