@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{ExecutionException, Executors}
+import org.apache.spark.sql.{classic, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** What a graft session is, decided once for every main and the tests:
   * the engine's extensions, shuffle width = `cpus`, UTC, adaptive
@@ -34,4 +36,31 @@ object GraftSession {
   /** Core count: `SPARK_GRAFT_CPUS`, else the caller's default. */
   def cpus(default: Int): Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(default)
+
+  /** Run `bodies` side by side and return when every one has settled: the
+    * one way the engine overlaps independent Spark actions (short index
+    * commits are bound by driver latency, not by the cluster). A body that
+    * produces a value assigns it to a local of the caller.
+    *
+    * Each body runs on its own daemon thread (a cached pool: a body may
+    * fork again) under the caller's active session and a clone of the
+    * caller's Spark local properties, so its jobs carry the caller's job
+    * group, description, cancel flag, scheduler pool and SQL execution ids
+    * (Spark's `SQLExecution.withThreadLocalCaptured`, as broadcast
+    * exchanges do). Every body settles before the first failure in body
+    * order is rethrown, unwrapped: no write of a failed call is still
+    * landing when its caller retries. */
+  def concurrently(spark: SparkSession)(bodies: (() => Unit)*): Unit = {
+    val running = bodies.map(b => SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], forks)(b()))
+    running.flatMap { f =>
+      try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+    }.headOption.foreach(throw _)
+  }
+
+  private lazy val forks = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "graft-fork")
+    t.setDaemon(true)
+    t
+  }
 }

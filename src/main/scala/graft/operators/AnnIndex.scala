@@ -1,8 +1,5 @@
 package graft.operators
 
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration.Duration
-import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExprs
@@ -68,15 +65,10 @@ object AnnIndex {
       org.apache.spark.sql.types.StructField("cid", org.apache.spark.sql.types.IntegerType, false),
       org.apache.spark.sql.types.StructField("c",
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType, false), false)))
-    // centroids and codes are independent outputs of the completed fits —
-    // write them concurrently (round 17, guide §2.6)
-    val centW = Future(
-      spark.createDataFrame(spark.sparkContext.parallelize(centRows.toSeq, 1), centSchema)
-        .write.mode("overwrite").parquet(s"$dir/centroids/g$gen"))
-    val fresh = ix.written {
-      writeCodes(base.select(col("id").as("vec_id"), col("v")), coarse, fits, p, dir)
-      Await.result(centW, Duration.Inf)
-    }
+    val fresh = ix.written(graft.GraftSession.concurrently(spark)(
+      () => writeCodes(base.select(col("id").as("vec_id"), col("v")), coarse, fits, p, dir),
+      () => spark.createDataFrame(spark.sparkContext.parallelize(centRows.toSeq, 1), centSchema)
+        .write.mode("overwrite").parquet(s"$dir/centroids/g$gen")))
     IndexLog.trip("build-post-data")
     ix.commit(IndexLog.Manifest(gen, Map("centroids" -> s"centroids/g$gen"), fresh), "build")
   }

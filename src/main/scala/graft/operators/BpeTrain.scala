@@ -39,12 +39,14 @@ import graft.functions.TextExprs
   * the vocab, so a multi-million-word dict trains the same way. */
 object BpeTrain {
 
-  /** Word-frequency table of the cleaned, lowercased corpus: [a-z]{2,20}
-    * words only (≥ 2 chars so a word can contribute a pair), top
-    * `topWords` by (count desc, word asc) — a deterministic cap. */
-  def wordVocab(docs: DataFrame, text: Column, topWords: Int): DataFrame =
+  /** Word-frequency table of the cleaned, lowercased corpus: words of 2 to
+    * `maxLen` letters a–z only (≥ 2 chars so a word can contribute a
+    * pair), top `topWords` by (count desc, word asc) — a deterministic
+    * cap. BPE keeps words up to 20 letters; [[UnigramLm]] up to 12, so its
+    * twin's 2^(n−1) segmentation enumeration stays ≤ 2048 rows per word. */
+  def wordVocab(docs: DataFrame, text: Column, maxLen: Int, topWords: Int): DataFrame =
     docs.select(explode(split(lower(TextExprs.cleanText(text)), " ")).as("word"))
-      .where(col("word").rlike("^[a-z]{2,20}$"))
+      .where(col("word").rlike(s"^[a-z]{2,$maxLen}$$"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .orderBy(desc("freq"), asc("word"))
       .limit(topWords)

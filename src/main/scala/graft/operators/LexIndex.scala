@@ -92,25 +92,32 @@ object LexIndex {
 
   // ------------------------------------------------------------------- build
 
-  /** Write the row-local (doc_id, token, tf, dl) expansion of `base` as
-    * bucket-partitioned postings fragments under `dir/postings` (mode
-    * append: new files only, existing fragments are never touched — the
-    * manifest decides liveness). Each bucket is repartitioned to ONE task
-    * and sorted by token, so a build or append lands exactly one
-    * TOKEN-ORDERED fragment per touched bucket: parquet min/max column
-    * statistics then let the query path's pushed `token IN (…)` filter
-    * skip whole row groups inside a pruned bucket — at a production
-    * bucket size the scan reads the matched terms' neighborhoods, not the
-    * full bucket. dl rides the row (round 17: no tf ⋈ dl join — the
-    * bucket repartition is this path's ONLY exchange). */
-  private def writePostings(tfd: DataFrame, dir: String,
-      nBuckets: Int): Unit =
-    tfd
+  /** One batch's two data writes, as [[graft.GraftSession.concurrently]]
+    * bodies over the pinned `tokenized` pair:
+    *
+    *  - the row-local (doc_id, token, tf, dl) expansion as bucket-
+    *    partitioned postings fragments under `dir/postings` (mode append:
+    *    new files only — the manifest decides liveness). Each bucket is
+    *    repartitioned to ONE task and sorted by token, so a build or append
+    *    lands exactly one TOKEN-ORDERED fragment per touched bucket: parquet
+    *    min/max statistics then let the query path's pushed `token IN (…)`
+    *    filter skip whole row groups inside a pruned bucket. dl rides the
+    *    row, so the bucket repartition is this write's ONLY exchange;
+    *  - the slim docs rows, with the batch's EXACT INTEGER stats `n_docs`
+    *    and `dl_sum` OBSERVED on the write into `obs`: avgdl is one double
+    *    division at query time, so an appended index recombines
+    *    bit-identically with a from-scratch build. */
+  private def batchWrites(tfd: DataFrame, docsDl: DataFrame, dir: String,
+      nBuckets: Int, obs: org.apache.spark.sql.Observation): Seq[() => Unit] = Seq(
+    () => tfd
       .withColumn("tok_bucket", pmod(xxhash64(col("token")), lit(nBuckets)))
       .select("tok_bucket", "token", "doc_id", "tf", "dl")
       .repartition(col("tok_bucket"))
       .sortWithinPartitions("tok_bucket", "token", "doc_id")
-      .write.partitionBy("tok_bucket").mode("append").parquet(s"$dir/postings")
+      .write.partitionBy("tok_bucket").mode("append").parquet(s"$dir/postings"),
+    () => docsDl
+      .observe(obs, count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("dl_sum"))
+      .select("doc_id").write.mode("append").parquet(s"$dir/docs"))
 
   /** Write the corpus scalars as ONE small [[IndexLog.writeText]] object
     * (round-17 optimization: the stats are PROTOCOL METADATA like the
@@ -150,22 +157,9 @@ object LexIndex {
       .write.mode("overwrite").parquet(s"$dir/dict/g$gen")
     val nb = if (nBuckets > 0) nBuckets
       else nBucketsFor(dictObs.get("vocab").asInstanceOf[Long])
-    // the postings and docs writes are independent derivations of the
-    // pinned tfd checkpoint, so they run concurrently. The stats are EXACT
-    // INTEGER totals (doc count, Σdl) OBSERVED on the docs write: avgdl is
-    // one double division at query time, so an appended index recombines
-    // bit-identically with a from-scratch build
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val obs = org.apache.spark.sql.Observation()
-    val fresh = ix.written(Await.result(Future.sequence(Seq(
-      Future(writePostings(tfd, dir, nb)),
-      Future(docsDl
-        .observe(obs, count(lit(1)).as("n_docs"),
-          coalesce(sum("dl"), lit(0L)).as("dl_sum"))
-        .select("doc_id").write.mode("append").parquet(s"$dir/docs")))),
-      Duration.Inf))
+    val fresh = ix.written(
+      graft.GraftSession.concurrently(df.sparkSession)(batchWrites(tfd, docsDl, dir, nb, obs): _*))
     IndexLog.trip("build-post-data")
     writeStats(ix, obs.get("n_docs").asInstanceOf[Long],
       obs.get("dl_sum").asInstanceOf[Long], nb, gen)
@@ -197,46 +191,29 @@ object LexIndex {
     val m = ix.live
     val (oldN, oldSum, nBuckets) = readStats(ix, m)
     val (tfd, docsDl) = tokenized(batch, id, text)
-    // ALL per-commit derivations of the pinned tfd checkpoint — postings,
-    // docs (with the batch's exact integer stats OBSERVED on the write),
-    // the dict dfreq merge, and the disjointness guard — run concurrently.
-    // A guard refusal aborts BEFORE the commit; the freshly written files
-    // stay orphans for the next commit's GC.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val gen = m.seq + 1
     val obs = org.apache.spark.sql.Observation()
-    def guard: Future[Unit] =
-      if (m.data("docs").isEmpty) Future.successful(())
-      else Future {
-        val overlap = docsDl.select("doc_id")
-          .join(ix.read("docs", m.data("docs")), Seq("doc_id"), "left_semi")
-          .limit(1).count()
-        require(overlap == 0L,
-          s"LexIndex.append: batch contains doc_ids already indexed under $dir — " +
-            "re-ingesting a document would silently double its tf contributions " +
-            "(retry of an already-committed append?)")
-      }
-    // the writes start inside `written`, after its before-listing, and ALL
-    // settle before a guard refusal is rethrown: a caller's immediate retry
-    // would otherwise race its before-listing against this attempt's
-    // landing files and could pull them into ITS manifest
-    val fresh = ix.written(Await.result(Future.sequence(Seq(
-      guard,
-      Future(writePostings(tfd, dir, nBuckets)),
-      Future(docsDl
-        .observe(obs, count(lit(1)).as("n"),
-          coalesce(sum("dl"), lit(0L)).as("s"))
-        .select("doc_id").write.mode("append").parquet(s"$dir/docs")),
-      Future(Tables.parquet(spark, s"$dir/${m.gens("dict")}")
-        .unionByName(tfd.groupBy("token").agg(count(lit(1)).as("dfreq")))
-        .groupBy("token").agg(sum("dfreq").as("dfreq"))
-        .write.mode("overwrite").parquet(s"$dir/dict/g$gen"))
-    ).map(_.transform(scala.util.Success(_)))), Duration.Inf).foreach(_.get))
+    val guard = () => if (m.data("docs").nonEmpty) {
+      val overlap = docsDl.select("doc_id")
+        .join(ix.read("docs", m.data("docs")), Seq("doc_id"), "left_semi")
+        .limit(1).count()
+      require(overlap == 0L,
+        s"LexIndex.append: batch contains doc_ids already indexed under $dir — " +
+          "re-ingesting a document would silently double its tf contributions " +
+          "(retry of an already-committed append?)")
+    }
+    val dictMerge = () => Tables.parquet(spark, s"$dir/${m.gens("dict")}")
+      .unionByName(tfd.groupBy("token").agg(count(lit(1)).as("dfreq")))
+      .groupBy("token").agg(sum("dfreq").as("dfreq"))
+      .write.mode("overwrite").parquet(s"$dir/dict/g$gen")
+    // the writes start inside `written`, after its before-listing; a guard
+    // refusal aborts before the commit, and the fresh files stay orphans
+    // for the next commit's GC
+    val fresh = ix.written(graft.GraftSession.concurrently(spark)(
+      guard +: batchWrites(tfd, docsDl, dir, nBuckets, obs) :+ dictMerge: _*))
     IndexLog.trip("append-post-data")
-    writeStats(ix, oldN + obs.get("n").asInstanceOf[Long],
-      oldSum + obs.get("s").asInstanceOf[Long], nBuckets, gen)
+    writeStats(ix, oldN + obs.get("n_docs").asInstanceOf[Long],
+      oldSum + obs.get("dl_sum").asInstanceOf[Long], nBuckets, gen)
     ix.commit(IndexLog.Manifest(gen, gensOf(gen),
       fresh.map { case (c, f) => c -> (m.data(c) ++ f) }), "append")
   }
@@ -246,7 +223,7 @@ object LexIndex {
   /** Compact the bucket-partitioned postings through
     * [[IndexLog.compactPartitions]]: every `tok_bucket` whose LIVE fragment
     * count exceeds `maxFragments` is rewritten into ONE TOKEN-SORTED
-    * fragment (the same layout [[writePostings]] produces — review r17
+    * fragment (the same layout [[batchWrites]] produces — review r17
     * finding #2: an unsorted rewrite would permanently lose the min/max
     * row-group skipping) — content-identical, dict/stats untouched, clean
     * buckets keep their files. The maintenance pass of the [[append]]

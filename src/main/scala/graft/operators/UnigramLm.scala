@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.TextExprs
 
 /** Unigram-LM subword tokenizer TRAINING (round 15) — the SentencePiece
   * complement to [[BpeTrain]]'s merge learning: where BPE grows tokens
@@ -42,16 +41,6 @@ import graft.functions.TextExprs
   * pass over the distinct-word table — O(n · maxPieceLen) per word,
   * corpus-size-free. */
 object UnigramLm {
-
-  /** Bounded word vocab: `[a-z]{2,12}` (≤ 12 chars so the twin's 2^(n−1)
-    * segmentation enumeration stays ≤ 2048 rows per word), top `topWords`
-    * by (count desc, word asc). */
-  def wordVocab(docs: DataFrame, text: Column, topWords: Int): DataFrame =
-    docs.select(explode(split(lower(TextExprs.cleanText(text)), " ")).as("word"))
-      .where(col("word").rlike("^[a-z]{2,12}$"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .orderBy(desc("freq"), asc("word"))
-      .limit(topWords)
 
   /** Seed candidate pieces from a (word, freq) vocab: every single char,
     * plus the top-`topSubs` substrings of length 2..`maxPieceLen` by

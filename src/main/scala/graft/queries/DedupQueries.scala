@@ -587,12 +587,6 @@ private[graft] object DedupQueries extends QueryBook {
       // (doc, p) hash aggregate); the SAME mins come out of ONE pass with
       // 32 columnar min(hv XOR c_p) aggregates — no expansion, no (doc, p)
       // grain, and banding becomes ROW-LOCAL below (zero exchanges).
-      val sigWideF = scala.concurrent.Future(hv.groupBy("doc_id")
-        .agg(min(col("hv").bitwiseXOR(lit(blockPerms.head._2))).as("v0"),
-          blockPerms.tail.map { case (p, c) =>
-            min(col("hv").bitwiseXOR(lit(c))).as(s"v$p") }: _*)
-        .localCheckpoint() // feeds all 3 geometries
-      )(scala.concurrent.ExecutionContext.Implicits.global)
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
       // Round 18 (guide §2.5/§2.2): the gram self-join's INPUT is a few MB
       // — AQE coalesces its exchange to ~1 partition — but its OUTPUT is
@@ -603,18 +597,23 @@ private[graft] object DedupQueries extends QueryBook {
       // their OUTPUT, which AQE cannot see in advance.
       val shG = sh.repartition(
         s.sessionState.conf.numShufflePartitions, col("g"))
-      val truth = shG.as("a")
-        .join(shG.as("b"),
-          col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(count(lit(1)).as("shared"))
-        .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sa")), "id_a")
-        .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sb")), "id_b")
-        .where(col("shared") * 10 >= (col("sa") + col("sb") - col("shared")) * 7)
-        .select("id_a", "id_b")
-        .localCheckpoint() // counted AND intersected per geometry
-      val sigWide = scala.concurrent.Await.result(
-        sigWideF, scala.concurrent.duration.Duration.Inf)
+      var sigWide, truth: DataFrame = null
+      graft.GraftSession.concurrently(s)(
+        () => sigWide = hv.groupBy("doc_id")
+          .agg(min(col("hv").bitwiseXOR(lit(blockPerms.head._2))).as("v0"),
+            blockPerms.tail.map { case (p, c) =>
+              min(col("hv").bitwiseXOR(lit(c))).as(s"v$p") }: _*)
+          .localCheckpoint(), // feeds all 3 geometries
+        () => truth = shG.as("a")
+          .join(shG.as("b"),
+            col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
+          .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+          .agg(count(lit(1)).as("shared"))
+          .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sa")), "id_a")
+          .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sb")), "id_b")
+          .where(col("shared") * 10 >= (col("sa") + col("sb") - col("shared")) * 7)
+          .select("id_a", "id_b")
+          .localCheckpoint()) // counted AND intersected per geometry
       // Round 18 (guide §2.4, VERDICT r17 #6): the three geometries are the
       // SAME dataflow over the same pinned signature/truth — band,
       // self-join, distinct, count, semi-count — so instead of three

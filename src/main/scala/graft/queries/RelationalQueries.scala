@@ -1,9 +1,6 @@
 package graft.queries
 
 import scala.collection.immutable.ListMap
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration.Duration
-import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -565,27 +562,22 @@ private[graft] object RelationalQueries extends QueryBook {
     "q111_product_quant" -> ((s, dir) => {
       // Product quantization (Jégou et al. 2011) — the 100 TB ANN
       // compression step beyond q109's SQ8: the 64-dim space splits into
-      // 4 orthogonal 16-dim subspaces, each learns its own k=4 codebook
-      // (operators.KMeansOp — broadcast centroid literals, one declarative
-      // per-dimension-sum groupBy per iteration), and every vector is
-      // stored as 4 sub-codes plus its total quantization error. The four
-      // subspace passes share q78's bounded scale shape (driver state =
-      // k×subdim centroids each); the code tables are one-row-per-id and
-      // equi-join on vec_id — a co-partitioned shuffle join at scale.
-      val e = t(s, dir, "embeddings")
-      // the four subspace Lloyd chains are independent — fit them on
-      // concurrent driver threads (Spark's scheduler is thread-safe; the
-      // per-fit driver state is its own k×16 matrix), ~3x on wall time
-      val subs = Await.result(Future.sequence((0 until 4).map { m => Future {
-        graft.operators.KMeansOp.kmeans(
-            e, col("vec_id"), slice(col("embedding"), m * 16 + 1, 16),
-            k = 4, iters = 2)
-          .select(col("id").as("vec_id"), col("cluster").as(s"code$m"),
-            col("sq_dist").as(s"_e$m"))
-      }}), Duration.Inf)
-      subs.reduce(_.join(_, "vec_id"))
-        .select(col("vec_id"), col("code0"), col("code1"), col("code2"), col("code3"),
-          round(col("_e0") + col("_e1") + col("_e2") + col("_e3"), 4).as("pq_err"))
+      // 4 orthogonal 16-dim subspaces, each learns its own k=4 codebook,
+      // and every vector is stored as 4 sub-codes plus its total
+      // quantization error. The four codebooks come from ONE Lloyd loop
+      // (KMeansOp.fitViews: each is bit-identical to its own fit, driver
+      // state = 4 k×16 matrices), and every code and error is an argmin of
+      // the same row's vector, so the code table is one row-local
+      // projection (q114's encoding) — no per-subspace join on vec_id.
+      val (fits, base) = graft.operators.KMeansOp.fitViews(t(s, dir, "embeddings"),
+        col("vec_id"), col("embedding"), graft.operators.KMeansOp.subspaces(4, 16, k = 4), iters = 2)
+      val subs = (0 until 4).map { m =>
+        val v = slice(col("v"), m * 16 + 1, 16)
+        val (cl, sc) = graft.operators.KMeansOp.argmin(v, fits(m))
+        (cl.cast("long").as(s"code$m"), round(graft.functions.VectorExprs.dot(v, v) + sc, 4))
+      }
+      base.select(col("id").as("vec_id") +: subs.map(_._1) :+
+        round(subs.map(_._2).reduce(_ + _), 4).as("pq_err"): _*)
     }),
 
     "q136_quantile_calibrate" -> ((s, dir) => {

@@ -1,9 +1,6 @@
 package graft.queries
 
 import scala.collection.immutable.ListMap
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration.Duration
-import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -102,24 +99,7 @@ private[graft] object RetrievalQueries extends QueryBook {
       // rounded score, the dense pool is AnnIndex.query's ADC top-50 over
       // 2 probed cells, and the fusion is q273's RRF arithmetic on the
       // two bounded pools (triangular rank join — zero-window posture).
-      val tag = new java.io.File(dir).getName
-      val lexDir = s"target/hybrid_lex/$tag"
-      val annDir = s"target/hybrid_ann/$tag"
-      val emb = t(s, dir, "embeddings")
-      // The two artifact builds read DIFFERENT tables into DIFFERENT dirs
-      // and the probe-vector head() is a bounded input read — all three
-      // are independent, so they overlap (round 18, guide §2.6: each
-      // build is a serial chain of driver-latency-bound commits whose
-      // tails leave the cluster idle).
-      val lexB = Future(graft.operators.LexIndex.build(
-        t(s, dir, "documents"), col("doc_id"), col("text"), lexDir))
-      val annB = Future(graft.operators.AnnIndex.build(
-        emb, col("vec_id"), col("embedding"), annDir))
-      val qvF = Future(emb.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0))
-      Await.result(lexB, Duration.Inf)
-      Await.result(annB, Duration.Inf)
-      val qv = Await.result(qvF, Duration.Inf)
+      val (lexDir, annDir, qvs) = hybridArtifacts(s, dir, "", 1)
       val sp = s
       import sp.implicits._
       val kPool = 50
@@ -131,7 +111,7 @@ private[graft] object RetrievalQueries extends QueryBook {
           k = kPool)
         .select(col("doc_id"), col("rnk").as("lex_rank"))
       val dense = graft.operators.AnnIndex.query(s, annDir,
-          Seq((0L, qv)).toDF("query_id", "qv"), k = kPool, nProbe = 2)
+          qvs.toDF("query_id", "qv"), k = kPool, nProbe = 2)
         .select(col("corpus_id").as("doc_id"), col("rnk").as("dense_rank"))
       lex.join(dense, Seq("doc_id"), "full_outer")
         .select(col("doc_id"),
@@ -156,22 +136,7 @@ private[graft] object RetrievalQueries extends QueryBook {
       // answer path never scans documents or embeddings. At 100 TB this
       // is the retrieval service's nightly batch: thousands of queries,
       // two artifact passes, zero corpus passes.
-      val tag = new java.io.File(dir).getName
-      val lexDir = s"target/hybrid_lexq/$tag"
-      val annDir = s"target/hybrid_annq/$tag"
-      val emb = t(s, dir, "embeddings")
-      // Independent build chains + bounded query-vector collect overlap
-      // (round 18, guide §2.6 — same rationale as q348 above).
-      val lexB = Future(graft.operators.LexIndex.build(
-        t(s, dir, "documents"), col("doc_id"), col("text"), lexDir))
-      val annB = Future(graft.operators.AnnIndex.build(
-        emb, col("vec_id"), col("embedding"), annDir))
-      val qvsF = Future(emb.where(col("vec_id") < 8)
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq)
-      Await.result(lexB, Duration.Inf)
-      Await.result(annB, Duration.Inf)
-      val qvs = Await.result(qvsF, Duration.Inf)
+      val (lexDir, annDir, qvs) = hybridArtifacts(s, dir, "q", 8)
       val sp = s
       import sp.implicits._
       val kPool = 50
@@ -754,6 +719,28 @@ private[graft] object RetrievalQueries extends QueryBook {
       (i.toLong, Seq(manyQueryPool(i % 16), manyQueryPool((i / 2 + 3) % 16),
         manyQueryPool((i * 5 + 1) % 16)).distinct)
     }
+
+  /** The q348/q352 setup: build the BM25 index of `documents` under
+    * `target/hybrid_lex<tag>/<fixture>` and the IVFADC index of
+    * `embeddings` under `target/hybrid_ann<tag>/<fixture>`, and fetch the
+    * query vectors `vec_id < nq` as (query_id, qv) — the bounded query
+    * INPUT. The three are independent; each build is a chain of
+    * driver-latency-bound commits, so they overlap. */
+  private def hybridArtifacts(s: SparkSession, dir: String, tag: String,
+      nq: Int): (String, String, Seq[(Long, Seq[Double])]) = {
+    val fixture = new java.io.File(dir).getName
+    val (lexDir, annDir) = (s"target/hybrid_lex$tag/$fixture", s"target/hybrid_ann$tag/$fixture")
+    val emb = t(s, dir, "embeddings")
+    var qvs = Seq.empty[(Long, Seq[Double])]
+    graft.GraftSession.concurrently(s)(
+      () => graft.operators.LexIndex.build(
+        t(s, dir, "documents"), col("doc_id"), col("text"), lexDir),
+      () => graft.operators.AnnIndex.build(emb, col("vec_id"), col("embedding"), annDir),
+      () => qvs = emb.where(col("vec_id") < nq)
+        .select(col("vec_id"), col("embedding").cast("array<double>"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq)
+    (lexDir, annDir, qvs)
+  }
 
   /** Shared q52/q344 twin: BM25 from first principles over the same
     * tokenize chain — q344's stored-artifact round trip must reproduce

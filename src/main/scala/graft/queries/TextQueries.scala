@@ -856,7 +856,7 @@ private[graft] object TextQueries extends QueryBook {
       // bounded vocab + a one-row argmax collect; the corpus only flows
       // through the initial word count (BpeTrain scaladoc).
       val merges = graft.operators.BpeTrain.trainMerges(
-        graft.operators.BpeTrain.wordVocab(t(s, dir, "documents"), col("text"), 500), 20)
+        graft.operators.BpeTrain.wordVocab(t(s, dir, "documents"), col("text"), 20, 500), 20)
       val sp = s
       import sp.implicits._
       merges.zipWithIndex.map { case ((l, r2, c), i) =>
@@ -873,7 +873,7 @@ private[graft] object TextQueries extends QueryBook {
       // final display divisions.
       val docs = t(s, dir, "documents")
       val merges = graft.operators.BpeTrain.trainMerges(
-        graft.operators.BpeTrain.wordVocab(docs, col("text"), 500), 20)
+        graft.operators.BpeTrain.wordVocab(docs, col("text"), 20, 500), 20)
       val allWords = docs
         .select(explode(split(lower(TextExprs.cleanText(col("text"))), " ")).as("word"))
         .where(col("word").rlike("^[a-z]{2,20}$"))
@@ -924,7 +924,7 @@ private[graft] object TextQueries extends QueryBook {
       // flatMap+agg over the bounded vocab; only the word count sees the
       // corpus.
       val trained = graft.operators.UnigramLm.train(
-        graft.operators.UnigramLm.wordVocab(t(s, dir, "documents"), col("text"), 300),
+        graft.operators.BpeTrain.wordVocab(t(s, dir, "documents"), col("text"), 12, 300),
         maxPieceLen = 4, topSubs = 60, rounds = 3)
       val sp = s
       import sp.implicits._
@@ -941,7 +941,7 @@ private[graft] object TextQueries extends QueryBook {
       // the twin replays the same fallback via its left join.
       val docs = t(s, dir, "documents")
       val trained = graft.operators.UnigramLm.train(
-        graft.operators.UnigramLm.wordVocab(docs, col("text"), 300),
+        graft.operators.BpeTrain.wordVocab(docs, col("text"), 12, 300),
         maxPieceLen = 4, topSubs = 60, rounds = 3)
       val costs = trained.map(p => p._1 -> p._3).toMap
       val allWords = docs

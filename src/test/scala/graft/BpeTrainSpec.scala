@@ -49,7 +49,7 @@ class BpeTrainSpec extends SparkSpec {
     import sp.implicits._
     val docs = Seq((1L, "the the the cat CAT x 42 supercalifragilisticexpialidocious"))
       .toDF("doc_id", "text")
-    val w = BpeTrain.wordVocab(docs, col("text"), 2).collect()
+    val w = BpeTrain.wordVocab(docs, col("text"), 20, 2).collect()
       .map(r => r.getString(0) -> r.getLong(1))
     // 'x' (1 char), '42', and the 34-char word are filtered; lower() folds CAT
     assert(w.toSeq === Seq("the" -> 3L, "cat" -> 2L))

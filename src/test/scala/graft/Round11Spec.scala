@@ -121,15 +121,12 @@ class Round11Spec extends SparkSpec {
     assert(!p.contains("Aggregate"),
       s"query side must run ZERO Lloyd iterations (no aggregate stages):\n${p.take(1000)}")
     // the only embeddings read is the 8-row QUERY fixture (vec_id < 8
-    // pushed down); the corpus side must come from the stored codes
-    // the probe branch scans embeddings once (vec_id < 8 pushed down); a
-    // second occurrence in the STRING is the dynamic-pruning subquery's
-    // printed duplicate of that branch (SubqueryAdaptiveBroadcast with
-    // reuse=true — it consumes the probe broadcast at runtime, it does
-    // not re-scan)
-    val embScans = "embeddings.parquet".r.findAllIn(p).length
-    assert(embScans <= 2 && p.contains("LessThan(vec_id,8)"),
-      s"expected the bounded query-vector scan (+DPP print), got $embScans embeddings scans")
+    // pushed down); the corpus side must come from the stored codes.
+    // PlanInspect reads 2: the probe branch, and the same branch under the
+    // dynamic-pruning SubqueryAdaptiveBroadcast that reuses its broadcast
+    val embScans = PlanInspect(df).scansOf("embeddings")
+    assert(embScans === 2 && p.contains("LessThan(vec_id,8)"),
+      s"expected only the bounded query-vector scan, got $embScans embeddings scans")
     assert(p.contains("ann_index"), "corpus side must scan the stored artifact")
     // scale orientation: the 100 TB codes artifact STREAMS while the
     // bounded probe set broadcasts, and the probe's cells dynamically

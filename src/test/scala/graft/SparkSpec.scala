@@ -49,7 +49,7 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  private def isMarker(e: SparkListenerJobStart): Boolean =
+  protected def isMarker(e: SparkListenerJobStart): Boolean =
     Option(e.properties).exists(_.getProperty(MarkerKey) != null)
 
   /** Spark jobs `body` launches (the suites run one at a time, so every
